@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import graft.canon.Canon
 import graft.extract.Extract
 import graft.materialize.Materialize
 import graft.mentions.Mentions
-import graft.model.Gazetteer
+import graft.model.{Gazetteer, Mention, Page}
 import graft.relations.Relations
 import graft.sources.Pages
 import graft.streaming.{Recanon, Streaming}
@@ -26,10 +27,15 @@ import graft.streaming.{Recanon, Streaming}
   * }}}
   *
   * Subcommands wire the lambda architecture end to end:
-  *  - `batch`: pages table → mentions → canonical map → co-occurrence +
-  *    provenance triples, materialized bucket-partitioned with lineage
-  *    resume ([[Materialize.writeTriples]]); `--canon-out` also writes the
-  *    alias table the stream job consumes as its snapshot.
+  *  - `batch`: pages table → mentions (cached once, tagged with their sink
+  *    bucket) → canonical map → co-occurrence + provenance triples in one
+  *    fused pass ([[Relations.triplesContiguous]]) over mentions clustered
+  *    by the sink's own bucket exchange and sorted by (url, page, seg_no),
+  *    committed bucket-partitioned with lineage resume
+  *    ([[Materialize.commitBuckets]]); `--canon-out` also writes the alias
+  *    table the stream job consumes as its snapshot. Past
+  *    [[Canon.SnapshotMaxRows]] surfaces the alias map stays a DataFrame
+  *    and the triples take the join form ([[Materialize.writeTriples]]).
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
@@ -163,25 +169,62 @@ object Submit {
       case other   => throw new IllegalArgumentException(s"unknown --bucket-by '$other' (hash|docid)")
     }
 
-  /** The batch flagship over an explicit page table: ONE cached mention
-    * scan feeds both triple families and the canonical map (the same memo
-    * discipline Pipeline uses, scoped to this invocation). */
   private def runBatch(spark: SparkSession, opts: Map[String, String]): Unit = {
-    val gaz = gazetteerOf(spark, opts)
     val nBuckets = opts.getOrElse("buckets", "16").toInt
-    val ms = Mentions.scanWithRecall(
-      Extract.segments(Pages.fromParquet(spark, req(opts, "input"))), gaz).cache()
+    val rows = batch(Pages.fromParquet(spark, req(opts, "input")), gazetteerOf(spark, opts),
+      req(opts, "output"), nBuckets, opts.getOrElse("batch-id", "0").toLong,
+      bucketSchemeOf(opts), opts.get("canon-out"))
+    println(s"[submit] batch: wrote ${rows.map(_.n_rows).sum} triples " +
+      s"across ${rows.size} new buckets (${nBuckets - rows.size} resumed)")
+  }
+
+  /** The batch flagship over an explicit page table (the `batch`
+    * subcommand as a function). ONE cached mention scan, tagged with each
+    * row's sink bucket, feeds the canonical map and the triples. With an
+    * alias map at most `maxRows` surfaces ([[Canon.snapshotBounded]]), the
+    * pending buckets' mentions go through one exchange on the bucket
+    * column — `p` = the session's shuffle parallelism capped at
+    * `nBuckets`, an explicit count AQE does not coalesce — and a
+    * per-partition sort on (url, page, seg_no). A bucket is a function of
+    * the url, so every url (a re-crawled one included) becomes one sorted
+    * run in one partition: exactly the contiguity
+    * [[Relations.triplesContiguous]] requires, and its per-segment distinct
+    * and per-url provenance dedup then equal `cooccurrence`'s collect_set
+    * and `mentionedIn`'s distinct. The fused triples are written straight
+    * into their bucket partitions with no second exchange. Above `maxRows`
+    * the map stays a DataFrame and the triples take the join form.
+    * Returns the lineage rows this call committed.
+    */
+  def batch(pages: Dataset[Page], gazetteer: Array[(String, String)], output: String,
+      nBuckets: Int, batchId: Long, bucketOf: Int => Column, canonOut: Option[String],
+      maxRows: Long = Canon.SnapshotMaxRows): Seq[Materialize.LineageRow] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val tagged = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).toDF()
+      .withColumn("bucket", bucketOf(nBuckets)).cache()
     try {
+      val ms = tagged.as[Mention]
       val canon = Canon.canonicalMap(ms)
-      opts.get("canon-out").foreach(p => canon.write.mode("overwrite").parquet(p))
-      val triples = Relations.cooccurrence(ms)
-        .unionByName(Relations.mentionedIn(ms, canon))
-      val rows = Materialize.writeTriples(triples, req(opts, "output"),
-        nBuckets = nBuckets, batchId = opts.getOrElse("batch-id", "0").toLong,
-        bucketOf = bucketSchemeOf(opts))
-      println(s"[submit] batch: wrote ${rows.map(_.n_rows).sum} triples " +
-        s"across ${rows.size} new buckets (${nBuckets - rows.size} resumed)")
-    } finally ms.unpersist()
+      Canon.snapshotBounded(canon, maxRows) match {
+        case Canon.AliasMap(m, _) =>
+          canonOut.foreach(dir => m.toSeq.toDF("surface", "canonical")
+            .write.mode("overwrite").parquet(dir))
+          val done = Materialize.doneBuckets(spark, output, "triples")
+          val p = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, nBuckets)
+          val clustered = tagged.filter(!col("bucket").isin(done.toSeq: _*))
+            .repartition(p, col("bucket"))
+            .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
+            .as[Mention]
+          Materialize.commitBuckets(
+            Relations.triplesContiguous(clustered, m).withColumn("bucket", bucketOf(nBuckets)),
+            output, "triples", nBuckets, batchId)
+        case _ =>
+          canonOut.foreach(dir => canon.write.mode("overwrite").parquet(dir))
+          Materialize.writeTriples(
+            Relations.cooccurrence(ms).unionByName(Relations.mentionedIn(ms, canon)),
+            output, nBuckets = nBuckets, batchId = batchId, bucketOf = bucketOf)
+      }
+    } finally tagged.unpersist()
   }
 
   private def runStream(spark: SparkSession, opts: Map[String, String]): Unit = {

@@ -596,16 +596,17 @@ object Canon {
     */
   final case class CanonRefresh(state: CanonState, fellBack: Boolean)
 
-  /** Full canon job, returning the carry-forward [[CanonState]]. Runs from
-    * whatever `mentions` plan the caller hands in — callers that take
-    * multiple actions over the result (e.g. `Submit refresh` writing both
-    * state tables) should cut the mention scan first
-    * (`GraftSqlShims.localCheckpointFreshLazy`), as
-    * [[canonicalMapIncremental]] does on `merged`.
+  /** Full canon job, returning the carry-forward [[CanonState]]. The
+    * dimension-sized stats are cut once (`GraftSqlShims.localCheckpointFreshLazy`,
+    * as [[canonicalMapIncremental]] does on `merged`): blocking, edge
+    * verification, the CC vertex set and the pick all read them, and
+    * without the cut each consumer re-aggregates the corpus-sized mention
+    * table. The cut materializes at the first consumer action.
     */
   def canonicalState(mentions: Dataset[Mention],
       maxBlock: Long = Config.MaxTokenBlock): CanonState = {
-    val stats = surfaceStats(mentions)
+    val stats = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy(
+      surfaceStats(mentions))
     val comps = connectedComponents(stats.select("surface"),
       similarityEdges(stats, maxBlock))
     CanonState(stats, canonicalPick(stats, comps))
@@ -757,21 +758,23 @@ object Canon {
     */
   val SnapshotMaxRows = 5000000L
 
-  /** [[snapshot]] gated on the canon map's row count (one small aggregate
-    * over the dimension table, paid once per periodic batch refresh):
-    * at/below `maxRows` collect the driver map, above it keep the DataFrame.
+  /** [[snapshot]] gated on the canon map's row count, in ONE action:
+    * collect `(surface, canonical, xxhash64(surface, canonical))` under a
+    * `maxRows + 1` limit. At most `maxRows` rows came back ⇒ that is the
+    * whole map: the driver map plus its fingerprint, summed here with the
+    * same wrapping mod-2⁶⁴ arithmetic as [[aliasFingerprint]]. One row more
+    * ⇒ keep the DataFrame, fingerprinted by a Spark aggregate.
     */
   def snapshotBounded(canonMap: DataFrame,
       maxRows: Long = SnapshotMaxRows): AliasSnapshot = {
-    // ONE aggregate pins both the gate count and the watermark fingerprint
-    // — not two full passes over an uncached multi-million-row dimension.
-    val r = canonMap.agg(count(lit(1)),
-      sum(xxhash64(col("surface"), col("canonical"))
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head
-    val n = r.getLong(0)
-    val fp = Some(if (r.isNullAt(1)) 0L else r.getDecimal(1).toBigInteger.longValue())
-    if (n <= maxRows) AliasMap(snapshot(canonMap), fp)
-    else AliasFrame(canonMap, fp)
+    require(maxRows >= 0 && maxRows < Int.MaxValue, s"maxRows out of range: $maxRows")
+    val rows = canonMap
+      .select(col("surface"), col("canonical"), xxhash64(col("surface"), col("canonical")))
+      .limit(maxRows.toInt + 1).collect()
+    if (rows.length <= maxRows)
+      AliasMap(rows.iterator.map(r => r.getString(0) -> r.getString(1)).toMap,
+        Some(rows.iterator.map(_.getLong(2)).sum))
+    else AliasFrame(canonMap, Some(aliasFingerprint(canonMap)))
   }
 
   /** Order-independent content fingerprint of an alias map: the wrapping

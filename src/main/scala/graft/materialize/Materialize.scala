@@ -178,17 +178,6 @@ object Materialize {
       .select(col("bucket")).as[Int].collect().toSet
   }
 
-  /** Materialize `triples` into `outDir/<table>` partitioned by bucket,
-    * skipping buckets recorded in the lineage table (resume semantics).
-    * Returns the per-bucket row counts written this invocation.
-    *
-    * Scale shape: ONE job writes all pending buckets (partitionBy on the
-    * bucket column — no per-bucket driver loop, which at 10^12 docs would be
-    * thousands of sequential jobs); the bucket column is derived, so the
-    * write is narrow on top of the triple pipeline. Row counts per bucket
-    * come from `observe`-style aggregation of the written data, one extra
-    * columnar count over the (already shuffled) output.
-    */
   /** The nBuckets conditional-sum aggregate columns that ride a write job
     * via observe() — shared by the batch and streaming sinks so the bucket
     * accounting cannot diverge between them. */
@@ -206,27 +195,47 @@ object Materialize {
       }
     }
 
+  /** Materialize `triples` into `outDir/<table>` partitioned by bucket,
+    * skipping buckets recorded in the lineage table (resume semantics).
+    * Returns the per-bucket row counts written this invocation.
+    *
+    * Scale shape: ONE job writes all pending buckets (partitionBy on the
+    * bucket column — no per-bucket driver loop, which at 10^12 docs would be
+    * thousands of sequential jobs); the bucket column is derived, so the
+    * write is narrow on top of the triple pipeline. Row counts per bucket
+    * ride the write job ([[commitBuckets]]).
+    */
   def writeTriples(triples: Dataset[Triple], outDir: String, table: String = "triples",
       nBuckets: Int = 16, batchId: Long = 0L,
       bucketOf: Int => org.apache.spark.sql.Column = bucketCol): Seq[LineageRow] = {
     val spark = triples.sparkSession
-    import spark.implicits._
     val done = doneBuckets(spark, outDir, table)
     val pending = triples.toDF()
       .withColumn("bucket", bucketOf(nBuckets))
       .filter(!col("bucket").isin(done.toSeq: _*))
-    // ONE action: the per-bucket lineage counts ride the write job itself
-    // via observe() (nBuckets conditional sums, map-side combinable), so the
-    // pending pipeline never runs twice and the recorded counts can never
-    // drift from the written rows.
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = bucketAggs(nBuckets)
     // repartition by the partition column before the dynamic write: one file
     // per bucket instead of (tasks × buckets) small files — the standard
     // dynamic-partition-write shape (at real scale add a second key to fan
     // each bucket over several files)
+    commitBuckets(pending.repartition(col("bucket")), outDir, table, nBuckets, batchId)
+  }
+
+  /** The bucket commit shared by every batch writer: append `pending` (rows
+    * carrying their `bucket` column, already laid out the way the caller
+    * wants its files) under `outDir/<table>` partitioned by bucket, then
+    * append one lineage row per bucket that received rows. ONE action: the
+    * per-bucket counts ride the write job itself via observe() (nBuckets
+    * conditional sums, map-side combinable), so the pending pipeline never
+    * runs twice and the recorded counts can never drift from the written
+    * rows. Returns the lineage rows appended.
+    */
+  def commitBuckets(pending: DataFrame, outDir: String, table: String,
+      nBuckets: Int, batchId: Long): Seq[LineageRow] = {
+    val spark = pending.sparkSession
+    import spark.implicits._
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = bucketAggs(nBuckets)
     pending.observe(obs, aggs.head, aggs.tail: _*)
-      .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(s"$outDir/$table")
     val rows = bucketCounts(obs.get, nBuckets)
       .map { case (b, n) => LineageRow(table, b, batchId, n) }

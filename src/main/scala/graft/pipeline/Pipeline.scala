@@ -12,12 +12,14 @@ import graft.relations.Relations
 /** The flagship Dataset[Page] → Dataset[Triple] flow (SURVEY §7.1):
   *
   *   pages → segments → mentions (broadcast automaton, narrow)
-  *         → co-occurrence triples (shuffle on segment keys)
   *         → canonicalization (dimension-sized self-join + CC)
-  *         → provenance triples (broadcast alias map)
+  *         → co-occurrence + provenance triples in one fused pass over the
+  *           url-contiguous mentions (broadcast alias map, no shuffle; an
+  *           alias map too big for the driver keeps the join + distinct)
   *
-  * Shuffle frontiers: mention groupBy, ER band join, CC iterations — the
-  * big-data path (pages → segments → mentions) is narrow end to end.
+  * Shuffle frontiers: surface-stats aggregate, ER band join, CC iterations
+  * — the big-data path (pages → segments → mentions → triples) is narrow
+  * end to end.
   */
 object Pipeline {
 
@@ -92,24 +94,6 @@ object Pipeline {
   def triples(spark: SparkSession, sfDir: String): Dataset[Triple] = {
     val ms = mentionsCached(spark, sfDir)
     val canonDf = canonCached(spark, sfDir)
-    Canon.snapshotBounded(canonDf) match {
-      case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-      case _ => Relations.cooccurrenceContiguous(ms)
-        .unionByName(Relations.mentionedIn(ms, canonDf))
-    }
-  }
-
-  /** Bench-only flagship over an amplified corpus (factor deterministic
-    * copies of every page, distinct urls): at the sandbox SFs the raw corpus
-    * is KBs per partition and driver fixed costs dominate, which would make
-    * any parallelism measurement meaningless; amplification restores a
-    * data-proportional extract→scan→shuffle profile. No memoization — this
-    * path must pay full cost every run.
-    */
-  def triplesAmplified(spark: SparkSession, sfDir: String, factor: Int): Dataset[Triple] = {
-    val pages = Pages.synthesizeAmplified(spark, sfDir, factor)
-    val ms = Mentions.scanWithRecall(Extract.segments(pages), Gazetteer.all.toArray).cache()
-    val canonDf = Canon.canonicalMap(ms)
     Canon.snapshotBounded(canonDf) match {
       case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
       case _ => Relations.cooccurrenceContiguous(ms)

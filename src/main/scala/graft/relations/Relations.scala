@@ -65,10 +65,15 @@ object Relations {
     * intra-partition contiguity violation (e.g. a shuffled or re-sorted
     * mention table) into a LOUD error, never silently wrong triples. A
     * pathological repartition that splits one segment's rows ACROSS
-    * partitions without intra-partition repeats is not detectable here and
-    * remains the caller's contract — callers in this repo all consume the
-    * scan output directly, and RelationsSpec pins equality with
-    * [[cooccurrence]] on the live corpus.
+    * partitions without intra-partition repeats is not detectable here, so
+    * callers establish contiguity by construction: [[graft.Submit]]'s
+    * `batch` clusters its mentions with one exchange on the sink bucket (a
+    * function of url) and sorts each partition by (url, page, seg_no),
+    * which also merges a re-crawled url's rows into one run; the
+    * [[graft.pipeline.Pipeline]] flagship reads the scan output, where a
+    * page's mentions come from one flatMap element and the memo re-clusters
+    * by url. RelationsSpec pins equality with [[cooccurrence]] on the live
+    * corpus.
     */
   def cooccurrenceContiguous(mentions: Dataset[Mention]): Dataset[Triple] = {
     val spark = mentions.sparkSession
@@ -230,7 +235,10 @@ object Relations {
     * while reading the (cached) mention table ONCE instead of twice — in
     * the flagship that halves the post-scan passes. Same loud contiguity
     * guards: a url OR a segment key reappearing after its run closed
-    * throws, never silently duplicates triples.
+    * throws, never silently duplicates triples. A url split ACROSS
+    * partitions is not detectable here; the callers' clustering that rules
+    * it out is described at [[cooccurrenceContiguous]] (`Submit batch`
+    * enforces it with its bucket exchange and per-partition sort).
     */
   def triplesContiguous(mentions: Dataset[Mention],
       canon: Map[String, String]): Dataset[Triple] = {

@@ -36,7 +36,7 @@ class MaterializeSpec extends SparkSpec {
     // metadata write is coalesced — not one row per task), so resume
     // lookups read a file per completed batch, not per row
     val parts = new java.io.File(Materialize.lineagePath(dir)).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     assert(parts.length == 2, s"expected 2 lineage part files, got ${parts.length}")
   }
 

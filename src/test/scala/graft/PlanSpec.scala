@@ -65,6 +65,52 @@ class PlanSpec extends SparkSpec {
       "co-occurrence pairs shuffle at most once (segment keys)")
   }
 
+  test("Submit batch's triple write: one shuffle exchange above the mention cache, no aggregate, no broadcast") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val dir = graft.util.TempDirs.scratch("graft-plan-batch").toString
+    Pages.synthesize(spark, sfTiny).write.parquet(s"$dir/pages")
+    // AdaptiveSparkPlanHelper walks into AQE plans and stages and stops at
+    // a cache scan, so what it collects from a write's executed plan lies
+    // between the mention cache and the writer.
+    val h = new AdaptiveSparkPlanHelper {}
+    // The executed plan of every write into the sink's triples table.
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (h.collect(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd
+        }.exists {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName == "triples"
+          case _ => false
+        }) writes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Submit.run(spark, Array("batch", "--input", s"$dir/pages", "--output", s"$dir/sink"))
+      // listener events arrive asynchronously on the listener bus
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one triple write, saw ${writes.size}")
+    val plan = writes.peek()
+    val plain = plan.treeString
+    assert(h.collect(plan) { case c: InMemoryTableScanExec => c }.nonEmpty,
+      s"the triples must read the mention cache:\n$plain")
+    assert(h.collect(plan) { case e: ShuffleExchangeLike => e }.size == 1,
+      s"exactly one shuffle exchange (the bucket clustering):\n$plain")
+    assert(h.collect(plan) { case a: BaseAggregateExec => a }.isEmpty,
+      s"no collect_set or distinct aggregate:\n$plain")
+    assert(h.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
+      s"no broadcast exchange:\n$plain")
+  }
+
   test("the ANN brute baseline is the only broadcast nested loop") {
     val bnl = "BroadcastNestedLoopJoin"
     val topk = graft.similarity.Ann.bruteTopK(

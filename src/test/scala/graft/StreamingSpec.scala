@@ -243,6 +243,19 @@ class StreamingSpec extends SparkSpec {
       .as[graft.model.Triple].collect()) == grouped(batch.collect()))
   }
 
+  test("snapshotBounded carries aliasFingerprint on both shapes; the gate admits exactly maxRows") {
+    import graft.canon.Canon
+    val (_, _, canon) = flagshipFixture
+    val canonDf = canon.toSeq.toDF("surface", "canonical")
+    val (n, fp) = (canon.size.toLong, Canon.aliasFingerprint(canonDf))
+    assert(Canon.snapshotBounded(canonDf).fp == Some(fp))
+    // at the gate: the whole map fits, collected in the same action
+    assert(Canon.snapshotBounded(canonDf, maxRows = n) == Canon.AliasMap(canon, Some(fp)))
+    // one row over: the DataFrame shape, same fingerprint
+    val over = Canon.snapshotBounded(canonDf, maxRows = n - 1)
+    assert(over.isInstanceOf[Canon.AliasFrame] && over.fp == Some(fp))
+  }
+
   test("alias-version watermark: a snapshot-versioned drain makes same-map compaction metadata-only") {
     import graft.streaming.Recanon
     val (pages, batch, canon) = flagshipFixture

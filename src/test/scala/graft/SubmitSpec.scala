@@ -50,6 +50,68 @@ class SubmitSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/_lineage").count() == lineageRowsBefore)
   }
 
+  /** The page table plus a second file re-crawling every 4th url: a later
+    * warc_ts and the same <p> layout (so the same (page, seg_no)
+    * numbering), but every planted PERSON swapped for another one. */
+  private lazy val recrawlDir: String = {
+    import graft.model.{Gazetteer, Page}
+    val dir = scratch("graft-submit-recrawl") + "/pages"
+    val pages = spark.read.parquet(pagesDir).as[Page]
+    pages.write.parquet(dir)
+    val persons = Gazetteer.persons
+    val next = persons.indices.map(i => persons(i) -> persons((i + 7) % persons.length)).toMap
+    val re = persons.sortBy(-_.length).map(java.util.regex.Pattern.quote).mkString("|").r
+    def swap(s: String) =
+      re.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(next(m.matched)))
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    pages.filter(pmod(xxhash64(col("url")), lit(4)) === 0).collect().toSeq
+      .map(p => p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L),
+        html = swap(new String(p.html, utf8)).getBytes(utf8), text = swap(p.text)))
+      .toDS().coalesce(1).write.mode("append").parquet(dir)
+    dir
+  }
+
+  /** `cooccurrence ∪ mentionedIn` and `canonicalMap` over a page table:
+    * the join forms, exact for repeated urls by their own shuffles. */
+  private def joinReference(pages: String): ((Long, Long), Long) = {
+    import graft.relations.Relations
+    val ms = graft.mentions.Mentions.scanWithRecall(
+      graft.extract.Extract.segments(graft.sources.Pages.fromParquet(spark, pages)),
+      graft.model.Gazetteer.all.toArray).cache()
+    try {
+      val canon = graft.canon.Canon.canonicalMap(ms)
+      (Pipeline.tripleChecksum(Relations.cooccurrence(ms)
+        .unionByName(Relations.mentionedIn(ms, canon)).toDF()),
+        graft.canon.Canon.aliasFingerprint(canon))
+    } finally ms.unpersist()
+  }
+
+  test("re-crawled urls: batch equals cooccurrence ∪ mentionedIn and canonicalMap, on both bucket schemes and both alias shapes") {
+    import graft.canon.Canon
+    val recrawled = spark.read.parquet(recrawlDir).groupBy("url").count()
+      .filter(col("count") > 1).count()
+    assert(recrawled > 0, "the table must repeat some urls")
+    val (triples, alias) = joinReference(recrawlDir)
+    assert(triples != batchChecksum, "the re-crawl must change the triples")
+    def check(out: String, what: String): Unit = {
+      assert(sinkChecksum(s"$out/sink") == triples, what)
+      assert(Canon.aliasFingerprint(spark.read.parquet(s"$out/alias")) == alias, what)
+    }
+    Seq("hash", "docid").foreach { scheme =>
+      val out = scratch(s"graft-submit-recrawl-$scheme")
+      Submit.run(spark, Array("batch", "--input", recrawlDir, "--output", s"$out/sink",
+        "--canon-out", s"$out/alias", "--bucket-by", scheme))
+      check(out, s"--bucket-by $scheme")
+    }
+    // maxRows = 0 keeps the alias map a DataFrame: the join-form branch
+    val out = scratch("graft-submit-recrawl-frame")
+    Submit.batch(graft.sources.Pages.fromParquet(spark, recrawlDir),
+      graft.model.Gazetteer.all.toArray, s"$out/sink", nBuckets = 16, batchId = 0L,
+      bucketOf = graft.materialize.Materialize.hashBucketCol,
+      canonOut = Some(s"$out/alias"), maxRows = 0)
+    check(out, "AliasFrame branch")
+  }
+
   test("lambda wiring: batch --canon-out feeds stream --canon; stream sink equals the batch flagship") {
     val out = scratch("graft-submit-lambda")
     Submit.run(spark, Array("batch", "--input", pagesDir,
