@@ -46,15 +46,20 @@ import graft.streaming.{Recanon, Streaming}
   *    schedule = incremental ingest); `--trigger-ms` keeps it running.
   *  - `refresh`: the periodic batch canon job in its incremental form —
   *    fold a DELTA page table's mentions into the carried canon state
-  *    persisted under `--state` ([[Canon.canonicalMapIncremental]]: edge
+  *    persisted under `--state` ([[Canon.canonicalMapIncremental]]: one
+  *    flagged merge of the carried stats with the delta's mentions, one
+  *    token table serving the cap-crossing gate and the blocking, edge
   *    generation proportional to the delta, exact vs the full job, with
-  *    the cap-crossing gate falling back to the full recompute). The
-  *    first invocation (no complete version yet) runs the full job. State
-  *    versions are `v<N>/{stats,alias}` parquet dirs published by a
-  *    `_DONE` flag — a crash mid-write leaves an unflagged dir the next
-  *    refresh ignores and reclaims. The input is a delta BY CONTRACT
-  *    (pages not already folded into the carried state), exactly like the
-  *    stream feed's at-most-once placement.
+  *    the gate falling back to the full recompute). The first invocation
+  *    (no complete version yet) runs the full job. State versions are
+  *    `v<N>/{stats,alias}` parquet dirs, read back with their declared
+  *    schemas ([[Canon.StatsSchema]], [[Canon.AliasSchema]]), written
+  *    concurrently and published by a `_DONE` flag — a crash mid-write
+  *    leaves an unflagged dir the next refresh ignores and reclaims. The
+  *    summary line's surface count is observed on the alias write. The
+  *    input is a delta BY CONTRACT (pages not already folded into the
+  *    carried state), exactly like the stream feed's at-most-once
+  *    placement.
   *  - `dedup`: fold a delta documents batch `(doc_id, text)` into the
   *    carried exact-dedup fingerprint index (same `_DONE` version
   *    discipline as `refresh`); each version materializes the merged
@@ -266,17 +271,17 @@ object Submit {
     * `compact --canon` consumption. */
   private def runRefresh(spark: SparkSession, opts: Map[String, String]): Unit = {
     import graft.util.SinkFs
-    import spark.implicits._
+    import org.apache.spark.sql.functions.{count, lit}
     val state = req(opts, "state")
-    // Cut the delta mention scan once: the full/fallback branches take
-    // several actions over plans rooted here (stats write, alias write, CC
-    // checkpoints) — without the cut each re-runs the recall scan.
-    val ms = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy(
-      Mentions.scanWithRecall(
-        Extract.segments(Pages.fromParquet(spark, req(opts, "input"))),
-        gazetteerOf(spark, opts)).toDF)
-      .as[graft.model.Mention]
+    // Both canon paths consume the mentions once, into their checkpointed
+    // stats, so the scan needs no cut of its own.
+    val ms = Mentions.scanWithRecall(
+      Extract.segments(Pages.fromParquet(spark, req(opts, "input"))),
+      gazetteerOf(spark, opts))
     def done(v: Int): Boolean = SinkFs.exists(spark, s"$state/v$v/_DONE")
+    // The state tables are this job's own output, so their schemas are
+    // known: no footer-inference jobs on read.
+    def alias(v: Int): DataFrame = spark.read.schema(Canon.AliasSchema).parquet(s"$state/v$v/alias")
     val versions = SinkFs.listPrefixed(spark, state, "v")
       .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
     val cur = versions.filter(done).sorted.lastOption
@@ -284,23 +289,26 @@ object Submit {
       case None => (Canon.canonicalState(ms), "full (initial)")
       case Some(v) =>
         val carried = Canon.CanonState(
-          spark.read.parquet(s"$state/v$v/stats"),
-          spark.read.parquet(s"$state/v$v/alias"))
+          spark.read.schema(Canon.StatsSchema).parquet(s"$state/v$v/stats"), alias(v))
         val r = Canon.canonicalMapIncremental(carried, ms)
         (r.state, if (r.fellBack) "full (cap-crossing fallback)" else "incremental")
     }
     val next = cur.map(_ + 1).getOrElse(0)
-    st.stats.write.mode("overwrite").parquet(s"$state/v$next/stats")
-    st.canonMap.write.mode("overwrite").parquet(s"$state/v$next/alias")
+    // The two state writes are independent jobs over the same checkpointed
+    // stats: submitted together (Par.run), their scheduling latencies
+    // overlap. The alias write counts its own rows for the summary line.
+    val written = org.apache.spark.sql.Observation()
+    graft.util.Par.run(Seq(
+      () => st.stats.write.mode("overwrite").parquet(s"$state/v$next/stats"),
+      () => st.canonMap.observe(written, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$state/v$next/alias")))(_.apply())
     SinkFs.touch(spark, s"$state/v$next/_DONE")
     // Keep the just-published version and its predecessor (manual rollback
     // window); everything older — and any unflagged crash residue — goes.
     versions.filter(v => cur.exists(_ > v) || !done(v))
       .foreach(v => SinkFs.deleteLoud(spark, s"$state/v$v"))
-    opts.get("canon-out").foreach(p =>
-      spark.read.parquet(s"$state/v$next/alias").write.mode("overwrite").parquet(p))
-    val n = spark.read.parquet(s"$state/v$next/alias").count()
-    println(s"[submit] refresh: $how -> v$next ($n surfaces)")
+    opts.get("canon-out").foreach(p => alias(next).write.mode("overwrite").parquet(p))
+    println(s"[submit] refresh: $how -> v$next (${written.get("n")} surfaces)")
   }
 
   /** `dedup`: fold a delta documents batch into the carried exact-dedup

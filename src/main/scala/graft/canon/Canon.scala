@@ -19,11 +19,19 @@ object Canon {
     * mentions) — one shuffle, then everything downstream is dimension-sized.
     */
   def surfaceStats(mentions: Dataset[Mention]): DataFrame =
-    mentions.toDF()
-      .filter(col("label") === "PERSON")
+    withWords(personSurfaces(mentions)
       .groupBy(col("surface"))
-      .agg(count(lit(1)).as("n_mentions"))
-      .withColumn("sim_key", graft.functions.expressions.simkey(col("surface")))
+      .agg(count(lit(1)).as("n_mentions")))
+
+  /** PERSON mention rows — the vertices' raw source. */
+  private def personSurfaces(mentions: Dataset[Mention]): DataFrame =
+    mentions.toDF().filter(col("label") === "PERSON").select(col("surface"))
+
+  /** Adds `sim_key` and the distinct normalized `words`: both are pure
+    * functions of `surface`, so every stats table derives them the same way.
+    */
+  private def withWords(df: DataFrame): DataFrame =
+    df.withColumn("sim_key", graft.functions.expressions.simkey(col("surface")))
       .withColumn("words", array_distinct(split(col("sim_key"), " ")))
 
   /** Similarity edges (J7): candidates = pairs sharing ≥1 normalized token
@@ -31,7 +39,9 @@ object Canon {
     * blocking + verification is the standard similarity-join shape), verified
     * with the reference thresholds: Levenshtein ratio > 0.79 OR word-overlap
     * ≥ 0.65 (OllamaNERExtractor.py:124) OR equal normalized keys.
-    * Output: (a, b) surface pairs with a < b.
+    * Output: (a, b) surface pairs with a < b. The blocking is
+    * [[blockedEdges]] with every surface new — the same routine
+    * [[deltaEdges]] and the incremental refresh run.
     *
     * Tokens whose block exceeds `maxBlock` surfaces are DROPPED as blocking
     * keys (the standard stop-token cap: a shared first name held by millions
@@ -47,25 +57,56 @@ object Canon {
     * only candidate generation is capped.
     */
   def similarityEdges(stats: DataFrame, maxBlock: Long = Config.MaxTokenBlock): DataFrame = {
-    val toks = stats.select(col("surface"), col("sim_key"), col("words"))
-      .withColumn("tok", explode(col("words")))
-    val coldToks = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxBlock).select(col("tok"))
-    val blockToks = toks.join(coldToks, Seq("tok"), "left_semi")
-    val l = blockToks.select(col("surface").as("a"), col("sim_key").as("ka"),
+    val flagged = stats.withColumn("is_new", lit(true))
+    blockedEdges(flagged, coldTokens(tokenTable(flagged), maxBlock))
+  }
+
+  /** Per-token block sizes over a flagged stats table (`is_new` marks the
+    * surfaces a refresh adds): `df` counts every surface holding the token,
+    * `df_old` only the carried ones.
+    */
+  private def tokenTable(flagged: DataFrame): DataFrame =
+    flagged.select(explode(col("words")).as("tok"), col("is_new"))
+      .groupBy(col("tok"))
+      .agg(count(lit(1)).as("df"), count_if(!col("is_new")).as("df_old"))
+
+  /** The blocking keys under the stop-token cap. */
+  private def coldTokens(tokens: DataFrame, maxBlock: Long): DataFrame =
+    tokens.filter(col("df") <= maxBlock).select(col("tok"))
+
+  /** Token blocking + verification over a flagged stats table: every
+    * verified pair sharing a cold token with at least one NEW endpoint, as
+    * (least, greatest). Only new surfaces probe (the left side), so the
+    * candidate cost is |new| × block sizes; a new↔new pair is generated by
+    * its smaller endpoint alone, a new↔old pair by its new endpoint.
+    */
+  private def blockedEdges(flagged: DataFrame, coldToks: DataFrame): DataFrame = {
+    val toks = flagged.select(col("surface"), col("sim_key"), col("words"), col("is_new"),
+        explode(col("words")).as("tok"))
+      .join(coldToks, Seq("tok"), "left_semi")
+    val l = toks.filter(col("is_new")).select(col("surface").as("a"), col("sim_key").as("ka"),
       col("words").as("wa"), col("tok").as("tok_a"))
-    val r = blockToks.select(col("surface").as("b"), col("sim_key").as("kb"),
-      col("words").as("wb"), col("tok").as("tok_b"))
+    val r = toks.select(col("surface").as("b"), col("sim_key").as("kb"),
+      col("words").as("wb"), col("is_new").as("new_b"), col("tok").as("tok_b"))
+    l.join(r, col("tok_a") === col("tok_b") && col("a") =!= col("b") &&
+        (!col("new_b") || col("a") < col("b")))
+      .filter(similar)
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .distinct()
+  }
+
+  /** The reference thresholds over a joined pair's (ka, wa) × (kb, wb):
+    * equal normalized keys OR Levenshtein ratio > 0.79 OR word overlap ≥
+    * 0.65. All three are symmetric in the two sides.
+    */
+  private def similar: org.apache.spark.sql.Column = {
     val overlap = size(array_intersect(col("wa"), col("wb"))).cast("double") /
       greatest(size(col("wa")), size(col("wb"))).cast("double")
     val levRatio = lit(1.0) - levenshtein(col("ka"), col("kb")).cast("double") /
       greatest(length(col("ka")), length(col("kb"))).cast("double")
-    l.join(r, col("tok_a") === col("tok_b") && col("a") < col("b"))
-      .filter(col("ka") === col("kb") ||
-        levRatio > Config.LevRatioThreshold ||
-        overlap >= Config.WordOverlapThreshold)
-      .select(col("a"), col("b"))
-      .distinct()
+    col("ka") === col("kb") ||
+      levRatio > Config.LevRatioThreshold ||
+      overlap >= Config.WordOverlapThreshold
   }
 
   /** MinHash-banded similarity edges (the north-star scale path for
@@ -115,25 +156,16 @@ object Canon {
     verifyEdges(cand, stats)
   }
 
-  /** Reference-threshold verification of candidate pairs (a, b) against the
-    * full per-surface dims: equal normalized keys OR Levenshtein ratio >
-    * 0.79 OR word overlap ≥ 0.65 — the shared verify stage of every
-    * candidate-generation scheme here (token blocking, MinHash bands, delta
-    * blocking). All three predicates are symmetric in (a, b), so any
-    * canonical pair orientation verifies identically.
+  /** Reference-threshold verification ([[similar]]) of candidate pairs
+    * (a, b) against the full per-surface dims — the verify stage of the
+    * MinHash candidates; token blocking verifies inline ([[blockedEdges]]).
     */
   private def verifyEdges(cand: DataFrame, stats: DataFrame): DataFrame = {
     val dims = stats.select(col("surface"), col("sim_key"), col("words"))
-    val overlap = size(array_intersect(col("wa"), col("wb"))).cast("double") /
-      greatest(size(col("wa")), size(col("wb"))).cast("double")
-    val levRatio = lit(1.0) - levenshtein(col("ka"), col("kb")).cast("double") /
-      greatest(length(col("ka")), length(col("kb"))).cast("double")
     cand
       .join(dims.select(col("surface").as("a"), col("sim_key").as("ka"), col("words").as("wa")), "a")
       .join(dims.select(col("surface").as("b"), col("sim_key").as("kb"), col("words").as("wb")), "b")
-      .filter(col("ka") === col("kb") ||
-        levRatio > Config.LevRatioThreshold ||
-        overlap >= Config.WordOverlapThreshold)
+      .filter(similar)
       .select(col("a"), col("b"))
   }
 
@@ -164,6 +196,8 @@ object Canon {
   def connectedComponentsWithRounds(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 60, localThreshold: Long = 100000L,
       hubDegree: Long = 1024L, bcastBound: Long = 1000000L): (DataFrame, Int) = {
+    require(localThreshold >= 0 && localThreshold < Int.MaxValue,
+      s"localThreshold out of range: $localThreshold")
     // Materialize the (possibly expensive — e.g. a banded similarity
     // self-join) edge input ONCE: the size gate, the local collect()/first
     // distributed round would otherwise each re-run the edge pipeline.
@@ -171,10 +205,12 @@ object Canon {
     // estimated stats through checkpoints, and in an iterative join loop
     // sizeInBytes SQUARES per round until the driver melts down in
     // BigInteger stats arithmetic — see GraftSqlShims.localCheckpointFresh.
-    // The LAZY variant everywhere here: every checkpoint below is consumed
-    // by an immediate driver action (the size-gate counts, the per-round
-    // checksum aggregate), which materializes it — the eager count() was a
-    // pure extra job, ~1/3 of the fixed per-round loop latency.
+    // The LAZY variant everywhere here: building one already runs the
+    // input's shuffle stages (AQE plans the final stage from their sizes),
+    // and its final stage then runs inside the next driver action (the size
+    // gate's collects, the per-round checksum aggregate) — the eager
+    // variant's count() is one more job, ~1/3 of the fixed per-round loop
+    // latency.
     val ck = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy _
     val vs = ck(vertices.select(col("surface")))
     val es = ck(edges.select(col("a"), col("b")))
@@ -183,11 +219,23 @@ object Canon {
     // iterative rounds below cost several scheduler round-trips that dwarf
     // the work when |V| is tiny. Identical output (component = min member).
     // Gated on BOTH vertex and edge count — a 100k-vertex similarity graph
-    // can carry O(V²) edges, which must never be collect()ed.
+    // can carry O(V²) edges, which must never be collect()ed whole: each
+    // side is collected under a `localThreshold + 1` limit, and the local
+    // path is taken only when both came back within the threshold. Each
+    // collect reads its checkpoint's partitions in order in ONE task
+    // (coalesce(1)) and stops at the limit: a plain limit scans one
+    // partition per job and then scales up, several jobs per gate. Every
+    // partition it reads is computed whole and kept by the checkpoint, so
+    // the distributed branch reuses it.
+    val bound = localThreshold.toInt + 1
+    def upToBound(df: DataFrame) = df.coalesce(1).limit(bound).collect()
+    val esRows = upToBound(es)
+    lazy val vsRows = upToBound(vs)
+    if (esRows.length <= localThreshold && vsRows.length <= localThreshold)
+      return (ccLocal(vertices.sparkSession, vsRows.map(_.getString(0)),
+        esRows.map(r => (r.getString(0), r.getString(1)))), 0)
     val vsCount = vs.count()
     val esCount = es.count()
-    if (vsCount <= localThreshold && esCount <= localThreshold)
-      return (ccLocal(vs, es), 0)
     // Scale-adaptive round sizing (guide §2: derive partitioning from the
     // measured input, never a constant): the per-round pair set is bounded
     // by the edge count, so round exchanges are coalesced to ~50k pairs per
@@ -462,9 +510,7 @@ object Canon {
     */
   def surfaceDim(spark: org.apache.spark.sql.SparkSession, surfaces: Seq[String]): DataFrame = {
     import spark.implicits._
-    surfaces.toDF("surface")
-      .withColumn("sim_key", graft.functions.expressions.simkey(col("surface")))
-      .withColumn("words", array_distinct(split(col("sim_key"), " ")))
+    withWords(surfaces.toDF("surface"))
   }
 
   /** C4 word-bag-subset edges (check_heuristics.use_part_of_the_name:63-97):
@@ -524,11 +570,9 @@ object Canon {
     * each vertex with the lexicographic minimum of its component — exactly
     * the fixpoint of the distributed min-label loop.
     */
-  private def ccLocal(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
+  private def ccLocal(spark: org.apache.spark.sql.SparkSession, vs: Array[String],
+      es: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    val vs = vertices.select(col("surface")).as[String].collect()
-    val es = edges.select(col("a"), col("b")).as[(String, String)].collect()
     val parent = scala.collection.mutable.HashMap(vs.map(v => v -> v): _*)
     def find(x: String): String = {
       var r = x
@@ -561,20 +605,19 @@ object Canon {
     canonicalState(mentions).canonMap
 
   /** Representative pick over (surface, component) labels + per-surface
-    * stats — the shared tail of the full and incremental canon jobs.
+    * stats — the shared tail of the full and incremental canon jobs. The
+    * first surface of each component in rank order, read off the window
+    * itself: the four keys end in the surface, so the order is total and
+    * every member row carries its component's pick without a join back.
     */
-  def canonicalPick(stats: DataFrame, comps: DataFrame): DataFrame = {
-    val ranked = stats.join(comps, "surface")
-      .withColumn("rn", row_number().over(
+  def canonicalPick(stats: DataFrame, comps: DataFrame): DataFrame =
+    stats.join(comps, "surface")
+      .select(col("surface"), first(col("surface")).over(
         Window.partitionBy(col("component")).orderBy(
           size(split(col("surface"), " ")).desc,
           length(col("surface")).desc,
           col("n_mentions").desc,
-          col("surface").desc)))
-    val canon = ranked.filter(col("rn") === 1)
-      .select(col("component"), col("surface").as("canonical"))
-    comps.join(canon, "component").select(col("surface"), col("canonical"))
-  }
+          col("surface").desc)).as("canonical"))
 
   // ------------------------------------------------------------------
   // Incremental canonicalization (the production refresh shape): at 100 TB
@@ -591,6 +634,12 @@ object Canon {
     */
   final case class CanonState(stats: DataFrame, canonMap: DataFrame)
 
+  /** Schemas (DDL) of the two [[CanonState]] tables, for readers of a
+    * persisted state that would otherwise infer them from parquet footers.
+    */
+  val StatsSchema = "surface STRING, n_mentions BIGINT, sim_key STRING, words ARRAY<STRING>"
+  val AliasSchema = "surface STRING, canonical STRING"
+
   /** Refresh outcome: the new carried state and whether the exactness
     * guard forced a full recompute.
     */
@@ -598,10 +647,11 @@ object Canon {
 
   /** Full canon job, returning the carry-forward [[CanonState]]. The
     * dimension-sized stats are cut once (`GraftSqlShims.localCheckpointFreshLazy`,
-    * as [[canonicalMapIncremental]] does on `merged`): blocking, edge
-    * verification, the CC vertex set and the pick all read them, and
+    * as [[canonicalMapIncremental]] does on the merged stats): blocking,
+    * edge verification, the CC vertex set and the pick all read them, and
     * without the cut each consumer re-aggregates the corpus-sized mention
-    * table. The cut materializes at the first consumer action.
+    * table. Building the cut runs the aggregation's shuffle; its final
+    * stage runs inside the first consumer action.
     */
   def canonicalState(mentions: Dataset[Mention],
       maxBlock: Long = Config.MaxTokenBlock): CanonState = {
@@ -614,37 +664,35 @@ object Canon {
 
   /** Merge the carried stats dimension with a delta batch's stats: mention
     * counts add per surface; sim_key/words are pure functions of the
-    * surface. One map-side-combinable shuffle over two dimension tables.
+    * surface. [[flaggedMerge]] without its flag.
     */
   def mergeStats(oldStats: DataFrame, deltaStats: DataFrame): DataFrame =
-    oldStats.select(col("surface"), col("n_mentions"))
-      .unionByName(deltaStats.select(col("surface"), col("n_mentions")))
+    flaggedMerge(oldStats, deltaStats).drop("is_new")
+
+  /** The merged stats dimension flagged with `is_new` (surface absent from
+    * `oldStats`): one map-side-combinable aggregation over the carried
+    * stats ∪ the delta's `(surface, n_mentions)` rows — a stats table, or
+    * raw mentions at one each. A delta row of an old surface adds to its
+    * count and leaves it old (`min` over the flags).
+    */
+  private[graft] def flaggedMerge(oldStats: DataFrame, delta: DataFrame): DataFrame =
+    withWords(oldStats.select(col("surface"), col("n_mentions"), lit(false).as("is_new"))
+      .unionByName(delta.select(col("surface"), col("n_mentions"), lit(true).as("is_new")))
       .groupBy(col("surface"))
-      .agg(sum(col("n_mentions")).as("n_mentions"))
-      .withColumn("sim_key", graft.functions.expressions.simkey(col("surface")))
-      .withColumn("words", array_distinct(split(col("sim_key"), " ")))
+      .agg(sum(col("n_mentions")).as("n_mentions"), min(col("is_new")).as("is_new")))
 
   /** Similarity edges incident to the NEW surfaces only, under the MERGED
     * dimension's stop-token cap — candidate cost is |new| × block sizes,
-    * never |merged|². Verification scores full word arrays, exactly as the
-    * full job does.
+    * never |merged|². The same blocking + verification routine as
+    * [[similarityEdges]] ([[blockedEdges]]), with `newSurfaces` flagged.
     */
   def deltaEdges(mergedStats: DataFrame, newSurfaces: DataFrame,
       maxBlock: Long = Config.MaxTokenBlock): DataFrame = {
-    val toks = mergedStats.select(col("surface"), col("words"))
-      .withColumn("tok", explode(col("words")))
-    val coldToks = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxBlock).select(col("tok"))
-    val blockToks = toks.join(coldToks, Seq("tok"), "left_semi")
-      .select(col("surface"), col("tok"))
-    val newToks = blockToks.join(newSurfaces.select(col("surface")),
-      Seq("surface"), "left_semi")
-    val cand = newToks.as("x").join(blockToks.as("y"),
-        col("x.tok") === col("y.tok") && col("x.surface") =!= col("y.surface"))
-      .select(least(col("x.surface"), col("y.surface")).as("a"),
-        greatest(col("x.surface"), col("y.surface")).as("b"))
-      .distinct()
-    verifyEdges(cand, mergedStats)
+    val flagged = mergedStats
+      .join(newSurfaces.select(col("surface")).distinct().withColumn("is_new", lit(true)),
+        Seq("surface"), "left")
+      .withColumn("is_new", coalesce(col("is_new"), lit(false)))
+    blockedEdges(flagged, coldTokens(tokenTable(flagged), maxBlock))
   }
 
   /** Incremental canon refresh: fold a delta mention batch into a carried
@@ -657,15 +705,18 @@ object Canon {
     * through tokens still cold in MERGED, all of which were cold in OLD too,
     * so merged-full old↔old edges ⊆ old edges, and old connectivity (carried
     * as the old map's star contraction pairs) subsumes them. Edges touching
-    * a new surface are regenerated by [[deltaEdges]] under the merged cap.
+    * a new surface are regenerated under the merged cap by the blocking
+    * routine [[deltaEdges]] runs.
     * The ONE non-monotone case: a token whose block crosses the cap
     * (df_old ∈ [2, cap], df_merged > cap) — a fresh full run would DROP
     * old↔old pairs whose only generating token it was, splitting components
-    * the carried state keeps merged. That case is detected with one
-    * dimension-sized aggregate and answered by falling back to the full job
-    * over the merged stats (`fellBack = true`); in a web corpus a token
-    * crosses a 1000-surface block once ever, not per refresh, so the
-    * amortized cost stays delta-proportional.
+    * the carried state keeps merged. That case is detected by a filter on
+    * the token table the blocking reads anyway (`df_old` counts the flagged
+    * merge's old rows, which are exactly the carried surfaces) and answered
+    * by falling back to the full job over the merged stats
+    * (`fellBack = true`); in a web corpus a token crosses a 1000-surface
+    * block once ever, not per refresh, so the amortized cost stays
+    * delta-proportional.
     *
     * The canonical pick re-ranks ALL merged surfaces (n_mentions — rank key
     * 3 — moves with every delta), but that is a dimension-sized window, not
@@ -674,37 +725,34 @@ object Canon {
   def canonicalMapIncremental(old: CanonState, deltaMentions: Dataset[Mention],
       maxBlock: Long = Config.MaxTokenBlock): CanonRefresh = {
     val ck = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy _
-    // Checkpoint the merged dimension: it feeds the cap-crossing gate, the
-    // delta blocking, the CC vertex set, and the pick — without the cut,
-    // each consumer action would re-scan the delta mention source.
-    val merged = ck(mergeStats(old.stats, surfaceStats(deltaMentions)))
-    def tokenDf(stats: DataFrame, alias: String): DataFrame =
-      stats.select(explode(col("words")).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as(alias))
-    // Exactness gate (materializes the checkpoint): any token crossing the
-    // cold→hot cap boundary with ≥2 old surfaces invalidates carried edges.
-    val crossed = !tokenDf(merged, "df_new")
-      .join(tokenDf(old.stats, "df_old"), Seq("tok"))
-      .filter(col("df_old") >= 2 && col("df_old") <= maxBlock &&
-        col("df_new") > maxBlock)
+    // Checkpoint the flagged merge: it feeds the token table, the blocking,
+    // the CC vertex set and the pick — without the cut, each consumer
+    // action would re-scan the delta mention source.
+    val flagged = ck(flaggedMerge(old.stats,
+      personSurfaces(deltaMentions).withColumn("n_mentions", lit(1L))))
+    val merged = flagged.drop("is_new")
+    // One token table for the exactness gate and the blocking keys.
+    val tokens = ck(tokenTable(flagged))
+    // Exactness gate: any token crossing the cold→hot cap boundary with ≥2
+    // old surfaces invalidates carried edges.
+    val crossed = !tokens
+      .filter(col("df_old") >= 2 && col("df_old") <= maxBlock && col("df") > maxBlock)
       .isEmpty
-    if (crossed) {
-      val comps = connectedComponents(merged.select("surface"),
-        similarityEdges(merged, maxBlock))
-      CanonRefresh(CanonState(merged, canonicalPick(merged, comps)), fellBack = true)
-    } else {
-      val newSurfaces = merged.join(old.stats.select(col("surface")),
-        Seq("surface"), "left_anti").select(col("surface"))
-      // Old connectivity enters as the old map's star contraction pairs
-      // (canonical, member) — already a star forest, so the CC loop pays
-      // O(1) rounds for them; only delta edges add structure.
-      val contraction = old.canonMap
-        .filter(col("surface") =!= col("canonical"))
-        .select(col("canonical").as("a"), col("surface").as("b"))
-      val edges = contraction.unionByName(deltaEdges(merged, newSurfaces, maxBlock))
-      val comps = connectedComponents(merged.select("surface"), edges)
-      CanonRefresh(CanonState(merged, canonicalPick(merged, comps)), fellBack = false)
-    }
+    val cold = coldTokens(tokens, maxBlock)
+    val edges =
+      // fallback: the full job's edges (every surface probes), which are
+      // similarityEdges(merged) — its token table is this one
+      if (crossed) blockedEdges(flagged.withColumn("is_new", lit(true)), cold)
+      else
+        // Old connectivity enters as the old map's star contraction pairs
+        // (canonical, member) — already a star forest, so the CC loop pays
+        // O(1) rounds for them; only delta edges add structure.
+        old.canonMap
+          .filter(col("surface") =!= col("canonical"))
+          .select(col("canonical").as("a"), col("surface").as("b"))
+          .unionByName(blockedEdges(flagged, cold))
+    val comps = connectedComponents(merged.select("surface"), edges)
+    CanonRefresh(CanonState(merged, canonicalPick(merged, comps)), fellBack = crossed)
   }
 
   /** Collect a [[canonicalMap]] result into the broadcastable alias snapshot

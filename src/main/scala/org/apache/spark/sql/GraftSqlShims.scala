@@ -32,14 +32,18 @@ object GraftSqlShims {
     out
   }
 
-  /** [[localCheckpointFresh]] without the eager `count()`: the checkpoint
-    * materializes at the FIRST consumer action instead (local checkpoints
-    * cache partitions as they are computed — later consumers read the
-    * stored blocks, exactly as in the eager form). Use when a consumer
-    * action provably follows immediately — e.g. the CC loop, where each
-    * round's star output is consumed by a checksum aggregate in the same
-    * driver step; the eager count there was a pure extra job per round
-    * (~1/3 of the loop's fixed per-round latency at sandbox scale).
+  /** [[localCheckpointFresh]] without the eager `count()`. NOT free to
+    * build: `queryExecution.toRdd` prepares the executed plan, and under
+    * AQE that runs every shuffle map stage of `df` as its own job, right
+    * here (the final stage is planned from their runtime sizes). Only the
+    * final stage is deferred: it runs inside the FIRST consumer action, and
+    * local checkpoints cache partitions as they are computed — later
+    * consumers read the stored blocks, exactly as in the eager form. Use
+    * when a consumer action provably follows immediately — e.g. the CC
+    * loop, where each round's star output is consumed by a checksum
+    * aggregate in the same driver step; the eager count there was a pure
+    * extra job per round (~1/3 of the loop's fixed per-round latency at
+    * sandbox scale).
     */
   def localCheckpointFreshLazy(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]

@@ -45,17 +45,27 @@ class CanonSpec extends SparkSpec {
   test("connected components: permutation-invariant, handles chains") {
     import spark.implicits._
     val vertices = Seq("a", "b", "c", "d", "e", "z").toDF("surface")
-    val edges = Seq(("a", "b"), ("b", "c"), ("d", "e")).toDF("a", "b")
+    // repeated and reversed edges make |E| = 7 > |V| = 6, so each side of
+    // the size gate has its own boundary
+    val edgeList = Seq(("a", "b"), ("b", "c"), ("d", "e"), ("c", "a"), ("b", "a"),
+      ("e", "d"), ("a", "b"))
+    val edges = edgeList.toDF("a", "b")
+    val (nV, nE) = (6L, edgeList.size.toLong)
     // exercise BOTH the driver-local union-find fast path and the
-    // distributed min-label loop (localThreshold = 0 forces it); results
-    // must be identical
-    Seq(100000L, 0L).foreach { thr =>
-      val comps = Canon.connectedComponents(vertices, edges, localThreshold = thr)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // distributed min-label loop (localThreshold = 0 forces it), and the
+    // gate's thresholds at |E|, |E|−1, |V| and |V|−1: the labels must be
+    // identical, and the local path (rounds = 0) is taken exactly when both
+    // sizes are within the threshold
+    val labels = Seq(100000L, 0L, nE, nE - 1, nV, nV - 1).map { thr =>
+      val (cc, rounds) = Canon.connectedComponentsWithRounds(vertices, edges, localThreshold = thr)
+      val comps = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(comps("a") == "a" && comps("b") == "a" && comps("c") == "a")
       assert(comps("d") == "d" && comps("e") == "d")
       assert(comps("z") == "z")
+      assert((rounds == 0) == (nV <= thr && nE <= thr), s"threshold $thr: $rounds rounds")
+      comps
     }
+    assert(labels.distinct.size == 1)
   }
 
   test("distributed CC agrees with local union-find on the live similarity graph") {
@@ -251,6 +261,41 @@ class CanonSpec extends SparkSpec {
     val counts = r.state.stats.select(col("surface"), col("n_mentions"))
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(counts == Map("Ada Lovelace" -> 3L, "Alan Turing" -> 1L, "Grace Hopper" -> 1L))
+  }
+
+  test("incremental refresh: two new surfaces linked only to each other give one new↔new edge") {
+    import org.apache.spark.sql.functions._
+    val oldMs = mkMentions(Seq("Ada Lovelace", "Alan Turing"), "a")
+    val newMs = mkMentions(Seq("Grace Hopper", "Grace Hoppers"), "b")
+    val st = Canon.canonicalState(oldMs)
+    val merged = Canon.mergeStats(st.stats, Canon.surfaceStats(newMs))
+    val fresh = Canon.surfaceStats(newMs).select(col("surface"))
+    val edges = Canon.deltaEdges(merged, fresh).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(edges == Seq(("Grace Hopper", "Grace Hoppers")))
+    val r = Canon.canonicalMapIncremental(st, newMs)
+    assert(!r.fellBack)
+    assert(asMap(r.state.canonMap) ==
+      asMap(Canon.canonicalState(oldMs.unionByName(newMs)).canonMap))
+    assert(asMap(r.state.canonMap)("Grace Hopper") == "Grace Hoppers")
+  }
+
+  test("incremental refresh: a delta of re-mentioned old surfaces keeps them old, sums counts, keeps the map") {
+    import org.apache.spark.sql.functions._
+    val oldMs = mkMentions(Seq("Ada Lovelace", "Ada Lovelace", "Ada Lovelace", "Alan Turing",
+      "Alan Turing", "Alan Mathison Turing"), "a")
+    val newMs = mkMentions(Seq("Alan Turing", "Ada Lovelace"), "b")
+    val st = Canon.canonicalState(oldMs)
+    val flags = Canon.flaggedMerge(st.stats, newMs.toDF().select(col("surface"), lit(1L).as("n_mentions")))
+      .select(col("surface"), col("n_mentions"), col("is_new"))
+      .collect().map(x => x.getString(0) -> (x.getLong(1), x.getBoolean(2))).toMap
+    assert(flags == Map("Ada Lovelace" -> (4L, false), "Alan Turing" -> (3L, false),
+      "Alan Mathison Turing" -> (1L, false)))
+    val r = Canon.canonicalMapIncremental(st, newMs)
+    assert(!r.fellBack)
+    assert(asMap(r.state.canonMap) == asMap(st.canonMap))
+    assert(asMap(r.state.canonMap) ==
+      asMap(Canon.canonicalState(oldMs.unionByName(newMs)).canonMap))
   }
 
   test("a token block crossing the cap forces the full-job fallback — and stays exact") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.canon.Canon
 import graft.pipeline.Pipeline
 
 /** The spark-submit entry point, driven end to end through [[Submit.run]]
@@ -187,13 +188,28 @@ class SubmitSpec extends SparkSpec {
         .map(r => r.getAs[String]("surface") -> r.getAs[String]("canonical")).toMap
     val full = Pipeline.canonCached(spark, sfTiny).collect()
       .map(r => r.getAs[String]("surface") -> r.getAs[String]("canonical")).toMap
+    // runs one refresh publishing v`v`; its summary line's surface count
+    // must be the published alias table's row count
+    def refresh(v: Int, args: String*): Unit = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(Submit.run(spark, ("refresh" +: args).toArray))
+      val printed = raw"-> v$v \((\d+) surfaces\)".r.findFirstMatchIn(out.toString)
+        .getOrElse(fail(s"no v$v surface count in: $out")).group(1).toLong
+      assert(printed == spark.read.parquet(s"$dir/state/v$v/alias").count())
+    }
 
     // initial refresh = full job over delta0, published as v0
-    Submit.run(spark, Array("refresh", "--input", s"$dir/delta0", "--state", s"$dir/state"))
+    refresh(0, "--input", s"$dir/delta0", "--state", s"$dir/state")
     assert(new java.io.File(s"$dir/state/v0/_DONE").exists())
+    // the state is read back with the declared schemas: they must be the
+    // ones the job writes
+    Seq("stats" -> Canon.StatsSchema, "alias" -> Canon.AliasSchema).foreach { case (t, ddl) =>
+      def shape(st: org.apache.spark.sql.types.StructType) = st.map(f => f.name -> f.dataType.catalogString)
+      assert(shape(spark.read.parquet(s"$dir/state/v0/$t").schema) ==
+        shape(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+    }
     // second refresh folds delta1 incrementally: v1 must equal the full job
-    Submit.run(spark, Array("refresh", "--input", s"$dir/delta1",
-      "--state", s"$dir/state", "--canon-out", s"$dir/alias"))
+    refresh(1, "--input", s"$dir/delta1", "--state", s"$dir/state", "--canon-out", s"$dir/alias")
     assert(aliasMap(1) == full)
     // predecessor kept for rollback; --canon-out is a content copy of v1
     assert(new java.io.File(s"$dir/state/v0/_DONE").exists())
@@ -211,7 +227,7 @@ class SubmitSpec extends SparkSpec {
     // residue, and keeps v1 as the rollback window
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/state/v9/stats"))
     pages.limit(0).write.parquet(s"$dir/delta_empty")
-    Submit.run(spark, Array("refresh", "--input", s"$dir/delta_empty", "--state", s"$dir/state"))
+    refresh(2, "--input", s"$dir/delta_empty", "--state", s"$dir/state")
     assert(aliasMap(2) == full)
     val left = new java.io.File(s"$dir/state").listFiles().map(_.getName)
       .filter(_.startsWith("v")).toSet
