@@ -127,9 +127,10 @@ object SparkEntry {
           col("o.start").cast("long").as("pos"), col("o.end").cast("long").as("pos_end"))
     }),
     "q_triples" -> ((s, dir) => {
-      // shuffle-free pairing over the segment-contiguous scan output (loud
-      // guard on violation); identical triples to Relations.cooccurrence
-      Relations.cooccurrenceContiguous(Pipeline.mentionsCached(s, dir)).toDF()
+      // the production composition (Pipeline.triples), co-occurrence leg:
+      // identical triples to Relations.cooccurrence
+      Pipeline.triples(s, dir).toDF()
+        .filter(col("pred") =!= Relations.ProvPred)
         .groupBy(col("subj"), col("pred"), col("obj"), col("url"))
         .agg(count(lit(1)).as("n"))
     }),
@@ -215,9 +216,10 @@ object SparkEntry {
     "q_tokens" -> ((s, dir) => {
       import s.implicits._
       graft.verify.CorpusAsserts.assertPlantSafe(s, dir)
-      graft.util.Reads.spread(s,
-          s.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id").cast("long"), col("text")))
+      // NOT spread (graft.util.Reads.spread): one cheap narrow pass, which
+      // the spread's exchange slows down (sf0.1, local[4]: 0.33 → 0.26 s)
+      s.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)]
         .flatMap { case (id, t) =>
           graft.functions.Text.tokensWithPos(graft.functions.Text.normWs(t))

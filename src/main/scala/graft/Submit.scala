@@ -8,7 +8,7 @@ import graft.extract.Extract
 import graft.materialize.Materialize
 import graft.mentions.Mentions
 import graft.model.{Gazetteer, Mention, Page}
-import graft.relations.Relations
+import graft.pipeline.Pipeline
 import graft.sources.Pages
 import graft.streaming.{Recanon, Streaming}
 
@@ -28,14 +28,13 @@ import graft.streaming.{Recanon, Streaming}
   *
   * Subcommands wire the lambda architecture end to end:
   *  - `batch`: pages table → mentions (cached once, tagged with their sink
-  *    bucket) → canonical map → co-occurrence + provenance triples in one
-  *    fused pass ([[Relations.triplesContiguous]]) over mentions clustered
-  *    by the sink's own bucket exchange and sorted by (url, page, seg_no),
-  *    committed bucket-partitioned with lineage resume
-  *    ([[Materialize.commitBuckets]]); `--canon-out` also writes the alias
-  *    table the stream job consumes as its snapshot. Past
-  *    [[Canon.SnapshotMaxRows]] surfaces the alias map stays a DataFrame
-  *    and the triples take the join form ([[Materialize.writeTriples]]).
+  *    bucket) → canonical map → co-occurrence + provenance triples
+  *    ([[Pipeline.triples]], the flagship's own composition) over mentions
+  *    clustered by the sink's own bucket exchange and sorted by (url, page,
+  *    seg_no), committed bucket-partitioned with lineage resume
+  *    ([[Materialize.commitBuckets]]) — one path for both alias shapes;
+  *    `--canon-out` also writes the alias table the stream job consumes as
+  *    its snapshot.
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
@@ -185,20 +184,18 @@ object Submit {
 
   /** The batch flagship over an explicit page table (the `batch`
     * subcommand as a function). ONE cached mention scan, tagged with each
-    * row's sink bucket, feeds the canonical map and the triples. With an
-    * alias map at most `maxRows` surfaces ([[Canon.snapshotBounded]]), the
+    * row's sink bucket, feeds the canonical map and the triples. The
     * pending buckets' mentions go through one exchange on the bucket
     * column — `p` = the session's shuffle parallelism capped at
     * `nBuckets`, an explicit count AQE does not coalesce — and a
     * per-partition sort on (url, page, seg_no). A bucket is a function of
     * the url, so every url (a re-crawled one included) becomes one sorted
-    * run in one partition: exactly the contiguity
-    * [[Relations.triplesContiguous]] requires, and its per-segment distinct
-    * and per-url provenance dedup then equal `cooccurrence`'s collect_set
-    * and `mentionedIn`'s distinct. The fused triples are written straight
-    * into their bucket partitions with no second exchange. Above `maxRows`
-    * the map stays a DataFrame and the triples take the join form.
-    * Returns the lineage rows this call committed.
+    * run in one partition: exactly the contiguity [[Pipeline.triples]]
+    * requires, so its per-segment and per-url dedups are global. The
+    * triples are written straight into their bucket partitions; with an
+    * alias map at most `maxRows` surfaces ([[Canon.snapshotBounded]]) that
+    * write has no second exchange, past it the provenance rewrite adds one
+    * join. Returns the lineage rows this call committed.
     */
   def batch(pages: Dataset[Page], gazetteer: Array[(String, String)], output: String,
       nBuckets: Int, batchId: Long, bucketOf: Int => Column, canonOut: Option[String],
@@ -208,27 +205,24 @@ object Submit {
     val tagged = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).toDF()
       .withColumn("bucket", bucketOf(nBuckets)).cache()
     try {
-      val ms = tagged.as[Mention]
-      val canon = Canon.canonicalMap(ms)
-      Canon.snapshotBounded(canon, maxRows) match {
-        case Canon.AliasMap(m, _) =>
-          canonOut.foreach(dir => m.toSeq.toDF("surface", "canonical")
-            .write.mode("overwrite").parquet(dir))
-          val done = Materialize.doneBuckets(spark, output, "triples")
-          val p = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, nBuckets)
-          val clustered = tagged.filter(!col("bucket").isin(done.toSeq: _*))
-            .repartition(p, col("bucket"))
-            .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
-            .as[Mention]
-          Materialize.commitBuckets(
-            Relations.triplesContiguous(clustered, m).withColumn("bucket", bucketOf(nBuckets)),
-            output, "triples", nBuckets, batchId)
-        case _ =>
-          canonOut.foreach(dir => canon.write.mode("overwrite").parquet(dir))
-          Materialize.writeTriples(
-            Relations.cooccurrence(ms).unionByName(Relations.mentionedIn(ms, canon)),
-            output, nBuckets = nBuckets, batchId = batchId, bucketOf = bucketOf)
+      val canon = Canon.canonicalMap(tagged.as[Mention])
+      val snap = Canon.snapshotBounded(canon, maxRows)
+      canonOut.foreach { dir =>
+        val alias = snap match {
+          case Canon.AliasMap(m, _) => m.toSeq.toDF("surface", "canonical")
+          case _ => canon
+        }
+        alias.write.mode("overwrite").parquet(dir)
       }
+      val done = Materialize.doneBuckets(spark, output, "triples")
+      val p = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, nBuckets)
+      val clustered = tagged.filter(!col("bucket").isin(done.toSeq: _*))
+        .repartition(p, col("bucket"))
+        .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
+        .as[Mention]
+      Materialize.commitBuckets(
+        Pipeline.triples(clustered, snap).withColumn("bucket", bucketOf(nBuckets)),
+        output, "triples", nBuckets, batchId)
     } finally tagged.unpersist()
   }
 

@@ -307,11 +307,8 @@ object Canon {
       // m(u) = min(Γ(u) ∪ {u}). Small-star: u links its ≤ neighbors and
       // itself to m(u). Alternating the two is the published O(log n)
       // scheme; the fixpoint is a star forest centered at component minima.
-      val tR = System.nanoTime()
       val (afterLarge, mLarge) = starRound(pairs, hubDegree, large = true, nPart)
-      val tL = System.nanoTime()
       val (next, mSmall) = starRound(afterLarge, hubDegree, large = false, nPart)
-      val tS = System.nanoTime()
       // Materializes next's checkpoint AND afterLarge's (first touch) in
       // one job, while both rounds' cached m aggregates are still live.
       val nextSig = checksum(next)
@@ -321,9 +318,6 @@ object Canon {
       sig = nextSig
       pairs = next
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds large=${(tL - tR) / 1e9}%.2fs small=${(tS - tL) / 1e9}%.2fs " +
-          f"check=${(System.nanoTime() - tS) / 1e9}%.2fs n=${nextSig._1}")
     }
     requireConverged(converged, maxIter, rounds)
     (pairs, rounds)
@@ -367,7 +361,6 @@ object Canon {
     var sig = checksum(pairs)
     var converged = sig._1 == 0L
     while (!converged && rounds < maxIter) {
-      val tR = System.nanoTime()
       def star(p: RDD[(String, String)], large: Boolean)
           : (RDD[(String, String)], org.apache.spark.broadcast.Broadcast[Map[String, String]]) = {
         val sym = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
@@ -389,7 +382,6 @@ object Canon {
       val (afterLarge, mL) = star(pairs, large = true)
       val (next, mS) = star(afterLarge, large = false)
       next.localCheckpoint() // lineage cut, materialized by the checksum job
-      val tS = System.nanoTime()
       val nextSig = checksum(next)
       converged = nextSig == sig && next.subtract(pairs, nPart).isEmpty()
       mL.destroy()
@@ -398,9 +390,6 @@ object Canon {
       sig = nextSig
       pairs = next
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds stars=${(tS - tR) / 1e9}%.2fs " +
-          f"check=${(System.nanoTime() - tS) / 1e9}%.2fs n=${nextSig._1}")
     }
     requireConverged(converged, maxIter, rounds)
     import spark.implicits._
@@ -774,7 +763,7 @@ object Canon {
     *  - [[AliasFrame]]: the canonical map kept as a DataFrame; the fused
     *    stage emits RAW (surface) provenance and the sink rewrites it with
     *    an equi-join per micro-batch
-    *    ([[graft.streaming.Streaming.rewriteProv]]). Catalyst broadcasts
+    *    ([[graft.relations.Relations.rewriteProv]]). Catalyst broadcasts
     *    the dimension side while it fits `autoBroadcastJoinThreshold` and
     *    shuffles past it — the job stays runnable at any dimension size.
     */

@@ -14,8 +14,10 @@ import graft.relations.Relations
   *   pages → segments → mentions (broadcast automaton, narrow)
   *         → canonicalization (dimension-sized self-join + CC)
   *         → co-occurrence + provenance triples in one fused pass over the
-  *           url-contiguous mentions (broadcast alias map, no shuffle; an
-  *           alias map too big for the driver keeps the join + distinct)
+  *           url-contiguous mentions ([[Pipeline.triples]] — the one
+  *           composition for every alias shape: a broadcast alias map
+  *           rewrites provenance in the pass; an alias map too big for the
+  *           driver rewrites it with one equi-join + distinct afterwards)
   *
   * Shuffle frontiers: surface-stats aggregate, ER band join, CC iterations
   * — the big-data path (pages → segments → mentions → triples) is narrow
@@ -50,7 +52,7 @@ object Pipeline {
       // own split count: the fill stays parallel (the exchange's map side
       // is the spread scan), the cached dimension reads at its natural
       // width, and url-hash partitioning PRESERVES the segment/url
-      // contiguity the *Contiguous operators require — a url's mention run
+      // contiguity the fused triples pass requires — a url's mention run
       // lives in one map task's shuffle block, blocks keep row order, and
       // no other block carries that url. Well-split production sources
       // skip this entirely (no spread happened, no exchange added).
@@ -85,21 +87,35 @@ object Pipeline {
     Option(canonMemo.remove(key)).foreach(_.unpersist())
   }
 
-  /** All triples: segment co-occurrence + canonical provenance. The scan
-    * output is segment- and url-contiguous, so BOTH legs run shuffle-free
-    * over the cached mentions when the alias dimension fits the driver
-    * ([[Relations.cooccurrenceContiguous]] / [[Relations.mentionedInContiguous]]
-    * — loud guards on violation; the oversized-dimension branch keeps the
-    * broadcast-join + distinct form). */
-  def triples(spark: SparkSession, sfDir: String): Dataset[Triple] = {
-    val ms = mentionsCached(spark, sfDir)
-    val canonDf = canonCached(spark, sfDir)
-    Canon.snapshotBounded(canonDf) match {
-      case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-      case _ => Relations.cooccurrenceContiguous(ms)
-        .unionByName(Relations.mentionedIn(ms, canonDf))
+  /** All triples of the corpus at `sfDir`: the composition below over the
+    * cached scan, under its size-gated alias snapshot. */
+  def triples(spark: SparkSession, sfDir: String): Dataset[Triple] =
+    triples(mentionsCached(spark, sfDir), Canon.snapshotBounded(canonCached(spark, sfDir)))
+
+  /** The one mentions → triples composition (segment co-occurrence +
+    * per-entity provenance) for every alias shape; the flagship, the
+    * oracle's `q_triples`, [[flagshipChecksum]] and `Submit batch` all run
+    * it. Both legs come from one shuffle-free pass
+    * ([[Relations.triplesContiguous]]); only where the provenance subjects
+    * get canonicalized depends on the shape:
+    *  - [[Canon.AliasMap]]: inside the pass, through the broadcast map;
+    *  - [[Canon.AliasFrame]]: raw in the pass, then one equi-join against
+    *    the alias DataFrame ([[Relations.rewriteProv]]);
+    *  - [[Canon.AliasNone]]: not at all — raw surface subjects.
+    *
+    * Precondition: `ms` is url- and segment-contiguous — every url's
+    * mentions are consecutive rows of ONE partition, each segment's rows
+    * consecutive within them. The scan output and the mention memo have
+    * this shape; `Submit batch` establishes it with its bucket exchange and
+    * per-partition sort. An intra-partition violation throws.
+    */
+  def triples(ms: Dataset[Mention], snap: Canon.AliasSnapshot): Dataset[Triple] =
+    snap match {
+      case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, Some(m))
+      case Canon.AliasFrame(df, _) =>
+        Relations.rewriteProv(Relations.triplesContiguous(ms, None), df)
+      case Canon.AliasNone => Relations.triplesContiguous(ms, None)
     }
-  }
 
   /** Terminal flagship action for benchmarking: counts the amplified triples
     * and unpersists the run's mention cache afterwards, so repeated reps in
@@ -135,15 +151,7 @@ object Pipeline {
       gazetteer: Array[(String, String)] = Gazetteer.all.toArray): (Long, Long) = {
     val pages = Pages.synthesizeAmplified(spark, sfDir, factor)
     val ms = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).cache()
-    try {
-      val canonDf = Canon.canonicalMap(ms)
-      val triples = Canon.snapshotBounded(canonDf) match {
-        // one fused pass over the cached mentions for BOTH legs
-        case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-        case _ => Relations.cooccurrenceContiguous(ms)
-          .unionByName(Relations.mentionedIn(ms, canonDf))
-      }
-      tripleChecksum(triples.toDF())
-    } finally ms.unpersist()
+    try tripleChecksum(triples(ms, Canon.snapshotBounded(Canon.canonicalMap(ms))).toDF())
+    finally ms.unpersist()
   }
 }

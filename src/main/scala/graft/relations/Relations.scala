@@ -49,61 +49,6 @@ object Relations {
       .as[Triple]
   }
 
-  /** [[cooccurrence]] WITHOUT the per-segment shuffle, for mention datasets
-    * whose rows are segment-contiguous within partitions — the scan stages'
-    * natural output shape (each segment's mentions are emitted by one
-    * flatMap element, so they stay consecutive in one partition; cache()
-    * and deterministic recompute preserve that). Guide §2.4 "remove
-    * shuffles outright": the grouping the exchange existed to establish is
-    * already present in the data, the optimizer just cannot see it. Each
-    * consecutive same-key run pairs list-locally via [[coocLocal]] — the
-    * streaming flagship's pairing, spec-pinned equal to the grouped form —
-    * so the big-data path stays narrow end to end and the only remaining
-    * wide op in the flagship is the final aggregate.
-    *
-    * Safety: a per-partition set of closed segment keys turns an
-    * intra-partition contiguity violation (e.g. a shuffled or re-sorted
-    * mention table) into a LOUD error, never silently wrong triples. A
-    * pathological repartition that splits one segment's rows ACROSS
-    * partitions without intra-partition repeats is not detectable here, so
-    * callers establish contiguity by construction: [[graft.Submit]]'s
-    * `batch` clusters its mentions with one exchange on the sink bucket (a
-    * function of url) and sorts each partition by (url, page, seg_no),
-    * which also merges a re-crawled url's rows into one run; the
-    * [[graft.pipeline.Pipeline]] flagship reads the scan output, where a
-    * page's mentions come from one flatMap element and the memo re-clusters
-    * by url. RelationsSpec pins equality with [[cooccurrence]] on the live
-    * corpus.
-    */
-  def cooccurrenceContiguous(mentions: Dataset[Mention]): Dataset[Triple] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    mentions.mapPartitions { it =>
-      val buf = it.buffered
-      val closed = new java.util.HashSet[(String, Int, Int)]()
-      new Iterator[Triple] {
-        private var out: Iterator[Triple] = Iterator.empty
-        private def advance(): Unit = {
-          while (!out.hasNext && buf.hasNext) {
-            val key = { val m = buf.head; (m.url, m.page, m.seg_no) }
-            if (!closed.add(key))
-              throw new IllegalStateException(
-                s"cooccurrenceContiguous: segment $key reappeared after its " +
-                  "group closed — input is not segment-contiguous; use cooccurrence")
-            val group = scala.collection.mutable.ListBuffer.empty[Mention]
-            while (buf.hasNext && {
-              val m = buf.head
-              m.url == key._1 && m.page == key._2 && m.seg_no == key._3
-            }) group += buf.next()
-            out = coocLocal(group.toList, key._1).iterator
-          }
-        }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Triple = { advance(); out.next() }
-      }
-    }
-  }
-
   /** List-local form of [[cooccurrence]] for ONE segment's mentions: the
     * same distinct-(label, surface) → per-rule subjects × objects pairing,
     * but computed group-locally with no shuffle. Used by the streaming
@@ -126,27 +71,46 @@ object Relations {
     * streaming sink's deferred rewrite depends on this). */
   val ProvPred = "mentioned_in"
 
-  /** List-local form of [[mentionedIn]] for ONE page's mentions: canonical
-    * rewrite through a broadcast alias snapshot + per-url dedup. Exact
-    * because urls are unique per page, so page-local distinct == the batch
-    * form's global distinct. Surfaces absent from the snapshot are dropped,
-    * matching the batch inner join.
+  /** List-local form of [[mentionedIn]] for ONE page's mentions: per-url
+    * dedup of the PERSON subjects. Exact because urls are unique per page,
+    * so page-local distinct == the batch form's global distinct. With an
+    * alias snapshot the subjects are rewritten to canonical (surfaces
+    * absent from it are dropped, matching the batch inner join); without
+    * one they stay RAW surfaces — the form the flagship emits for the
+    * [[graft.canon.Canon.AliasFrame]] and [[graft.canon.Canon.AliasNone]]
+    * shapes, so the fused stage never needs a large alias map in its
+    * closure ([[rewriteProv]] or a later compaction canonicalizes them).
     */
-  def provLocal(ms: Seq[Mention], url: String, canon: Map[String, String]): List[Triple] =
-    ms.iterator.filter(_.label == "PERSON")
-      .flatMap(m => canon.get(m.surface)).toList.distinct
-      .map(c => Triple(c, ProvPred, url, url, 1.0))
-
-  /** [[provLocal]] without the canonical rewrite: page-local distinct RAW
-    * person surfaces as provenance subjects. The alias-dimension form of
-    * the streaming flagship ([[graft.canon.Canon.AliasFrame]]) emits these
-    * from the fused stage and joins subj → canonical at the sink
-    * ([[graft.streaming.Streaming.rewriteProv]]), so the fused stage never
-    * needs the alias map in its closure.
-    */
-  def provLocalRaw(ms: Seq[Mention], url: String): List[Triple] =
-    ms.iterator.filter(_.label == "PERSON").map(_.surface).toList.distinct
+  def provLocal(ms: Seq[Mention], url: String,
+      canon: Option[Map[String, String]]): List[Triple] = {
+    val persons = ms.iterator.filter(_.label == "PERSON").map(_.surface)
+    canon.fold(persons)(c => persons.flatMap(c.get)).toList.distinct
       .map(s => Triple(s, ProvPred, url, url, 1.0))
+  }
+
+  /** Provenance rewrite for the [[graft.canon.Canon.AliasFrame]] shape:
+    * raw-surface provenance rows (pred == [[ProvPred]], distinguishable
+    * because the predicate never occurs in the co-occurrence [[rules]])
+    * equi-join subj → canonical against the alias DataFrame, then dedup —
+    * page-local surface-distinct leaves exactly the
+    * two-surfaces-one-canonical residue. Over the url-contiguous batch
+    * table ([[graft.pipeline.Pipeline.triples]]) that distinct is the
+    * global one; in the stream sink urls are unique per feed and a page
+    * lands in ONE micro-batch, so batch-level distinct equals it too. No
+    * broadcast hint: Catalyst broadcasts the dimension side while it fits,
+    * shuffles past that — which is the whole point of this shape.
+    */
+  def rewriteProv(batch: Dataset[Triple], alias: DataFrame): Dataset[Triple] = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val df = batch.toDF()
+    val prov = df.filter(col("pred") === ProvPred)
+      .join(alias, col("subj") === alias("surface"))
+      .select(alias("canonical").as("subj"), col("pred"), col("obj"),
+        col("url"), col("score"))
+      .distinct()
+    df.filter(col("pred") =!= ProvPred).unionByName(prov).as[Triple]
+  }
 
   /** Connector-word → predicate table for pattern extraction. */
   val patternPreds: Map[String, String] = Map(
@@ -187,61 +151,40 @@ object Relations {
     }
   }
 
-  /** [[mentionedIn]] WITHOUT the distinct shuffle, for mention datasets
-    * whose rows are url-contiguous within partitions (the scan stages'
-    * natural output: all of a page's segments — hence all its mentions —
-    * come from one flatMap element) and an alias map that fits the driver
-    * (the [[graft.canon.Canon.AliasMap]] shape). Per consecutive same-url
-    * run the rewrite + dedup is [[provLocal]] — the streaming flagship's
-    * exact provenance op, valid because urls are unique per feed/corpus so
-    * page-local distinct equals the global distinct. Same loud-guard
-    * discipline as [[cooccurrenceContiguous]]: a url reappearing after its
-    * run closed throws, never silently duplicates provenance.
-    */
-  def mentionedInContiguous(mentions: Dataset[Mention],
-      canon: Map[String, String]): Dataset[Triple] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(canon)
-    mentions.mapPartitions { it =>
-      val cm = bc.value
-      val buf = it.buffered
-      val closed = new java.util.HashSet[String]()
-      new Iterator[Triple] {
-        private var out: Iterator[Triple] = Iterator.empty
-        private def advance(): Unit = {
-          while (!out.hasNext && buf.hasNext) {
-            val url = buf.head.url
-            if (!closed.add(url))
-              throw new IllegalStateException(
-                s"mentionedInContiguous: url $url reappeared after its run " +
-                  "closed — input is not url-contiguous; use mentionedIn")
-            val group = scala.collection.mutable.ListBuffer.empty[Mention]
-            while (buf.hasNext && buf.head.url == url) group += buf.next()
-            out = provLocal(group.toList, url, cm).iterator
-          }
-        }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Triple = { advance(); out.next() }
-      }
-    }
-  }
-
   /** ONE fused pass over url-contiguous mentions producing BOTH triple
-    * legs: per-segment co-occurrence pairing ([[coocLocal]]) and page-local
-    * canonical provenance ([[provLocal]]) — the batch twin of the streaming
-    * fused stage, over the mention table instead of raw pages. Equals
-    * [[cooccurrenceContiguous]] ∪ [[mentionedInContiguous]] as a multiset
-    * while reading the (cached) mention table ONCE instead of twice — in
-    * the flagship that halves the post-scan passes. Same loud contiguity
-    * guards: a url OR a segment key reappearing after its run closed
-    * throws, never silently duplicates triples. A url split ACROSS
-    * partitions is not detectable here; the callers' clustering that rules
-    * it out is described at [[cooccurrenceContiguous]] (`Submit batch`
-    * enforces it with its bucket exchange and per-partition sort).
+    * legs with no shuffle: per-segment co-occurrence pairing
+    * ([[coocLocal]]) and page-local provenance — the batch twin of the
+    * streaming fused stage, over the mention table instead of raw pages.
+    * `Some(map)` rewrites provenance subjects through the broadcast alias
+    * map ([[provLocal]]), and the output equals [[cooccurrence]] ∪
+    * [[mentionedIn]] as a multiset. `None` keeps them RAW surfaces for a
+    * [[rewriteProv]] join against an alias DataFrame, or for a later
+    * compaction when there is no alias table yet.
+    *
+    * Contiguity contract: all of a url's mentions are consecutive rows of
+    * ONE partition, and within that run each (page, seg_no) segment's rows
+    * are consecutive. Then per-segment distinct equals `cooccurrence`'s
+    * collect_set and per-url provenance dedup equals `mentionedIn`'s global
+    * distinct. The scan stages emit this shape naturally (a page's mentions
+    * come from one flatMap element; cache() and deterministic recompute
+    * preserve row order) — the grouping a shuffle would establish is
+    * already present in the data, the optimizer just cannot see it.
+    *
+    * Safety: per-partition sets of closed urls and closed segment keys turn
+    * an intra-partition violation (e.g. a shuffled or re-sorted mention
+    * table) into a LOUD error, never silently wrong triples. A url split
+    * ACROSS partitions without an intra-partition repeat is not detectable
+    * here, so callers establish contiguity by construction:
+    * [[graft.Submit]]'s `batch` clusters its mentions with one exchange on
+    * the sink bucket (a function of url) and sorts each partition by (url,
+    * page, seg_no), which also merges a re-crawled url's rows into one run;
+    * the [[graft.pipeline.Pipeline]] flagship reads the scan output, whose
+    * memo re-clusters by url. The one caller is
+    * [[graft.pipeline.Pipeline.triples]]; RelationsSpec pins it equal to
+    * the reference legs on the live corpus for every alias shape.
     */
   def triplesContiguous(mentions: Dataset[Mention],
-      canon: Map[String, String]): Dataset[Triple] = {
+      canon: Option[Map[String, String]]): Dataset[Triple] = {
     val spark = mentions.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(canon)

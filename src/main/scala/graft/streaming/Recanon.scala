@@ -27,7 +27,7 @@ import graft.util.SinkFs
   * of work the streaming sink itself pays per micro-batch). The alias map
   * joins without a broadcast hint, so Catalyst broadcasts it while it fits
   * and shuffles past that — the same unbounded-dimension policy as
-  * [[Streaming.rewriteProv]]. All driver-side metadata ops go through the
+  * [[Relations.rewriteProv]]. All driver-side metadata ops go through the
   * Hadoop FileSystem of the sink URI ([[graft.util.SinkFs]]), so the job
   * works on object-store sinks, not only file://.
   *

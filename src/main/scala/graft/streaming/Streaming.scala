@@ -113,9 +113,9 @@ object Streaming {
   /** [[pageTriples]] without the closure alias map — the
     * [[graft.canon.Canon.AliasFrame]] form for dimensions too large to
     * driver-collect: provenance rows carry the RAW surface as subj
-    * ([[Relations.provLocalRaw]]) and the sink joins them to canonical via
-    * [[rewriteProv]] per micro-batch. Co-occurrence rows are identical to
-    * [[pageTriples]]'s.
+    * ([[Relations.provLocal]] without a map) and the sink joins them to
+    * canonical via [[Relations.rewriteProv]] per micro-batch. Co-occurrence
+    * rows are identical to [[pageTriples]]'s.
     */
   def pageTriplesRaw(pages: Dataset[Page], gazetteer: Array[(String, String)],
       fuzzyThreshold: Double = graft.model.Config.TokenFuzzyThreshold): Dataset[Triple] =
@@ -146,36 +146,9 @@ object Streaming {
             pageMentions ++= ms
             Relations.coocLocal(ms, url)
           }
-          val prov = canon match {
-            case Some(c) => Relations.provLocal(pageMentions.result(), url, c)
-            case None => Relations.provLocalRaw(pageMentions.result(), url)
-          }
-          cooc ++ prov
+          cooc ++ Relations.provLocal(pageMentions.result(), url, canon)
         }
       }
-  }
-
-  /** Sink-side provenance rewrite for the [[graft.canon.Canon.AliasFrame]]
-    * path: raw-surface provenance rows (pred == [[Relations.ProvPred]],
-    * distinguishable because the predicate never occurs in the
-    * co-occurrence rules) equi-join subj → canonical against the alias
-    * DataFrame, then dedup — page-local surface-distinct leaves exactly the
-    * two-surfaces-one-canonical residue, and because urls are unique per
-    * feed and a page lands in ONE micro-batch, batch-level distinct equals
-    * the batch flagship's global distinct. No broadcast hint: Catalyst
-    * broadcasts the dimension side while it fits, shuffles past that —
-    * which is the whole point of this branch.
-    */
-  def rewriteProv(batch: Dataset[Triple], alias: DataFrame): Dataset[Triple] = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val df = batch.toDF()
-    val prov = df.filter(col("pred") === Relations.ProvPred)
-      .join(alias, col("subj") === alias("surface"))
-      .select(alias("canonical").as("subj"), col("pred"), col("obj"),
-        col("url"), col("score"))
-      .distinct()
-    df.filter(col("pred") =!= Relations.ProvPred).unionByName(prov).as[Triple]
   }
 
   /** Streaming form of the flagship: readStream over a parquet directory of
@@ -373,10 +346,10 @@ object Streaming {
   /** [[startTriplesStreamMaterialized]] over either [[graft.canon.Canon
     * .AliasSnapshot]] shape (use [[graft.canon.Canon.snapshotBounded]] to
     * pick): AliasMap rewrites provenance inside the fused map-only stage;
-    * AliasFrame defers it to a per-micro-batch [[rewriteProv]] join in
-    * foreachBatch, keeping the job runnable when the alias dimension is too
-    * large to driver-collect. Both shapes produce identical sink contents
-    * (StreamingSpec pins the equivalence). `bucketOf` picks the sink's
+    * AliasFrame defers it to a per-micro-batch [[Relations.rewriteProv]]
+    * join in foreachBatch, keeping the job runnable when the alias
+    * dimension is too large to driver-collect. Both shapes produce
+    * identical sink contents (StreamingSpec pins the equivalence). `bucketOf` picks the sink's
     * bucket scheme (doc-id for the oracle surfaces, url-hash for arbitrary
     * production urls — [[graft.materialize.Materialize.hashBucketCol]]).
     */
@@ -394,7 +367,7 @@ object Streaming {
           identity[Dataset[Triple]] _)
       case AliasFrame(df, _) =>
         (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
-          (b: Dataset[Triple]) => rewriteProv(b, df))
+          (b: Dataset[Triple]) => Relations.rewriteProv(b, df))
       case AliasNone =>
         (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
           identity[Dataset[Triple]] _)

@@ -24,70 +24,68 @@ class RelationsSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("cooccurrenceContiguous ≡ cooccurrence on the live scan output") {
-    // mentionsCached, not mentions: exercises contiguity THROUGH the memo's
-    // url-hash re-clustering exchange, the riskier of the two shapes
-    val ms = Pipeline.mentionsCached(spark, sfTiny)
-    val grouped = graft.relations.Relations.cooccurrence(ms)
-      .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    val contiguous = graft.relations.Relations.cooccurrenceContiguous(ms)
-      .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    assert(contiguous == grouped)
-  }
+  private def rows(ts: Array[graft.model.Triple]) =
+    ts.map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
 
-  test("cooccurrenceContiguous fails loudly on non-contiguous input (never wrong triples)") {
+  test("triplesContiguous fails loudly on non-segment-contiguous input (map and raw)") {
     import spark.implicits._
     import graft.model.Mention
-    // two interleaved segments in ONE partition: key A, key B, key A again
+    // two interleaved segments of one url in ONE partition: A, B, A again
     val ms = Seq(
       Mention("u1", 1, 1, "Ada Person", "PERSON", 0, 10, 1.0),
       Mention("u1", 1, 2, "Some Org", "ORG", 0, 8, 1.0),
       Mention("u1", 1, 1, "Acme Law", "LAW", 20, 28, 1.0)
     ).toDS().coalesce(1)
-    val e = intercept[org.apache.spark.SparkException] {
-      graft.relations.Relations.cooccurrenceContiguous(ms).collect()
+    Seq(Some(Map("Ada Person" -> "Ada Person")), None).foreach { canon =>
+      val e = intercept[org.apache.spark.SparkException] {
+        graft.relations.Relations.triplesContiguous(ms, canon).collect()
+      }
+      assert(e.getMessage.contains("not segment-contiguous") ||
+        Option(e.getCause).exists(_.getMessage.contains("not segment-contiguous")), canon)
     }
-    assert(e.getMessage.contains("not segment-contiguous") ||
-      Option(e.getCause).exists(_.getMessage.contains("not segment-contiguous")))
   }
 
-  test("mentionedInContiguous ≡ mentionedIn on the live scan output") {
-    val ms = Pipeline.mentionsCached(spark, sfTiny)
-    val canonDf = Pipeline.canonCached(spark, sfTiny)
-    val joined = graft.relations.Relations.mentionedIn(ms, canonDf)
-      .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    val contiguous = graft.relations.Relations.mentionedInContiguous(
-        ms, graft.canon.Canon.snapshot(canonDf))
-      .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    assert(contiguous == joined)
-  }
-
-  test("triplesContiguous ≡ cooccurrence ∪ mentionedIn on the live scan output") {
-    val ms = Pipeline.mentionsCached(spark, sfTiny)
-    val canonDf = Pipeline.canonCached(spark, sfTiny)
-    val fused = graft.relations.Relations.triplesContiguous(
-        ms, graft.canon.Canon.snapshot(canonDf))
-      .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    val legs = (graft.relations.Relations.cooccurrence(ms).collect() ++
-        graft.relations.Relations.mentionedIn(ms, canonDf).collect())
-      .map(t => (t.subj, t.pred, t.obj, t.url, t.score)).sorted.toSeq
-    assert(fused == legs)
-  }
-
-  test("mentionedInContiguous fails loudly on non-url-contiguous input") {
+  test("triplesContiguous fails loudly on non-url-contiguous input (map and raw)") {
     import spark.implicits._
     import graft.model.Mention
+    // url u1, then u2, then u1 again in ONE partition
     val ms = Seq(
       Mention("u1", 1, 1, "Ada Person", "PERSON", 0, 10, 1.0),
       Mention("u2", 1, 1, "Ada Person", "PERSON", 0, 10, 1.0),
       Mention("u1", 1, 2, "Ada Person", "PERSON", 5, 15, 1.0)
     ).toDS().coalesce(1)
-    val e = intercept[org.apache.spark.SparkException] {
-      graft.relations.Relations.mentionedInContiguous(
-        ms, Map("Ada Person" -> "Ada Person")).collect()
+    Seq(Some(Map("Ada Person" -> "Ada Person")), None).foreach { canon =>
+      val e = intercept[org.apache.spark.SparkException] {
+        graft.relations.Relations.triplesContiguous(ms, canon).collect()
+      }
+      assert(e.getMessage.contains("not url-contiguous") ||
+        Option(e.getCause).exists(_.getMessage.contains("not url-contiguous")), canon)
     }
-    assert(e.getMessage.contains("not url-contiguous") ||
-      Option(e.getCause).exists(_.getMessage.contains("not url-contiguous")))
+  }
+
+  test("triplesContiguous ≡ cooccurrence ∪ mentionedIn on the live scan output") {
+    import org.apache.spark.sql.functions.col
+    import graft.canon.Canon
+    import graft.relations.Relations
+    // Pipeline.triples — the one composition over triplesContiguous — under
+    // every alias shape. mentionsCached, not mentions: exercises contiguity
+    // THROUGH the memo's url-hash re-clustering exchange.
+    val ms = Pipeline.mentionsCached(spark, sfTiny)
+    val canonDf = Pipeline.canonCached(spark, sfTiny)
+    val cooc = Relations.cooccurrence(ms).collect()
+    val reference = rows(cooc ++ Relations.mentionedIn(ms, canonDf).collect())
+    val map = Canon.snapshotBounded(canonDf)
+    val frame = Canon.snapshotBounded(canonDf, maxRows = 0)
+    assert(map.isInstanceOf[Canon.AliasMap] && frame.isInstanceOf[Canon.AliasFrame])
+    Seq(map, frame).foreach { snap =>
+      assert(rows(Pipeline.triples(ms, snap).collect()) == reference, snap.getClass.getSimpleName)
+    }
+    // AliasNone: raw provenance = mentionedIn under the identity alias map
+    val identity = ms.toDF().filter(col("label") === "PERSON")
+      .select(col("surface"), col("surface").as("canonical")).distinct()
+    val raw = rows(cooc ++ Relations.mentionedIn(ms, identity).collect())
+    assert(raw != reference, "the corpus plants aliases, so raw provenance must differ")
+    assert(rows(Pipeline.triples(ms, Canon.AliasNone).collect()) == raw)
   }
 
   test("flagship entry() returns triples on sf0.001") {

@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     // The fused stage without the closure map + sink-side rewrite must
     // reproduce the batch flagship exactly (grouped multisets).
     val raw = Streaming.pageTriplesRaw(pages, gaz)
-    val rewritten = Streaming.rewriteProv(raw, canonDf)
+    val rewritten = graft.relations.Relations.rewriteProv(raw, canonDf)
     assert(grouped(rewritten.collect()) == grouped(batch.collect()))
     // End-to-end through the materialized sink on the join branch.
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-frame-spec")
