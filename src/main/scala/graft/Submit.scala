@@ -4,9 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import graft.canon.Canon
-import graft.extract.Extract
 import graft.materialize.Materialize
-import graft.mentions.Mentions
 import graft.model.{Gazetteer, Mention, Page}
 import graft.pipeline.Pipeline
 import graft.sources.Pages
@@ -14,7 +12,7 @@ import graft.streaming.{Recanon, Streaming}
 
 /** Production entry point — the engine as a spark-submit job (north rule:
   * "run via spark-submit on a multi-executor cluster"). Unlike the sandbox
-  * mains (Bench/Verify/StreamBench), this one sets NO master and no
+  * mains (Bench/Verify/Harness), this one sets NO master and no
   * parallelism config: cluster shape comes entirely from spark-submit
   * (`--master`, `--num-executors`, `--conf spark.sql.shuffle.partitions`),
   * so the same jar runs unchanged at N and 4N executors. The engine has no
@@ -202,7 +200,7 @@ object Submit {
       maxRows: Long = Canon.SnapshotMaxRows): Seq[Materialize.LineageRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val tagged = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).toDF()
+    val tagged = Pipeline.mentions(pages, gazetteer).toDF()
       .withColumn("bucket", bucketOf(nBuckets)).cache()
     try {
       val canon = Canon.canonicalMap(tagged.as[Mention])
@@ -269,8 +267,7 @@ object Submit {
     val state = req(opts, "state")
     // Both canon paths consume the mentions once, into their checkpointed
     // stats, so the scan needs no cut of its own.
-    val ms = Mentions.scanWithRecall(
-      Extract.segments(Pages.fromParquet(spark, req(opts, "input"))),
+    val ms = Pipeline.mentions(Pages.fromParquet(spark, req(opts, "input")),
       gazetteerOf(spark, opts))
     def done(v: Int): Boolean = SinkFs.exists(spark, s"$state/v$v/_DONE")
     // The state tables are this job's own output, so their schemas are
@@ -310,10 +307,11 @@ object Submit {
     * shape where history is never rescanned. Same `_DONE`-flagged version
     * discipline as `refresh`; each version also materializes `new_docs`,
     * the batch's append set (first occurrence of every hash the index has
-    * not seen). The input is a delta BY CONTRACT, like `refresh`'s. */
+    * not seen). The input is a delta BY CONTRACT, like `refresh`'s. The
+    * summary line's counts are observed on the two writes. */
   private def runDedup(spark: SparkSession, opts: Map[String, String]): Unit = {
     import graft.util.SinkFs
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, count, lit}
     val index = req(opts, "index")
     // Collapse the delta once (lazy cut): the fold write and the new-docs
     // write both consume it.
@@ -333,24 +331,26 @@ object Submit {
           graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
     }
     val next = cur.map(_ + 1).getOrElse(0)
-    folded.write.mode("overwrite").parquet(s"$index/v$next/index")
-    newDocs.write.mode("overwrite").parquet(s"$index/v$next/new_docs")
+    val nIndex = org.apache.spark.sql.Observation()
+    val nNew = org.apache.spark.sql.Observation()
+    folded.observe(nIndex, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$index/v$next/index")
+    newDocs.observe(nNew, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$index/v$next/new_docs")
     SinkFs.touch(spark, s"$index/v$next/_DONE")
     // Keep the published version and its predecessor; reclaim older and
     // unflagged crash residue — same policy as refresh.
     versions.filter(v => cur.exists(_ > v) || !done(v))
       .foreach(v => SinkFs.deleteLoud(spark, s"$index/v$v"))
-    val n = spark.read.parquet(s"$index/v$next/index").count()
-    val nNew = spark.read.parquet(s"$index/v$next/new_docs").count()
-    println(s"[submit] dedup: $how -> v$next ($n fingerprints, $nNew new docs)")
+    println(s"[submit] dedup: $how -> v$next (${nIndex.get("n")} fingerprints, " +
+      s"${nNew.get("n")} new docs)")
   }
 
   private def runCompact(spark: SparkSession, opts: Map[String, String]): Unit = {
     val canon: DataFrame = opts.get("canon") match {
       case Some(p) => spark.read.parquet(p)
-      case None => Canon.canonicalMap(Mentions.scanWithRecall(
-        Extract.segments(Pages.fromParquet(spark, req(opts, "input"))),
-        gazetteerOf(spark, opts)))
+      case None => Canon.canonicalMap(Pipeline.mentions(
+        Pages.fromParquet(spark, req(opts, "input")), gazetteerOf(spark, opts)))
     }
     // No --buckets here: the rewrite preserves each row's existing bucket
     // (a compaction re-canonicalizes subjects, it never re-partitions).

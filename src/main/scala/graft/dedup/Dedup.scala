@@ -237,7 +237,7 @@ object Dedup {
     * One native map expression ([[SimHash64]]) — the fingerprint is a
     * document-local aggregate, so it never shuttles token rows through a
     * shuffle. The previous aggregate form (explode → distinct → 64 sum
-    * aggregates) is kept in DedupScaleBench as the measured baseline: it
+    * aggregates) is kept in `graft.Harness dedup` as the measured baseline: it
     * shuffled every token row twice and ran 64 substring+conv string ops
     * per token (BENCH/dedup_scale.json).
     */

@@ -154,30 +154,6 @@ object Extract {
     case _ => None
   }
 
-  /** Strip all tags from a fragment (inline use; kept for tests/back-compat —
-    * the segmenting parser above does this inline with recovery).
-    */
-  def stripTags(s: String): String = {
-    if (s.indexOf('<') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    var inTag = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '<') inTag = true
-      else if (c == '>') inTag = false
-      else if (!inTag) sb.append(c)
-      i += 1
-    }
-    sb.toString
-  }
-
-  def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    s.replace("&amp;", "&").replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&#39;", "'").replace("&nbsp;", " ")
-  }
-
   /** Dataset[Page] → Dataset[Segment]. seg_no restarts at 1 per page like
     * the reference's per-page renumbering (OllamaNERExtractor.py:192-198);
     * web pages are single-page so page=1 throughout.

@@ -1,15 +1,17 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness.{Env, minOf, secs}
 import graft.similarity.Ann
 
 /** Corpus-scale evidence for the ANN paths (BENCH/BASELINE.md "IVF-flat
   * ANN"): the sandbox embeddings table is 2,000 rows — enough for the
-  * oracle hash gate, useless for a throughput claim. This main synthesizes
-  * a clustered corpus at the million-vector dimension DISTRIBUTED (a
-  * `spark.range` projection, staged to parquet — never driver-side), then
-  * times, per the repo's noise protocol (untimed warm-up, min of reps):
+  * oracle hash gate, useless for a throughput claim. `graft.Harness ann`
+  * synthesizes a clustered corpus at the million-vector dimension
+  * DISTRIBUTED (a `spark.range` projection, staged to parquet — never
+  * driver-side), then times, per the repo's noise protocol (untimed
+  * warm-up, min of reps):
   *
   *  - `build`: nearest-centroid assignment of every corpus vector
   *    ([[Ann.ivfAssignCol]], the native [[graft.similarity.CentroidArgmax]]
@@ -26,31 +28,20 @@ import graft.similarity.Ann
   * Corpus: `nClusters` well-separated centers (deterministic sin basis,
   * same construction as AnnSpec's clustered fixture) + 5% per-member
   * deterministic noise; vec_id-keyed so runs are bit-reproducible. One
-  * JSON line to stdout; SPARK_GRAFT_ANN_N / _K / _PROBE / _CPUS / _REPS
-  * override the defaults.
+  * JSON line; SPARK_GRAFT_ANN_N / _K / _PROBE / _QUERIES, SPARK_GRAFT_CPUS
+  * and SPARK_GRAFT_REPS (default 2) override the defaults.
   */
-object AnnScaleBench {
+object AnnScale {
 
-  import graft.util.BenchProto.minOf
-
-  def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_ANN_N", "2000000").toLong
-    val k = sys.env.getOrElse("SPARK_GRAFT_ANN_K", "256").toInt
-    val nProbe = sys.env.getOrElse("SPARK_GRAFT_ANN_PROBE", "16").toInt
-    val nQueries = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES", "50").toInt
+  def run(spark: SparkSession, env: Env): String = {
+    val n = env.long("SPARK_GRAFT_ANN_N", 2000000L)
+    val k = env.int("SPARK_GRAFT_ANN_K", 256)
+    val nProbe = env.int("SPARK_GRAFT_ANN_PROBE", 16)
+    val nQueries = env.int("SPARK_GRAFT_ANN_QUERIES", 50)
     val nClusters = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ANN_REPS", "2").toInt)
-    val runBrute = sys.env.getOrElse("SPARK_GRAFT_ANN_BRUTE", "1") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = env.cpus
+    val reps = env.reps(2)
+    val runBrute = env.get("SPARK_GRAFT_ANN_BRUTE").getOrElse("1") == "1"
 
     // Distributed synthesis: cluster center c = id % nClusters on a sin
     // basis, plus 5% deterministic per-member noise (AnnSpec's clustered
@@ -62,7 +53,7 @@ object AnnScaleBench {
         expr(s"transform(sequence(0, ${dim - 1}), i -> " +
           s"sin((id % $nClusters) * $dim + i) + 0.05d * sin(id * 997 + i * 131))")
           .as("v"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(staged)
     def emb: DataFrame = spark.read.parquet(staged)
 
@@ -107,9 +98,9 @@ object AnnScaleBench {
     // pairs; hash components are genuinely independent, so random pairs sit
     // ~8σ below it) + a planted +0.01 first-component variant for every
     // 10th id (Dedup.embCorpus's construction at scale).
-    val lshPlanes = sys.env.getOrElse("SPARK_GRAFT_ANN_LSH_PLANES", "20").toInt
+    val lshPlanes = env.int("SPARK_GRAFT_ANN_LSH_PLANES", 20)
     val (lshSec, lshReps, lshPairs, lshRecall) =
-      if (sys.env.getOrElse("SPARK_GRAFT_ANN_LSH", "1") == "1") {
+      if (env.get("SPARK_GRAFT_ANN_LSH").getOrElse("1") == "1") {
         val stagedU = graft.util.TempDirs.scratch("graft-ann-scale") + "/embu"
         val base = spark.range(n).select(col("id").as("vec_id"),
           expr(s"transform(sequence(0, ${dim - 1}), i -> " +
@@ -118,7 +109,7 @@ object AnnScaleBench {
           .select((col("vec_id") + n).as("vec_id"),
             expr("concat(array(element_at(v, 1) + 0.01d), slice(v, 2, size(v) - 1))").as("v"))
           .unionByName(base)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(stagedU)
         def embU: DataFrame = spark.read.parquet(stagedU)
         val (s, rs, found) = minOf(reps) {
@@ -130,17 +121,14 @@ object AnnScaleBench {
         (s, rs, total, found.toDouble / ((n + 9) / 10)) // planted = ceil(n/10)
       } else (-1.0, Seq.empty[Double], -1L, -1.0)
 
-    def fmt(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    println(
-      s"""{"metric":"ann_scale","n_vectors":$n,"dim":$dim,"n_clusters":$nClusters,""" +
+    s"""{"metric":"ann_scale","n_vectors":$n,"dim":$dim,"n_clusters":$nClusters,""" +
       s""""k_centroids":$k,"n_probe":$nProbe,"n_queries":$nQueries,"cells":$nCells,""" +
-      s""""build_sec":${f"$buildSec%.3f"},"build_reps":${fmt(buildReps)},""" +
+      s""""build_sec":${f"$buildSec%.3f"},"build_reps":${secs(buildReps)},""" +
       s""""assign_mvec_per_sec":${f"${n / buildSec / 1e6}%.2f"},""" +
-      s""""ivf_topk_sec":${f"$ivfSec%.3f"},"ivf_reps":${fmt(ivfReps)},"ivf_rows":$nIvf,""" +
+      s""""ivf_topk_sec":${f"$ivfSec%.3f"},"ivf_reps":${secs(ivfReps)},"ivf_rows":$nIvf,""" +
       s""""brute_topk_sec":${f"$bruteSec%.3f"},"recall_at5":${f"$recall%.3f"},""" +
       s""""lsh_planes":$lshPlanes,"lsh_pairs_sec":${f"$lshSec%.3f"},""" +
-      s""""lsh_reps":${fmt(lshReps)},"lsh_pairs":$lshPairs,""" +
-      s""""lsh_planted_recall":${f"$lshRecall%.3f"},"cpus":$cpus}""")
-    spark.stop()
+      s""""lsh_reps":${secs(lshReps)},"lsh_pairs":$lshPairs,""" +
+      s""""lsh_planted_recall":${f"$lshRecall%.3f"},"cpus":$cpus}"""
   }
 }

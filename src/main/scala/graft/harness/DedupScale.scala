@@ -1,7 +1,8 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness.{Env, minOf, secs}
 import graft.dedup.Dedup
 
 /** Corpus-scale evidence for the text-dedup map side (shingling + MinHash
@@ -9,18 +10,18 @@ import graft.dedup.Dedup
   * stage every text-dedup path pays on ALL input bytes — at 100 TB it runs
   * before any pruning — so its per-row form matters more than any join
   * below it. [[Dedup.shingles]] now emits shingles from one native pass
-  * ([[graft.dedup.WordShingles]]); this main measures it against the
-  * pre-round-5 HOF form (inlined verbatim as the baseline), distinct-shingle
-  * counts `require`d equal, plus the full xxhash64 MinHash signature build
-  * over the native form — per the repo's noise protocol (untimed warm-up,
-  * min of reps).
+  * ([[graft.dedup.WordShingles]]); `graft.Harness dedup` measures it
+  * against the pre-round-5 HOF form (inlined verbatim as the baseline),
+  * distinct-shingle counts `require`d equal, plus the full xxhash64 MinHash
+  * signature build over the native form — per the repo's noise protocol
+  * (untimed warm-up, min of `SPARK_GRAFT_REPS`, default 2).
   *
   * Corpus: `SPARK_GRAFT_TS_N` docs (default 2M) × `SPARK_GRAFT_TS_TOKENS`
   * tokens (default 40) drawn xxhash64-uniform from a 5k-word vocabulary
   * (large enough that shingles are near-unique — worst case for the
   * distinct), synthesized DISTRIBUTED and staged to parquet.
   */
-object DedupScaleBench {
+object DedupScale {
 
   /** The pre-round-5 shingle plan, kept as the measured baseline. */
   private def shinglesHof(corpus: DataFrame): DataFrame =
@@ -76,29 +77,18 @@ object DedupScaleBench {
         when(col(s"acc$b") > 0, lit("1")).otherwise(lit("0"))): _*).as("simhash"))
   }
 
-  import graft.util.BenchProto.minOf
-
-  def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_TS_N", "2000000").toLong
-    val tokens = sys.env.getOrElse("SPARK_GRAFT_TS_TOKENS", "40").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_TS_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, env: Env): String = {
+    val n = env.long("SPARK_GRAFT_TS_N", 2000000L)
+    val tokens = env.int("SPARK_GRAFT_TS_TOKENS", 40)
+    val cpus = env.cpus
+    val reps = env.reps(2)
 
     val staged = graft.util.TempDirs.scratch("graft-dedup-scale") + "/docs"
     spark.range(n).select(col("id").as("doc_id"),
         expr(s"array_join(transform(sequence(0, ${tokens - 1}), i -> " +
           s"concat('w', cast(pmod(xxhash64(id, i), 5000) as string))), ' ')")
           .as("text"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(staged)
     def docs: DataFrame = spark.read.parquet(staged)
 
@@ -171,24 +161,21 @@ object DedupScaleBench {
     require(exFullSum == exIncrSum,
       s"incremental fold drift: full=$exFullSum incremental=$exIncrSum")
 
-    def fmt(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    println(
-      s"""{"metric":"dedup_scale","n_docs":$n,"tokens_per_doc":$tokens,""" +
+    s"""{"metric":"dedup_scale","n_docs":$n,"tokens_per_doc":$tokens,""" +
       s""""n_distinct_shingles":$natCount,"counts_equal":true,""" +
-      s""""shingle_native_sec":${f"$natSec%.3f"},"shingle_native_reps":${fmt(natReps)},""" +
+      s""""shingle_native_sec":${f"$natSec%.3f"},"shingle_native_reps":${secs(natReps)},""" +
       s""""shingle_native_mdocs_per_sec":${f"${n / natSec / 1e6}%.2f"},""" +
-      s""""shingle_hof_sec":${f"$hofSec%.3f"},"shingle_hof_reps":${fmt(hofReps)},""" +
-      s""""minhash_sig_sec":${f"$sigSec%.3f"},"minhash_sig_reps":${fmt(sigReps)},""" +
-      s""""simhash_fp_sec":${f"$fpSec%.3f"},"simhash_fp_reps":${fmt(fpReps)},""" +
-      s""""simhash_fp_gb_sec":${f"$fpGbSec%.3f"},"simhash_fp_gb_reps":${fmt(fpGbReps)},""" +
-      s""""simhash_pairs_sec":${f"$simSec%.3f"},"simhash_pairs_reps":${fmt(simReps)},""" +
-      s""""simhash_band_sec":${f"$bandSec%.3f"},"simhash_band_reps":${fmt(bandReps)},""" +
+      s""""shingle_hof_sec":${f"$hofSec%.3f"},"shingle_hof_reps":${secs(hofReps)},""" +
+      s""""minhash_sig_sec":${f"$sigSec%.3f"},"minhash_sig_reps":${secs(sigReps)},""" +
+      s""""simhash_fp_sec":${f"$fpSec%.3f"},"simhash_fp_reps":${secs(fpReps)},""" +
+      s""""simhash_fp_gb_sec":${f"$fpGbSec%.3f"},"simhash_fp_gb_reps":${secs(fpGbReps)},""" +
+      s""""simhash_pairs_sec":${f"$simSec%.3f"},"simhash_pairs_reps":${secs(simReps)},""" +
+      s""""simhash_band_sec":${f"$bandSec%.3f"},"simhash_band_reps":${secs(bandReps)},""" +
       s""""simhash_combo_candidates":$comboCands,"simhash_band_candidates":$bandCands,""" +
       s""""simhash_planted_pairs":$nPlanted,"simhash_pairs_exact":true,""" +
-      s""""exact_full_sec":${f"$exFullSec%.3f"},"exact_full_reps":${fmt(exFullReps)},""" +
-      s""""exact_incr_sec":${f"$exIncrSec%.3f"},"exact_incr_reps":${fmt(exIncrReps)},""" +
+      s""""exact_full_sec":${f"$exFullSec%.3f"},"exact_full_reps":${secs(exFullReps)},""" +
+      s""""exact_incr_sec":${f"$exIncrSec%.3f"},"exact_incr_reps":${secs(exIncrReps)},""" +
       s""""exact_incr_equal":true,""" +
-      s""""cpus":$cpus}""")
-    spark.stop()
+      s""""cpus":$cpus}"""
   }
 }

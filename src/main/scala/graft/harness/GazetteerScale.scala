@@ -1,7 +1,8 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness.{Env, minOf}
 import graft.extract.Extract
 import graft.mentions.{AhoCorasick, Mentions}
 import graft.model.Gazetteer
@@ -11,24 +12,16 @@ import graft.sources.Pages
   * (BENCH/BASELINE.md "gazetteer at 100k surfaces"): times the SAME exact
   * scan over the SAME cached amplified segment corpus with the 51-surface
   * test gazetteer vs a 100k-surface synthetic dimension, plus the one-off
-  * automaton build cost the `cached` amortization hides from tasks. One
-  * JSON line, min-of-reps per the repo's noise protocol.
+  * automaton build cost the `cached` amortization hides from tasks.
+  * `graft.Harness gazetteer`: one JSON line, min of `SPARK_GRAFT_REPS`
+  * (default 3) per the repo's noise protocol; SPARK_GRAFT_AMPLIFY
+  * defaults to 40.
   */
-object GazetteerBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "40").toInt
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_GAZ_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gazetteer-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object GazetteerScale {
+  def run(spark: SparkSession, env: Env): String = {
+    val (sfDir, cpus) = (env.sfDir, env.cpus)
+    val amplify = env.amplify(40)
+    val reps = env.reps(3)
 
     val segs = Extract.segments(Pages.synthesizeAmplified(spark, sfDir, amplify)).cache()
     val nSegs = segs.count()
@@ -42,8 +35,7 @@ object GazetteerBench {
     val buildSec = (System.nanoTime() - tB) / 1e9
 
     def timeScan(gaz: Array[(String, String)]): (Double, Long) = {
-      val (min, _, hits) =
-        graft.util.BenchProto.minOf(reps)(Mentions.scan(segs, gaz).toDF().count())
+      val (min, _, hits) = minOf(reps)(Mentions.scan(segs, gaz).toDF().count())
       (min, hits)
     }
     val (t51, hits51) = timeScan(Gazetteer.all.toArray)
@@ -57,7 +49,7 @@ object GazetteerBench {
     // Synthetic surfaces never hit the corpus, so both runs must produce
     // the IDENTICAL triple multiset — `require`d via content fingerprint.
     def timeFlagship(gaz: Array[(String, String)]): (Double, (Long, Long)) = {
-      val (min, _, fp) = graft.util.BenchProto.minOf(reps)(
+      val (min, _, fp) = minOf(reps)(
         graft.pipeline.Pipeline.flagshipChecksum(spark, sfDir, amplify, gaz))
       (min, fp)
     }
@@ -66,14 +58,6 @@ object GazetteerBench {
     require(fp51 == fp100k,
       s"flagship fingerprint drifted with the 100k dimension: $fp51 != $fp100k")
 
-    val json =
-      f"""{"metric":"gazetteer_scan","sf":"$sfDir","amplify":$amplify,"cpus":$cpus,"n_segments":$nSegs,"n_chars":$nChars,"build_100k_sec":$buildSec%.3f,"nodes_100k":${ac.nodeCount},"scan51_sec":$t51%.3f,"scan100k_sec":$t100k%.3f,"hits51":$hits51,"hits100k":$hits100k,"chars_per_sec_51":${(nChars / t51).toLong},"chars_per_sec_100k":${(nChars / t100k).toLong},"flagship51_sec":$f51%.3f,"flagship100k_sec":$f100k%.3f,"flagship_ratio":${f100k / f51}%.3f,"n_triples":${fp51._1},"reps":$reps}"""
-    println(json)
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("BENCH"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH/gazetteer_scale.json"), json + "\n")
-    } catch { case _: Throwable => () }
-    spark.stop()
+    f"""{"metric":"gazetteer_scan","sf":"$sfDir","amplify":$amplify,"cpus":$cpus,"n_segments":$nSegs,"n_chars":$nChars,"build_100k_sec":$buildSec%.3f,"nodes_100k":${ac.nodeCount},"scan51_sec":$t51%.3f,"scan100k_sec":$t100k%.3f,"hits51":$hits51,"hits100k":$hits100k,"chars_per_sec_51":${(nChars / t51).toLong},"chars_per_sec_100k":${(nChars / t100k).toLong},"flagship51_sec":$f51%.3f,"flagship100k_sec":$f100k%.3f,"flagship_ratio":${f100k / f51}%.3f,"n_triples":${fp51._1},"reps":$reps}"""
   }
 }

@@ -1,30 +1,23 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
-/** Plan-audit main: dumps `explain("formatted")` for the load-bearing
+/** Plan audit: dumps `explain("formatted")` for the load-bearing
   * queries to a markdown file (default PLANS.md) so broadcast choices,
   * pushdowns, and shuffle frontiers are reviewable without rerunning.
-  * Usage: runMain graft.Explain [outFile] [sfDir]
+  * Usage: runMain graft.Harness explain [outFile] [sfDir] (local[4]).
   *
   * Caveat: two query builders execute verification jobs at CONSTRUCTION
   * time (q_mentions runs the F5 containment count, q_tokens the
-  * plant-safety scan), so this main pays those jobs per dump and requires
+  * plant-safety scan), so the audit pays those jobs per dump and requires
   * sfDir to satisfy their invariants — keep it pointed at the sf0.001
   * fixture, where they cost seconds.
   */
-object Explain {
-  def main(args: Array[String]): Unit = {
+object PlanAudit {
+  def run(spark: SparkSession, args: Seq[String]): String = {
     val outFile = args.headOption.getOrElse("PLANS.md")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val audited = Seq(
       "q_pages", "q_mentions", "q_triples", "q_pattern_triples",
@@ -43,7 +36,7 @@ object Explain {
       "q_langid", "q_quality")
 
     val sb = new StringBuilder
-    sb.append("# PLANS — physical plan audit (generated by graft.Explain)\n\n")
+    sb.append("# PLANS — physical plan audit (generated by `graft.Harness explain`)\n\n")
     sb.append("What to look for: `PushedFilters`/`ReadSchema` on scans " +
       "(pruning), `BroadcastHashJoin` for dimension joins, `Exchange` nodes " +
       "only at intended shuffle frontiers, wide `WholeStageCodegen` spans.\n")
@@ -60,11 +53,11 @@ object Explain {
     // (ingest is map-only, scales with input splits) and ReadSchema pruned
     // to (url, html) — the fat text column never leaves the scan.
     {
-      val tmp = util.TempDirs.scratch("graft-explain-pages")
-      pipeline.Pipeline.pages(spark, sfDir).write.parquet(s"$tmp/pages")
+      val tmp = graft.util.TempDirs.scratch("graft-explain-pages")
+      graft.pipeline.Pipeline.pages(spark, sfDir).write.parquet(s"$tmp/pages")
       import spark.implicits._
       val pagesPq = spark.read.parquet(s"$tmp/pages").as[graft.model.Page]
-      val fused = streaming.Streaming.pageTriples(
+      val fused = graft.streaming.Streaming.pageTriples(
         pagesPq, graft.model.Gazetteer.all.toArray, Map.empty)
       val plan = fused.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -72,7 +65,6 @@ object Explain {
         s"(batch form of each micro-batch)\n\n```\n$plan```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)
-    println(s"[explain] wrote ${audited.size + 1} plans to $outFile")
-    spark.stop()
+    s"[explain] wrote ${audited.size + 1} plans to $outFile"
   }
 }

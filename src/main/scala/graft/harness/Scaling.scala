@@ -1,10 +1,10 @@
-package graft
+package graft.harness
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.{Env, secs, session}
 
-/** Scaling-efficiency measurement (BASELINE.md): the identical flagship job
-  * at local[8] and local[32], BOTH LEVELS IN ONE JVM via sequential
-  * SparkContexts, reps interleaved (8,32,8,32,...).
+/** `graft.Harness scaling` — scaling-efficiency measurement (BASELINE.md):
+  * the identical flagship job at local[8] and local[32], BOTH LEVELS IN ONE
+  * JVM via sequential SparkContexts, reps interleaved (8,32,8,32,...).
   *
   * One JVM matters on this sandbox: first-touch page faults to the
   * virtualized host are pathologically slow and made per-JVM timings vary
@@ -12,28 +12,15 @@ import org.apache.spark.sql.SparkSession
   * CPU work is stable at ±20%). Reusing one heap removes that noise from
   * the comparison; interleaving cancels any residual time-correlated drift.
   *
-  * Prints one JSON line: per-rep times, medians, efficiency = (T8/T32)/4.
+  * One JSON line: per-rep times, medians, efficiency = (T8/T32)/4.
+  * SPARK_GRAFT_REPS defaults to 3, SPARK_GRAFT_AMPLIFY to 800.
   */
-object ScalingBench {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dir: block-device I/O on this host adds run-to-run
-      // jitter that has nothing to do with CPU scaling
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+object Scaling {
 
   private def timedRun(cpus: Int, sfDir: String, amplify: Int): Double = {
-    val spark = session(cpus)
+    // tmpfs shuffle dir: block-device I/O on this host adds run-to-run
+    // jitter that has nothing to do with CPU scaling
+    val spark = session(cpus, "spark.local.dir" -> "/dev/shm/graft-spark")
     try {
       val t0 = System.nanoTime()
       // flagshipCount unpersists the rep's mention cache — interleaved reps
@@ -43,17 +30,17 @@ object ScalingBench {
     } finally spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def run(env: Env): String = {
+    val sfDir = env.sfDir
     // Default amplification is high on purpose: the per-run parallel work
     // must dwarf the ~5 s of fixed scheduler overhead per flagship run or
     // the 4× core comparison measures overhead, not scaling.
-    val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "800").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val amplify = env.amplify(800)
+    val reps = env.reps(3)
     // N and 4N cores (BASELINE.md allows any N; default 8→32). On one box,
     // 8→32 saturates the single memory bus — a contention that multi-node
     // scale-out does not have — so 2→8 is the fairer executor-scaling proxy.
-    val n = sys.env.getOrElse("SPARK_GRAFT_N", "8").toInt
+    val n = env.int("SPARK_GRAFT_N", 8)
     val n4 = 4 * n
 
     // warm the JVM at both levels, at reduced size (codegen + class init +
@@ -74,11 +61,9 @@ object ScalingBench {
     val (m8, m32) = (r8.min, r32.min)
     val eff = (t8 / t32) / 4.0
     val effMin = (m8 / m32) / 4.0
-    def arr(xs: Array[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-    println(
-      s"""{"metric":"scaling_efficiency","value":$eff,"n":$n,"t8_sec":$t8,"t32_sec":$t32,""" +
+    s"""{"metric":"scaling_efficiency","value":$eff,"n":$n,"t8_sec":$t8,"t32_sec":$t32,""" +
       s""""speedup":${t8 / t32},"efficiency_min":$effMin,"t8_min":$m8,"t32_min":$m32,""" +
-      s""""runs8":${arr(r8)},"runs32":${arr(r32)},""" +
-      s""""amplify":$amplify,"sf":"$sfDir"}""")
+      s""""runs8":${secs(r8)},"runs32":${secs(r32)},""" +
+      s""""amplify":$amplify,"sf":"$sfDir"}"""
   }
 }

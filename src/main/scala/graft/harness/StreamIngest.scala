@@ -1,15 +1,17 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.SparkSession
+import graft.Harness.{Env, secs}
 
-/** Streaming-flagship benchmark: drains the amplified pages corpus through
-  * the incremental Structured Streaming pages→triples job and reports
-  * sustained ingest throughput, for comparison against the batch flagship
-  * record in BENCH/BASELINE.md. Two modes (SPARK_GRAFT_STREAM_MODE):
+/** `graft.Harness stream` — streaming-flagship benchmark: drains the
+  * amplified pages corpus through the incremental Structured Streaming
+  * pages→triples job and reports sustained ingest throughput, for
+  * comparison against the batch flagship record in BENCH/BASELINE.md.
+  * Three modes (SPARK_GRAFT_STREAM_MODE):
   *
   *  - `drain` (default): the whole feed is pre-staged and drained with
   *    Trigger.AvailableNow — peak drain throughput, min of
-  *    SPARK_GRAFT_STREAM_REPS reps into fresh sink+checkpoint dirs.
+  *    SPARK_GRAFT_REPS (default 3) reps into fresh sink+checkpoint dirs.
   *  - `paced`: the feed dir starts EMPTY and a feeder thread lands files on
   *    a fixed cadence while the query runs on a ProcessingTime trigger —
   *    steady-state ingest. Reported: per-micro-batch wall-time percentiles
@@ -42,29 +44,20 @@ import org.apache.spark.sql.SparkSession
   * files-per-trigger), SPARK_GRAFT_TRIGGER_MS (ProcessingTime interval,
   * default 500).
   */
-object StreamBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "40").toInt
+object StreamIngest {
+  def run(spark: SparkSession, env: Env, mode: String): String = {
+    require(Seq("drain", "paced", "recanon").contains(mode),
+      s"unknown SPARK_GRAFT_STREAM_MODE '$mode' (drain|paced|recanon)")
+    val (sfDir, cpus) = (env.sfDir, env.cpus)
+    val amplify = env.amplify(40)
     // Micro-batch parallelism = files-per-trigger × splits-per-file: a
     // trigger smaller than the core count starves the fleet (measured:
     // local[8] BEAT local[32] at 4 files/trigger — BENCH/BASELINE.md), so
     // the default sizes each micro-batch to the session's parallelism and
     // stages 8 triggers' worth of files.
-    val perTrigger = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", cpus).toInt
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", (perTrigger * 8).toString).toInt
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "3").toInt)
-    val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "drain")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val perTrigger = env.int("SPARK_GRAFT_FILES_PER_TRIGGER", cpus)
+    val nFiles = env.int("SPARK_GRAFT_STREAM_FILES", perTrigger * 8)
+    val reps = env.reps(3)
 
     val gaz = graft.model.Gazetteer.all.toArray
     val tmp = graft.util.TempDirs.scratch("graft-stream-bench")
@@ -88,8 +81,7 @@ object StreamBench {
     // count-only check.
     import spark.implicits._
     val pagesPq = spark.read.parquet(in).as[graft.model.Page]
-    val ms = graft.mentions.Mentions
-      .scanWithRecall(graft.extract.Extract.segments(pagesPq), gaz).cache()
+    val ms = graft.pipeline.Pipeline.mentions(pagesPq, gaz).cache()
     // Materialize the mention cache UNTIMED before the canon timer starts:
     // cache() is lazy, so without this the first action inside the timed
     // region would charge the whole amplified-corpus scan to the 'periodic
@@ -113,7 +105,7 @@ object StreamBench {
 
     val json = mode match {
       case "paced" =>
-        runPaced(spark, tmp.toString, in, gaz, canon, nTriples, batchSum,
+        runPaced(spark, env, tmp.toString, in, gaz, canon, nTriples, batchSum,
           perTrigger, nFiles, amplify, cpus, canonSec, sfDir)
       case "recanon" =>
         runRecanon(spark, tmp.toString, in, gaz, aliasPath, nTriples, batchSum,
@@ -122,20 +114,14 @@ object StreamBench {
         runDrain(spark, tmp.toString, in, gaz, canon, nTriples, batchSum,
           perTrigger, nFiles, amplify, cpus, canonSec, sfDir, reps)
     }
-    println(json)
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("BENCH"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"BENCH/stream_${mode}_last.json"), json + "\n")
-    } catch { case _: java.io.IOException => () }
     graft.pipeline.Pipeline.evict(spark, sfDir)
-    spark.stop()
+    json
   }
 
   private def runDrain(spark: SparkSession, tmp: String, in: String,
       gaz: Array[(String, String)], canon: Map[String, String],
       nTriples: Long, batchSum: Long, perTrigger: Int, nFiles: Int,
-      amplify: Int, cpus: String, canonSec: Double, sfDir: String,
+      amplify: Int, cpus: Int, canonSec: Double, sfDir: String,
       reps: Int): String = {
     val repTimes = (1 to reps).map { r =>
       val out = s"$tmp/sink$r"; val ckpt = s"$tmp/ckpt$r"
@@ -153,8 +139,7 @@ object StreamBench {
     val drainSec = repTimes.min
     val medianSec = repTimes.sorted.apply(repTimes.length / 2)
     val microBatches = math.ceil(nFiles.toDouble / perTrigger).toInt
-    val repsJson = repTimes.map(t => f"$t%.3f").mkString("[", ",", "]")
-    s"""{"metric":"stream_triples_per_sec","value":${(nTriples / drainSec).toLong},"unit":"triples/sec","drain_sec":${f"$drainSec%.3f"},"drain_median_sec":${f"$medianSec%.3f"},"drain_reps":$repsJson,"noise_check":${f"${drainSec / medianSec}%.3f"},"n_triples":$nTriples,"micro_batches":$microBatches,"files":$nFiles,"files_per_trigger":$perTrigger,"amplify":$amplify,"cpus":$cpus,"canon_snapshot_sec":${f"$canonSec%.3f"},"sf":"$sfDir"}"""
+    s"""{"metric":"stream_triples_per_sec","value":${(nTriples / drainSec).toLong},"unit":"triples/sec","drain_sec":${f"$drainSec%.3f"},"drain_median_sec":${f"$medianSec%.3f"},"drain_reps":${secs(repTimes)},"noise_check":${f"${drainSec / medianSec}%.3f"},"n_triples":$nTriples,"micro_batches":$microBatches,"files":$nFiles,"files_per_trigger":$perTrigger,"amplify":$amplify,"cpus":$cpus,"canon_snapshot_sec":${f"$canonSec%.3f"},"sf":"$sfDir"}"""
   }
 
   /** Compaction-at-scale run: drain the feed RAW (no alias snapshot — the
@@ -169,9 +154,9 @@ object StreamBench {
   private def runRecanon(spark: SparkSession, tmp: String, in: String,
       gaz: Array[(String, String)], aliasPath: String,
       nTriples: Long, batchSum: Long, perTrigger: Int, nFiles: Int,
-      amplify: Int, cpus: String, canonSec: Double, sfDir: String): String = {
+      amplify: Int, cpus: Int, canonSec: Double, sfDir: String): String = {
     val out = s"$tmp/sink_raw"; val ckpt = s"$tmp/ckpt_raw"
-    // The alias table was materialized by main while the mention cache was
+    // The alias table was materialized by run while the mention cache was
     // live: the production compact reads the periodic batch job's WRITTEN
     // alias parquet (Submit's --canon-out → compact --canon flow).
     val aliasTable = spark.read.parquet(aliasPath)
@@ -203,15 +188,14 @@ object StreamBench {
     * count, independent of the sink's own metrics). Latency percentiles
     * come from the _metrics sidecar's per-batch wall_nanos.
     */
-  private def runPaced(spark: SparkSession, tmp: String, staged: String,
+  private def runPaced(spark: SparkSession, env: Env, tmp: String, staged: String,
       gaz: Array[(String, String)], canon: Map[String, String],
       nTriples: Long, batchSum: Long, perTrigger: Int, nFiles: Int,
-      amplify: Int, cpus: String, canonSec: Double, sfDir: String): String = {
+      amplify: Int, cpus: Int, canonSec: Double, sfDir: String): String = {
     import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
-    val tickMs = sys.env.getOrElse("SPARK_GRAFT_TICK_MS", "1000").toLong
-    val filesPerTick = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TICK",
-      perTrigger.toString).toInt
-    val triggerMs = sys.env.getOrElse("SPARK_GRAFT_TRIGGER_MS", "500").toLong
+    val tickMs = env.long("SPARK_GRAFT_TICK_MS", 1000L)
+    val filesPerTick = env.int("SPARK_GRAFT_FILES_PER_TICK", perTrigger)
+    val triggerMs = env.long("SPARK_GRAFT_TRIGGER_MS", 500L)
     val expectedPages = spark.read.parquet(staged).count()
     val parts = new java.io.File(staged).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)

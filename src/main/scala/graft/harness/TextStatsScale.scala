@@ -1,7 +1,8 @@
-package graft
+package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness.{Env, minOf, secs}
 import graft.textstats.TextStats
 
 /** Corpus-scale evidence for the per-document text stats (BENCH/BASELINE.md
@@ -10,18 +11,18 @@ import graft.textstats.TextStats
   * every token, broadcast-join the marker table, shuffle per-doc hit
   * counts, rank with a window, join back — pays four wide stages for it.
   * [[TextStats.langId]] now runs it as ONE narrow map expression
-  * ([[graft.textstats.LangBest]]); this main measures both forms on the
-  * same synthetic corpus (the shuffle form is inlined here verbatim as the
-  * comparison baseline) plus [[TextStats.quality]], at the
-  * million-document dimension, per the repo's noise protocol (untimed
-  * warm-up, min of reps).
+  * ([[graft.textstats.LangBest]]); `graft.Harness textstats` measures both
+  * forms on the same synthetic corpus (the shuffle form is inlined here
+  * verbatim as the comparison baseline) plus [[TextStats.quality]], at
+  * the million-document dimension, per the repo's noise protocol (untimed
+  * warm-up, min of `SPARK_GRAFT_REPS`, default 2).
   *
   * Corpus: `SPARK_GRAFT_TS_N` docs (default 2M) of `SPARK_GRAFT_TS_TOKENS`
   * tokens (default 40) drawn xxhash64-uniform from a 200-word vocabulary
   * (the 23 marker tokens + fillers), synthesized DISTRIBUTED and staged to
-  * parquet. One JSON line to stdout.
+  * parquet. One JSON line.
   */
-object TextStatsScaleBench {
+object TextStatsScale {
 
   /** The pre-round-5 langId plan, kept as the measured baseline. */
   private def langIdShuffle(docs: DataFrame): DataFrame = {
@@ -49,22 +50,11 @@ object TextStatsScaleBench {
     df.agg(sum(hash(col("doc_id"), col("pred_lang"), col("hits"))))
       .head.getLong(0)
 
-  import graft.util.BenchProto.minOf
-
-  def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_TS_N", "2000000").toLong
-    val tokens = sys.env.getOrElse("SPARK_GRAFT_TS_TOKENS", "40").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_TS_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-textstats-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, env: Env): String = {
+    val n = env.long("SPARK_GRAFT_TS_N", 2000000L)
+    val tokens = env.int("SPARK_GRAFT_TS_TOKENS", 40)
+    val cpus = env.cpus
+    val reps = env.reps(2)
 
     val vocab = (TextStats.markers.map(_._2) ++
       (0 until (200 - TextStats.markers.length)).map(i => f"w$i%03d")).toArray
@@ -74,7 +64,7 @@ object TextStatsScaleBench {
         expr(s"array_join(transform(sequence(0, ${tokens - 1}), i -> " +
           s"element_at($vocabLit, 1 + cast(pmod(xxhash64(id, i), ${vocab.length}) as int))), ' ')")
           .as("text"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(staged)
     def docs: DataFrame = spark.read.parquet(staged)
 
@@ -89,15 +79,12 @@ object TextStatsScaleBench {
         .head.getLong(0)
     }
 
-    def fmt(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    println(
-      s"""{"metric":"textstats_scale","n_docs":$n,"tokens_per_doc":$tokens,""" +
-      s""""langid_map_sec":${f"$mapSec%.3f"},"langid_map_reps":${fmt(mapReps)},""" +
+    s"""{"metric":"textstats_scale","n_docs":$n,"tokens_per_doc":$tokens,""" +
+      s""""langid_map_sec":${f"$mapSec%.3f"},"langid_map_reps":${secs(mapReps)},""" +
       s""""langid_map_mdocs_per_sec":${f"${n / mapSec / 1e6}%.2f"},""" +
-      s""""langid_shuffle_sec":${f"$shufSec%.3f"},"langid_shuffle_reps":${fmt(shufReps)},""" +
+      s""""langid_shuffle_sec":${f"$shufSec%.3f"},"langid_shuffle_reps":${secs(shufReps)},""" +
       s""""langid_content_equal":true,""" + // the require above compared per-doc checksums
-      s""""quality_sec":${f"$qSec%.3f"},"quality_reps":${fmt(qReps)},""" +
-      s""""cpus":$cpus}""")
-    spark.stop()
+      s""""quality_sec":${f"$qSec%.3f"},"quality_reps":${secs(qReps)},""" +
+      s""""cpus":$cpus}"""
   }
 }

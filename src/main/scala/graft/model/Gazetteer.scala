@@ -82,8 +82,8 @@ object Gazetteer {
 
   /** Deterministic synthetic PERSON surfaces at arbitrary dimension size —
     * the 100k-surface evidence corpus for the broadcast-automaton scale
-    * claims (GazetteerScaleSpec, graft.GazetteerBench). Each index maps to
-    * a unique two-word syllable name ("Bacedi Fogumu"); distinct for
+    * claims (GazetteerScaleSpec, `graft.Harness gazetteer`). Each index
+    * maps to a unique two-word syllable name ("Bacedi Fogumu"); distinct for
     * n ≤ 64M, disjoint from the real gazetteer (no real surface is a
     * syllable-product word), and shaped like the production dimension
     * (≈13 chars, two tokens).

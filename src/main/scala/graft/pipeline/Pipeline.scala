@@ -32,7 +32,14 @@ object Pipeline {
     Extract.segments(pages(spark, sfDir))
 
   def mentions(spark: SparkSession, sfDir: String): Dataset[Mention] =
-    Mentions.scanWithRecall(segments(spark, sfDir), Gazetteer.all.toArray)
+    mentions(pages(spark, sfDir), Gazetteer.all.toArray)
+
+  /** The one pages → mentions composition: segment the pages, then the
+    * exact automaton scan plus the fuzzy recall pass. The flagship,
+    * `Submit batch`/`refresh`/`compact` and the streaming benchmark's
+    * batch reference all run it. */
+  def mentions(pages: Dataset[Page], gazetteer: Array[(String, String)]): Dataset[Mention] =
+    Mentions.scanWithRecall(Extract.segments(pages), gazetteer)
 
   // Session-scoped memo of the cached mention Dataset: many SparkEntry
   // queries branch off the same scan, and Verify/Bench run them all in one
@@ -119,7 +126,7 @@ object Pipeline {
 
   /** Terminal flagship action for benchmarking: counts the amplified triples
     * and unpersists the run's mention cache afterwards, so repeated reps in
-    * one JVM (Bench min-of-3, ScalingBench interleaving) don't accumulate
+    * one JVM (Bench min-of-3, `graft.Harness scaling` interleaving) don't accumulate
     * cached Datasets across iterations.
     */
   def flagshipCount(spark: SparkSession, sfDir: String, factor: Int): Long =
@@ -128,7 +135,7 @@ object Pipeline {
   /** Order-insensitive content fingerprint of a triple set: row count plus
     * the SUM (mod 2^64) of per-row xxhash64 over all five columns. Sum, not
     * xor: xor cancels even multiplicities, so (count, sum-of-hashes) pins
-    * the multiset far tighter — StreamBench requires the streamed sink's
+    * the multiset far tighter — `graft.Harness stream` requires the streamed sink's
     * fingerprint equal the batch flagship's at full amplified scale, not
     * just the row count.
     */
@@ -145,12 +152,12 @@ object Pipeline {
 
   /** [[flagshipCount]] that also fingerprints the result — one job, same
     * cost shape as a plain count (map-side-combinable aggregate). The
-    * gazetteer is a parameter so GazetteerBench can time the IDENTICAL
+    * gazetteer is a parameter so `graft.Harness gazetteer` can time the IDENTICAL
     * end-to-end pipeline at the 100k-surface dimension. */
   def flagshipChecksum(spark: SparkSession, sfDir: String, factor: Int,
       gazetteer: Array[(String, String)] = Gazetteer.all.toArray): (Long, Long) = {
     val pages = Pages.synthesizeAmplified(spark, sfDir, factor)
-    val ms = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).cache()
+    val ms = mentions(pages, gazetteer).cache()
     try tripleChecksum(triples(ms, Canon.snapshotBounded(Canon.canonicalMap(ms))).toDF())
     finally ms.unpersist()
   }

@@ -151,7 +151,7 @@ case class SrpKeys(child: Expression, planes: Array[Array[Array[Double]]])
   * Exists for performance: the `transform`/`aggregate` column form is
   * CodegenFallback and evaluates per row with boxed elements; at the
   * million-vector dimension the normalization pass dominated the IVF
-  * index build (AnnScaleBench, BENCH/ann_scale.json). Same arithmetic,
+  * index build (`graft.Harness ann`, BENCH/ann_scale.json). Same arithmetic,
   * one codegen'd loop.
   */
 case class UnitVec(child: Expression) extends UnaryExpression {

@@ -57,7 +57,7 @@ object Recanon {
     * zero rows — a stale non-empty sidecar must not survive), one
     * StreamMetricRow overwrites `_metrics/batch-<b>`. Metric rows stamp
     * nanos=0: ONE job produced every batch's rows, so a per-batch wall
-    * time does not exist and is not faked (consumers like StreamBench's
+    * time does not exist and is not faked (consumers like `graft.Harness stream`'s
     * paced mode read `_metrics` nanos as per-batch ingest latency).
     */
   private def writeBatchSidecars(spark: SparkSession, outDir: String,

@@ -100,7 +100,7 @@ object Streaming {
     * each page arrives exactly once. Provenance dedup is page-local
     * ([[Relations.provLocal]]); a feed that repeats a url (re-crawls,
     * upstream dupes) emits duplicate (canonical, mentioned_in, url) triples
-    * where the batch form dedups globally. StreamBench's content-fingerprint
+    * where the batch form dedups globally. `graft.Harness stream`'s content-fingerprint
     * `require` catches a violation loudly; feeds that may repeat urls must
     * dedup upstream or compact the sink ([[Recanon.recanonicalize]] dedups
     * provenance per batch as a side effect, but not across batches).
@@ -160,33 +160,24 @@ object Streaming {
     */
   def triplesStream(spark: SparkSession, pagesDir: String,
       gazetteer: Array[(String, String)], canonSnapshot: Map[String, String],
-      maxFilesPerTrigger: Int = 1, rebalance: Boolean = false): Dataset[Triple] =
-    pageTriples(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance),
-      gazetteer, canonSnapshot)
+      maxFilesPerTrigger: Int = 1): Dataset[Triple] =
+    pageTriples(pagesStream(spark, pagesDir, maxFilesPerTrigger), gazetteer, canonSnapshot)
 
   /** The feed source, shared by every streaming entry point (the AliasMap
     * and AliasFrame shapes must read the feed IDENTICALLY or the
-    * "both branches produce the same sink" contract can drift).
-    *
-    * `rebalance` inserts one repartition(defaultParallelism) right after
-    * the source — guide §2.5's remedy for a COARSE feed (few small files ×
-    * maxFilesPerTrigger=1 means each micro-batch arrives as one split, and
-    * the expensive per-page fused stage then runs on one core while the
-    * rest idle; measured 0.33 s single-task batches on the staged bench
-    * feed). OFF by default: a production feed with well-split files gets
-    * its parallelism from the source, and rebalancing there would shuffle
-    * the full page payload for nothing. Page rows move whole, so the
-    * per-page computation and page-local dedup are unaffected.
+    * "both branches produce the same sink" contract can drift). A
+    * micro-batch's parallelism is its split count: a repartition after the
+    * source cost more than the single-task scan saves (32 cores: 7.07/3.71 s
+    * vs 6.53/3.42 s recanon/stream, OPTIMIZATION_r06.md §6).
     */
   private def pagesStream(spark: SparkSession, pagesDir: String,
-      maxFilesPerTrigger: Int, rebalance: Boolean = false): Dataset[Page] = {
+      maxFilesPerTrigger: Int): Dataset[Page] = {
     import spark.implicits._
-    val src = spark.readStream
+    spark.readStream
       .schema(Encoders.product[Page].schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(pagesDir)
       .as[Page]
-    if (rebalance) src.repartition(spark.sparkContext.defaultParallelism) else src
   }
 
   /** Drain everything currently available in `pagesDir` into a parquet sink
@@ -357,19 +348,18 @@ object Streaming {
       outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
       snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
       nBuckets: Int, trigger: Trigger,
-      bucketOf: Int => org.apache.spark.sql.Column = graft.materialize.Materialize.bucketCol,
-      rebalance: Boolean = false)
+      bucketOf: Int => org.apache.spark.sql.Column = graft.materialize.Materialize.bucketCol)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.canon.Canon.{AliasFrame, AliasMap, AliasNone}
     val (stream, rewrite) = snapshot match {
       case AliasMap(m, _) =>
-        (triplesStream(spark, pagesDir, gazetteer, m, maxFilesPerTrigger, rebalance),
+        (triplesStream(spark, pagesDir, gazetteer, m, maxFilesPerTrigger),
           identity[Dataset[Triple]] _)
       case AliasFrame(df, _) =>
-        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
+        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger), gazetteer),
           (b: Dataset[Triple]) => Relations.rewriteProv(b, df))
       case AliasNone =>
-        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
+        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger), gazetteer),
           identity[Dataset[Triple]] _)
     }
     stream
@@ -385,10 +375,10 @@ object Streaming {
   def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
       outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
       canonSnapshot: Map[String, String], maxFilesPerTrigger: Int = 1,
-      nBuckets: Int = 16, rebalance: Boolean = false): Unit =
+      nBuckets: Int = 16): Unit =
     runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
       gazetteer, graft.canon.Canon.AliasMap(canonSnapshot), maxFilesPerTrigger,
-      nBuckets, rebalance)
+      nBuckets)
 
   /** [[runTriplesStreamMaterialized]] over an [[graft.canon.Canon
     * .AliasSnapshot]]: drain everything available (AvailableNow) through the
@@ -397,36 +387,10 @@ object Streaming {
   def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
       outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
       snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int,
-      bucketOf: Int => org.apache.spark.sql.Column,
-      rebalance: Boolean): Unit =
-    startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets,
-      Trigger.AvailableNow(), bucketOf, rebalance).awaitTermination()
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int,
-      bucketOf: Int => org.apache.spark.sql.Column): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets, bucketOf,
-      rebalance = false)
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int, rebalance: Boolean): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets,
-      graft.materialize.Materialize.bucketCol, rebalance)
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
       nBuckets: Int): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets, rebalance = false)
+    startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
+      gazetteer, snapshot, maxFilesPerTrigger, nBuckets, Trigger.AvailableNow())
+      .awaitTermination()
 
   final case class SessState(nEvents: Long, nSessions: Long, lastTs: Long)
 

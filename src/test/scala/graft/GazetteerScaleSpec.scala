@@ -7,7 +7,7 @@ import graft.model.{Gazetteer, Segment}
   * scale story claims the broadcast automaton + per-partition build
   * amortization hold at a REAL deployment dimension (~100k surfaces), not
   * just the 51-surface test gazetteer. This spec evidences the design
-  * claims; graft.GazetteerBench records the throughput delta in
+  * claims; `graft.Harness gazetteer` records the throughput delta in
   * BENCH/BASELINE.md.
   */
 class GazetteerScaleSpec extends SparkSpec {

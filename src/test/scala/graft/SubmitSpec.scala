@@ -245,9 +245,20 @@ class SubmitSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val full = graft.dedup.Dedup.exact(corpus).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // runs one fold publishing v`v`; its summary line's counts must be the
+    // row counts of the published index and new_docs tables
+    def fold(v: Int, delta: String): Unit = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(Submit.run(spark,
+        Array("dedup", "--input", s"$dir/$delta", "--index", s"$dir/index")))
+      val printed = raw"-> v$v \((\d+) fingerprints, (\d+) new docs\)".r
+        .findFirstMatchIn(out.toString).getOrElse(fail(s"no v$v counts in: $out"))
+      assert(printed.group(1).toLong == spark.read.parquet(s"$dir/index/v$v/index").count())
+      assert(printed.group(2).toLong == spark.read.parquet(s"$dir/index/v$v/new_docs").count())
+    }
 
     // initial fold publishes v0 = exact dedup of delta0; new_docs = all of it
-    Submit.run(spark, Array("dedup", "--input", s"$dir/delta0", "--index", s"$dir/index"))
+    fold(0, "delta0")
     assert(new java.io.File(s"$dir/index/v0/_DONE").exists())
     assert(idx(0) == graft.dedup.Dedup.exact(corpus.filter(half === 0)).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
@@ -255,7 +266,7 @@ class SubmitSpec extends SparkSpec {
 
     // second fold: v1 must equal the full-corpus exact dedup; new_docs are
     // exactly the hashes v0 had not seen
-    Submit.run(spark, Array("dedup", "--input", s"$dir/delta1", "--index", s"$dir/index"))
+    fold(1, "delta1")
     assert(idx(1) == full)
     val newDocs = spark.read.parquet(s"$dir/index/v1/new_docs").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -266,7 +277,7 @@ class SubmitSpec extends SparkSpec {
 
     // empty third delta: index passes through, zero new docs, v0 reclaimed
     corpus.limit(0).write.parquet(s"$dir/delta_empty")
-    Submit.run(spark, Array("dedup", "--input", s"$dir/delta_empty", "--index", s"$dir/index"))
+    fold(2, "delta_empty")
     assert(idx(2) == full)
     assert(spark.read.parquet(s"$dir/index/v2/new_docs").count() == 0)
     val left = new java.io.File(s"$dir/index").listFiles().map(_.getName)
