@@ -147,8 +147,9 @@ object SparkEntry {
     }),
 
     // --- canonicalization heuristics + evaluation -------------------------
-    // distributed min-label CC path (hub split + vertex-subset edge filter),
-    // forced past the driver-local fast path — C1 at its scale shape
+    // distributed star-round CC path (vertex-subset edge filter; the RDD
+    // loop with a broadcast m table at this size), forced past the
+    // driver-local fast path — C1 at its scale shape
     "q_cc_dist" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
       val v = docs.select(format_string("v%07d", col("doc_id")).as("surface"))
@@ -486,7 +487,7 @@ object SparkEntry {
       val staleSnapshot = graft.canon.Canon.snapshot(canonDf)
         .keysIterator.map(k => k -> k).toMap
       graft.streaming.Streaming.runTriplesStreamMaterialized(s, in, out, ckpt,
-        graft.model.Gazetteer.all.toArray, staleSnapshot)
+        graft.model.Gazetteer.all.toArray, graft.canon.Canon.AliasMap(staleSnapshot))
       val report = Recanon.recanonicalize(s, out, canonDf)
       require(report.batchesRewritten.nonEmpty,
         "stale drain must trigger at least one batch rewrite")

@@ -213,8 +213,9 @@ object StreamIngest {
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
     val q = graft.streaming.Streaming.startTriplesStreamMaterialized(
-      spark, in, out, ckpt, gaz, canon, maxFilesPerTrigger = perTrigger,
-      nBuckets = 16, trigger = Trigger.ProcessingTime(triggerMs))
+      spark, in, out, ckpt, gaz, graft.canon.Canon.AliasMap(canon),
+      maxFilesPerTrigger = perTrigger, nBuckets = 16,
+      trigger = Trigger.ProcessingTime(triggerMs))
     val feeder = new Thread(() => {
       parts.grouped(filesPerTick).foreach { g =>
         // Land each file ATOMICALLY (copy to a dot-prefixed temp name the

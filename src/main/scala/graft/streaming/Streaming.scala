@@ -297,10 +297,10 @@ object Streaming {
     // Recanon can skip the staleness scan of batches already current under
     // a fresh map — steady-state compaction becomes metadata-only instead
     // of a full-history provenance scan per canon cadence. Unversioned
-    // (None — legacy Map-only entry points, or AliasNone raw drains) writes
-    // nothing: the batch stays a permanent scan candidate, which is the
-    // safe direction. Overwrite/delete keeps the at-least-once replay
-    // contract, same as the other two sidecars.
+    // (None — an AliasMap built without a fingerprint, or AliasNone raw
+    // drains) writes nothing: the batch stays a permanent scan candidate,
+    // which is the safe direction. Overwrite/delete keeps the at-least-once
+    // replay contract, same as the other two sidecars.
     val writeAlias: () => Unit = () => aliasFp match {
       case Some(f) =>
         Seq((batchId, f)).toDF("batch_id", "alias_fp")
@@ -311,36 +311,18 @@ object Streaming {
     graft.util.Par.run(Seq(writeLineage, writeMetrics, writeAlias))(_.apply())
   }
 
-  /** [[runTriplesStreamOnce]] with the materialized sink: same AvailableNow
-    * drain + checkpoint resume, but through [[materializedBatchWriter]] so
-    * the output is the partitioned table + lineage + metrics sidecars.
-    * Readers: `spark.read.parquet(s"$outDir/triples")` (batch_id and bucket
-    * come back as partition columns); sidecars are read with a one-level
-    * glob over the batch dirs (dollar-outDir/_lineage/ star — spelled out
-    * because a literal star-after-slash opens a nested Scala comment here).
-    */
   /** Start the materialized flagship stream with a caller-chosen trigger
-    * and return the live query (no await): the feeder-paced benchmark shape
-    * — files land in `pagesDir` WHILE the query runs on a ProcessingTime
-    * cadence, and the caller decides when the feed is drained and stops it.
-    * Same fused stage, sink, and sidecar contract as
-    * [[runTriplesStreamMaterialized]].
-    */
-  def startTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      canonSnapshot: Map[String, String], maxFilesPerTrigger: Int,
-      nBuckets: Int, trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery =
-    startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, graft.canon.Canon.AliasMap(canonSnapshot), maxFilesPerTrigger,
-      nBuckets, trigger)
-
-  /** [[startTriplesStreamMaterialized]] over either [[graft.canon.Canon
-    * .AliasSnapshot]] shape (use [[graft.canon.Canon.snapshotBounded]] to
-    * pick): AliasMap rewrites provenance inside the fused map-only stage;
-    * AliasFrame defers it to a per-micro-batch [[Relations.rewriteProv]]
-    * join in foreachBatch, keeping the job runnable when the alias
-    * dimension is too large to driver-collect. Both shapes produce
-    * identical sink contents (StreamingSpec pins the equivalence). `bucketOf` picks the sink's
+    * and return the live query (no await): the output is the partitioned
+    * table plus lineage, metrics and alias sidecars
+    * ([[materializedBatchWriter]]). Either [[graft.canon.Canon
+    * .AliasSnapshot]] shape is accepted (use
+    * [[graft.canon.Canon.snapshotBounded]] to pick; wrap a plain map in
+    * `AliasMap(m)`): AliasMap rewrites provenance inside the fused
+    * map-only stage; AliasFrame defers it to a per-micro-batch
+    * [[Relations.rewriteProv]] join in foreachBatch, keeping the job
+    * runnable when the alias dimension is too large to driver-collect.
+    * Both shapes produce identical sink contents (StreamingSpec pins the
+    * equivalence). `bucketOf` picks the sink's
     * bucket scheme (doc-id for the oracle surfaces, url-hash for arbitrary
     * production urls — [[graft.materialize.Materialize.hashBucketCol]]).
     */
@@ -372,22 +354,14 @@ object Streaming {
       .start()
   }
 
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      canonSnapshot: Map[String, String], maxFilesPerTrigger: Int = 1,
-      nBuckets: Int = 16): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, graft.canon.Canon.AliasMap(canonSnapshot), maxFilesPerTrigger,
-      nBuckets)
-
-  /** [[runTriplesStreamMaterialized]] over an [[graft.canon.Canon
-    * .AliasSnapshot]]: drain everything available (AvailableNow) through the
-    * snapshot-shaped start entry point and block until done.
+  /** Drain everything available (AvailableNow) through
+    * [[startTriplesStreamMaterialized]] and block until done; the checkpoint
+    * resumes the feed position on the next call.
     */
   def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
       outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int): Unit =
+      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int = 1,
+      nBuckets: Int = 16): Unit =
     startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
       gazetteer, snapshot, maxFilesPerTrigger, nBuckets, Trigger.AvailableNow())
       .awaitTermination()

@@ -5,7 +5,7 @@ package org.apache.spark.sql
   */
 object GraftSqlShims {
 
-  /** Eager local checkpoint that does NOT carry the origin plan's estimated
+  /** Local checkpoint that does NOT carry the origin plan's estimated
     * statistics into the resulting `LogicalRDD`.
     *
     * Why this exists: Spark 4's `Dataset.localCheckpoint` preserves the
@@ -23,27 +23,20 @@ object GraftSqlShims {
     * with `internalCreateDataFrame`, whose `LogicalRDD` carries only default
     * stats. Join planning falls back to `defaultSizeInBytes` estimates; AQE
     * re-plans with real runtime sizes, so physical strategy quality is
-    * unaffected.
-    */
-  def localCheckpointFresh(df: DataFrame): DataFrame = {
-    val out = localCheckpointFreshLazy(df)
-    out.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-      .queryExecution.toRdd.count() // eager materialization
-    out
-  }
-
-  /** [[localCheckpointFresh]] without the eager `count()`. NOT free to
-    * build: `queryExecution.toRdd` prepares the executed plan, and under
-    * AQE that runs every shuffle map stage of `df` as its own job, right
-    * here (the final stage is planned from their runtime sizes). Only the
-    * final stage is deferred: it runs inside the FIRST consumer action, and
-    * local checkpoints cache partitions as they are computed — later
-    * consumers read the stored blocks, exactly as in the eager form. Use
-    * when a consumer action provably follows immediately — e.g. the CC
-    * loop, where each round's star output is consumed by a checksum
-    * aggregate in the same driver step; the eager count there was a pure
-    * extra job per round (~1/3 of the loop's fixed per-round latency at
-    * sandbox scale).
+    * unaffected. The same squaring explains every cut made through this
+    * shim, inside the CC loop or not: a stat-carrying cut that feeds a
+    * join passes the product on.
+    *
+    * Lazy, and NOT free to build: `queryExecution.toRdd` prepares the
+    * executed plan, and under AQE that runs every shuffle map stage of `df`
+    * as its own job, right here (the final stage is planned from their
+    * runtime sizes). Only the final stage is deferred: it runs inside the
+    * FIRST consumer action, and local checkpoints cache partitions as they
+    * are computed — later consumers read the stored blocks. Use when a
+    * consumer action provably follows — e.g. the CC loop, where each
+    * round's star output is consumed by a checksum aggregate in the same
+    * driver step; an eager count() there was a pure extra job per round
+    * (~1/3 of the loop's fixed per-round latency on small graphs).
     */
   def localCheckpointFreshLazy(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]

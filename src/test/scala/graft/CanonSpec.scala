@@ -3,6 +3,7 @@ package graft
 import graft.canon.Canon
 import graft.model.Gazetteer
 import graft.pipeline.Pipeline
+import org.apache.spark.sql.DataFrame
 
 class CanonSpec extends SparkSpec {
 
@@ -79,34 +80,50 @@ class CanonSpec extends SparkSpec {
     assert(local == dist)
   }
 
+  /** Distributed CC labels (and rounds) under both round loops:
+    * `bcastBound` at its default runs the RDD loop with the whole
+    * neighborhood-min table broadcast, 0 forces the DataFrame hub-split
+    * loop (hub m-joins broadcast, every other source joined by key).
+    */
+  private def bothLoops(verts: DataFrame, edges: DataFrame, maxIter: Int = 60,
+      hubDegree: Long = 1024L): Seq[(Map[String, String], Int)] =
+    Seq(1000000L, 0L).map { bound =>
+      val (cc, rounds) = Canon.connectedComponentsWithRounds(verts, edges, maxIter = maxIter,
+        localThreshold = 0, hubDegree = hubDegree, bcastBound = bound)
+      (cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap, rounds)
+    }
+
   test("distributed CC with a planted mega-component hub takes the broadcast branch") {
     import spark.implicits._
     // star: one hub linked to 3000 leaves + a disjoint pair; hubDegree = 100
-    // forces the hub's adjacency through the broadcast label join
+    // forces the hub's adjacency through the hub split's broadcast label
+    // join (bcastBound = 0), never through a keyed join
     val leaves = (0 until 3000).map(i => f"leaf$i%05d")
     val verts = ("hub" +: leaves :+ "x1" :+ "x2").toDF("surface")
     val edges = leaves.map(l => ("hub", l)).toDF("a", "b")
       .unionByName(Seq(("x1", "x2")).toDF("a", "b"))
-    val cc = Canon.connectedComponents(verts, edges,
-        localThreshold = 0, hubDegree = 100)
+    val local = Canon.connectedComponents(verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val expected = "hub" // lexicographic min of {hub} ∪ leaves is "hub"
-    assert(cc("hub") == expected)
-    assert(leaves.forall(l => cc(l) == expected))
-    assert(cc("x1") == "x1" && cc("x2") == "x1")
+    bothLoops(verts, edges, hubDegree = 100).foreach { case (cc, _) =>
+      val expected = "hub" // lexicographic min of {hub} ∪ leaves is "hub"
+      assert(cc("hub") == expected)
+      assert(leaves.forall(l => cc(l) == expected))
+      assert(cc("x1") == "x1" && cc("x2") == "x1")
+      assert(cc == local)
+    }
   }
 
   test("distributed CC ignores edges with endpoints outside the vertex set (ccLocal parity)") {
     import spark.implicits._
     val verts = Seq("a", "b", "c").toDF("surface")
     val edges = Seq(("a", "b"), ("b", "ghost"), ("ghost", "c")).toDF("a", "b")
-    val dist = Canon.connectedComponents(verts, edges, localThreshold = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val local = Canon.connectedComponents(verts, edges) // fast path
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // ghost must not bridge b and c, and must not appear in the output
-    assert(dist == Map("a" -> "a", "b" -> "a", "c" -> "c"))
-    assert(dist == local)
+    bothLoops(verts, edges).foreach { case (dist, _) =>
+      assert(dist == Map("a" -> "a", "b" -> "a", "c" -> "c"))
+      assert(dist == local)
+    }
   }
 
   test("large-star/small-star CC converges in O(log n) rounds on a 10k-vertex chain") {
@@ -117,12 +134,14 @@ class CanonSpec extends SparkSpec {
     val n = 10000
     val verts = (0 until n).map(i => f"v$i%05d").toDF("surface")
     val edges = (1 until n).map(i => (f"v${i - 1}%05d", f"v$i%05d")).toDF("a", "b")
-    val (labelsDf, rounds) = Canon.connectedComponentsWithRounds(
-      verts, edges, maxIter = 25, localThreshold = 0)
-    val labels = labelsDf.collect().map(r => r.getString(0) -> r.getString(1))
-    assert(labels.length == n)
-    assert(labels.forall(_._2 == "v00000"), s"bad labels: ${labels.filter(_._2 != "v00000").take(3).toSeq}")
-    assert(rounds <= 20, s"chain took $rounds rounds — not O(log n)")
+    // both loops: no vertex reaches the hub degree, so the forced hub
+    // split (bcastBound = 0) runs every source through the keyed join
+    bothLoops(verts, edges, maxIter = 25).foreach { case (labels, rounds) =>
+      assert(labels.size == n)
+      assert(labels.values.forall(_ == "v00000"),
+        s"bad labels: ${labels.filter(_._2 != "v00000").take(3).toSeq}")
+      assert(rounds <= 20, s"chain took $rounds rounds — not O(log n)")
+    }
   }
 
   test("RDD round loop ≡ DataFrame round loop ≡ local union-find (forced branches)") {
@@ -136,12 +155,7 @@ class CanonSpec extends SparkSpec {
     val verts = ((0 until 40).map(i => f"c$i%03d") ++
       star.map(_._2) :+ "hub" :+ "lonely").toDF("surface")
     val edges = (chain ++ star).toDF("a", "b")
-    def run(bound: Long): Map[String, String] =
-      Canon.connectedComponentsWithRounds(verts, edges, localThreshold = 0,
-          hubDegree = 50, bcastBound = bound)
-        ._1.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val rdd = run(1000000L)
-    val df = run(0L)
+    val Seq((rdd, _), (df, _)) = bothLoops(verts, edges, hubDegree = 50)
     val local = Canon.connectedComponents(verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rdd == local, "RDD round branch diverged from local union-find")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.canon.Canon.AliasMap
 import graft.streaming.Streaming
 
 class StreamingSpec extends SparkSpec {
@@ -151,7 +152,7 @@ class StreamingSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       val q = Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt,
-        gaz, canon, maxFilesPerTrigger = 1, nBuckets = 16,
+        gaz, AliasMap(canon), maxFilesPerTrigger = 1, nBuckets = 16,
         trigger = Trigger.ProcessingTime(50L))
       // Feed files one at a time WHILE the query runs (the paced-bench
       // shape); land atomically (hidden temp name + rename) so a trigger
@@ -187,7 +188,7 @@ class StreamingSpec extends SparkSpec {
     pages.repartition(4).write.parquet(in)
     // Drain under a deliberately STALE snapshot: identity over all surfaces.
     val staleSnap = canon.keysIterator.map(k => k -> k).toMap
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, staleSnap)
+    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(staleSnap))
     val allBatches = spark.read.parquet(s"$out/triples")
       .select(col("batch_id").cast("long")).distinct().as[Long].collect().toSet
 
@@ -295,7 +296,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-repair-spec")
     val in = s"$tmp/pages"; val out = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
     pages.repartition(2).write.parquet(in)
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
     val nTable = spark.read.parquet(s"$out/triples").count()
     // Simulate the crash window: one batch's lineage sidecar vanishes.
     val victims = new java.io.File(s"$out/_lineage").listFiles()
@@ -325,11 +326,11 @@ class StreamingSpec extends SparkSpec {
     }
     // Drain half, then resume over the rest with the same checkpoint.
     feed(parts.take(2))
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
     val batchIdsAfterHalf = spark.read.parquet(s"$out/triples")
       .select("batch_id").distinct().collect().map(_.getInt(0)).toSet
     feed(parts.drop(2))
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
 
     // Table contents == batch flagship (partition cols dropped for compare).
     val table = spark.read.parquet(s"$out/triples")

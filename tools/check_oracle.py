@@ -12,11 +12,14 @@ import json
 import math
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# The checkout this script lives in: its Verify is the code under test.
+REPO = Path(__file__).resolve().parents[1]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -45,7 +48,7 @@ def main():
     if run_verify:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=REPO)
         if r.returncode != 0:
             print(r.stdout[-4000:], r.stderr[-4000:])
             sys.exit(1)
