@@ -80,17 +80,19 @@ class CanonSpec extends SparkSpec {
     assert(local == dist)
   }
 
-  /** Distributed CC labels (and rounds) under both round loops:
-    * `bcastBound` at its default runs the RDD loop with the whole
-    * neighborhood-min table broadcast, 0 forces the DataFrame hub-split
-    * loop (hub m-joins broadcast, every other source joined by key).
+  /** Distributed CC (surface, component) rows, as collected, and rounds
+    * under both round loops: `bcastBound` at its default runs the RDD loop
+    * with the whole neighborhood-min table broadcast, 0 forces the
+    * DataFrame hub-split loop (hub m-joins broadcast, every other source
+    * joined by key). The rows are not folded into a Map, so a vertex with
+    * two label rows (join fan-out) shows up as an extra row.
     */
   private def bothLoops(verts: DataFrame, edges: DataFrame, maxIter: Int = 60,
-      hubDegree: Long = 1024L): Seq[(Map[String, String], Int)] =
+      hubDegree: Long = 1024L): Seq[(Seq[(String, String)], Int)] =
     Seq(1000000L, 0L).map { bound =>
       val (cc, rounds) = Canon.connectedComponentsWithRounds(verts, edges, maxIter = maxIter,
         localThreshold = 0, hubDegree = hubDegree, bcastBound = bound)
-      (cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap, rounds)
+      (cc.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted, rounds)
     }
 
   test("distributed CC with a planted mega-component hub takes the broadcast branch") {
@@ -104,12 +106,13 @@ class CanonSpec extends SparkSpec {
       .unionByName(Seq(("x1", "x2")).toDF("a", "b"))
     val local = Canon.connectedComponents(verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    bothLoops(verts, edges, hubDegree = 100).foreach { case (cc, _) =>
+    bothLoops(verts, edges, hubDegree = 100).foreach { case (rows, _) =>
+      assert(rows == local.toSeq.sorted)
+      val cc = rows.toMap
       val expected = "hub" // lexicographic min of {hub} ∪ leaves is "hub"
       assert(cc("hub") == expected)
       assert(leaves.forall(l => cc(l) == expected))
       assert(cc("x1") == "x1" && cc("x2") == "x1")
-      assert(cc == local)
     }
   }
 
@@ -121,8 +124,8 @@ class CanonSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // ghost must not bridge b and c, and must not appear in the output
     bothLoops(verts, edges).foreach { case (dist, _) =>
-      assert(dist == Map("a" -> "a", "b" -> "a", "c" -> "c"))
-      assert(dist == local)
+      assert(dist == Seq("a" -> "a", "b" -> "a", "c" -> "c"))
+      assert(dist == local.toSeq.sorted)
     }
   }
 
@@ -137,8 +140,9 @@ class CanonSpec extends SparkSpec {
     // both loops: no vertex reaches the hub degree, so the forced hub
     // split (bcastBound = 0) runs every source through the keyed join
     bothLoops(verts, edges, maxIter = 25).foreach { case (labels, rounds) =>
-      assert(labels.size == n)
-      assert(labels.values.forall(_ == "v00000"),
+      assert(labels.length == n)
+      assert(labels.map(_._1).distinct.length == n)
+      assert(labels.forall(_._2 == "v00000"),
         s"bad labels: ${labels.filter(_._2 != "v00000").take(3).toSeq}")
       assert(rounds <= 20, s"chain took $rounds rounds — not O(log n)")
     }
@@ -158,8 +162,8 @@ class CanonSpec extends SparkSpec {
     val Seq((rdd, _), (df, _)) = bothLoops(verts, edges, hubDegree = 50)
     val local = Canon.connectedComponents(verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rdd == local, "RDD round branch diverged from local union-find")
-    assert(df == local, "DataFrame round branch diverged from local union-find")
+    assert(rdd == local.toSeq.sorted, "RDD round branch diverged from local union-find")
+    assert(df == local.toSeq.sorted, "DataFrame round branch diverged from local union-find")
   }
 
   test("CC fails loudly (not silently wrong) when maxIter is exhausted") {
