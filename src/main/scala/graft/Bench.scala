@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *    see whether the run was quiet (≈1.0) or stall-afflicted (≪1.0).
   *
   * Parallelism comes from SPARK_GRAFT_CPUS (the scaling-efficiency harness in
-  * tools/bench_scaling.sh runs graft.ScalingBench at N and 4N cores on the
+  * tools/bench_scaling.sh runs graft.Harness scaling at N and 4N cores on the
   * same input — the sandbox evidencing of the N→4N executor criterion,
   * BASELINE.md).
   */

@@ -1,8 +1,10 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.{Config, Mention}
 import graft.functions.expressions.unaccent
 
@@ -11,6 +13,16 @@ import graft.functions.expressions.unaccent
   * greedy transitive grouping + LLM representative
   * (OllamaNERExtractor.py:122-184) with an order-independent parallel
   * formulation (SURVEY §2.7 C1/C2, §7.6 risk 1).
+  *
+  * Both canon jobs ([[canonicalState]], [[canonicalMapIncremental]]) gate
+  * on the surface-stats table the way [[connectedComponentsWithRounds]]
+  * gates on its graph: a dimension-sized table (at most `localThreshold`
+  * surfaces, at most [[LocalMaxCandidates]] blocking candidates) is
+  * collected once and canonicalized on the driver ([[canonLocal]]: the
+  * same blocking, verification, union-find and pick, with Spark's own
+  * string primitives), and the map comes back as a local DataFrame. Past
+  * either gate the distributed chain runs: [[blockedEdges]] →
+  * [[connectedComponents]] → [[canonicalPick]].
   */
 object Canon {
 
@@ -196,8 +208,6 @@ object Canon {
   def connectedComponentsWithRounds(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 60, localThreshold: Long = 100000L,
       hubDegree: Long = 1024L, bcastBound: Long = 1000000L): (DataFrame, Int) = {
-    require(localThreshold >= 0 && localThreshold < Int.MaxValue,
-      s"localThreshold out of range: $localThreshold")
     // Materialize the (possibly expensive — e.g. a banded similarity
     // self-join) edge input ONCE: the size gate, the local collect()/first
     // distributed round would otherwise each re-run the edge pipeline.
@@ -219,20 +229,16 @@ object Canon {
     // the work when |V| is tiny. Identical output (component = min member).
     // Gated on BOTH vertex and edge count — a 100k-vertex similarity graph
     // can carry O(V²) edges, which must never be collect()ed whole: each
-    // side is collected under a `localThreshold + 1` limit, and the local
-    // path is taken only when both came back within the threshold. Each
-    // collect reads its checkpoint's partitions in order in ONE task
-    // (coalesce(1)) and stops at the limit: a plain limit scans one
-    // partition per job and then scales up, several jobs per gate. Every
-    // partition it reads is computed whole and kept by the checkpoint, so
-    // the distributed branch reuses it.
-    val bound = localThreshold.toInt + 1
-    def upToBound(df: DataFrame) = df.coalesce(1).limit(bound).collect()
-    val esRows = upToBound(es)
-    lazy val vsRows = upToBound(vs)
-    if (esRows.length <= localThreshold && vsRows.length <= localThreshold)
-      return (ccLocal(vertices.sparkSession, vsRows.map(_.getString(0)),
-        esRows.map(r => (r.getString(0), r.getString(1)))), 0)
+    // side is collected by [[upToBound]], and the local path is taken only
+    // when both came back within the threshold. The canon jobs reach this
+    // gate only past their own stats-table gate ([[canonLocal]]).
+    val esRows = upToBound(es, localThreshold)
+    lazy val vsRows = upToBound(vs, localThreshold)
+    if (esRows.length <= localThreshold && vsRows.length <= localThreshold) {
+      import vertices.sparkSession.implicits._
+      return (ccLocal(vsRows.map(_.getString(0)),
+        esRows.map(r => (r.getString(0), r.getString(1)))).toSeq.toDF("surface", "component"), 0)
+    }
     val vsCount = vs.count()
     val esCount = es.count()
     // Scale-adaptive round sizing (guide §2: derive partitioning from the
@@ -275,6 +281,21 @@ object Canon {
       .join(finalPairs.select(col("b").as("surface"), col("a").as("component")), Seq("surface"), "left")
       .select(col("surface"), coalesce(col("component"), col("surface")).as("component"))
     (labels, rounds)
+  }
+
+  /** At most `localThreshold + 1` rows of `df`: the read behind every
+    * driver-local gate (the canon jobs' stats table, both sides of the CC
+    * graph), which goes local only when at most `localThreshold` came back.
+    * It reads the partitions in order in ONE task (coalesce(1)) and stops
+    * at the limit: a plain limit scans one partition per job and then
+    * scales up, several jobs per gate. Every partition it reads off a
+    * checkpoint is computed whole and kept, so a distributed branch past
+    * the gate reuses it.
+    */
+  private def upToBound(df: DataFrame, localThreshold: Long): Array[Row] = {
+    require(localThreshold >= 0 && localThreshold < Int.MaxValue,
+      s"localThreshold out of range: $localThreshold")
+    df.coalesce(1).limit(localThreshold.toInt + 1).collect()
   }
 
   /** The alternating star-round fixpoint loop, DataFrame form — the branch
@@ -562,11 +583,11 @@ object Canon {
 
   /** Driver-local union-find for dimension-sized similarity graphs; labels
     * each vertex with the lexicographic minimum of its component — exactly
-    * the fixpoint of the distributed min-label loop.
+    * the fixpoint of the distributed min-label loop. Returns
+    * (surface, component) in `vs` order; edges with an endpoint outside
+    * `vs` are ignored.
     */
-  private def ccLocal(spark: org.apache.spark.sql.SparkSession, vs: Array[String],
-      es: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
+  private def ccLocal(vs: Array[String], es: Iterable[(String, String)]): Array[(String, String)] = {
     val parent = scala.collection.mutable.HashMap(vs.map(v => v -> v): _*)
     def find(x: String): String = {
       var r = x
@@ -587,7 +608,7 @@ object Canon {
       val cur = minOf.get(r)
       if (cur.isEmpty || v < cur.get) minOf(r) = v
     }
-    vs.toSeq.map(v => (v, minOf(find(v)))).toDF("surface", "component")
+    vs.map(v => (v, minOf(find(v))))
   }
 
   /** Deterministic canonical representative per component: most words, then
@@ -641,19 +662,142 @@ object Canon {
 
   /** Full canon job, returning the carry-forward [[CanonState]]. The
     * dimension-sized stats are cut once (`GraftSqlShims.localCheckpointFreshLazy`,
-    * as [[canonicalMapIncremental]] does on the merged stats): blocking,
-    * edge verification, the CC vertex set and the pick all read them, and
-    * without the cut each consumer re-aggregates the corpus-sized mention
-    * table. Building the cut runs the aggregation's shuffle; its final
-    * stage runs inside the first consumer action.
+    * as [[canonicalMapIncremental]] does on the merged stats); building the
+    * cut runs the aggregation's shuffle, and its final stage runs inside
+    * the one bounded collect of `(surface, n_mentions, sim_key, words)`
+    * that [[canonLocal]] gates on. Within `localThreshold` surfaces and
+    * [[LocalMaxCandidates]] candidates the driver canonicalizes them and
+    * `canonMap` is a local DataFrame: no further Spark job. Otherwise the
+    * distributed chain runs, and blocking, edge verification, the CC
+    * vertex set and the pick all read the cut (without it each consumer
+    * would re-aggregate the corpus-sized mention table). `stats` is the
+    * cut in both branches.
     */
   def canonicalState(mentions: Dataset[Mention],
-      maxBlock: Long = Config.MaxTokenBlock): CanonState = {
+      maxBlock: Long = Config.MaxTokenBlock, localThreshold: Long = 100000L): CanonState = {
     val stats = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy(
       surfaceStats(mentions))
-    val comps = connectedComponents(stats.select("surface"),
-      similarityEdges(stats, maxBlock))
-    CanonState(stats, canonicalPick(stats, comps))
+    val canon = canonLocal(stats.withColumn("is_new", lit(true)), None, maxBlock, localThreshold)
+      .map(_._1).getOrElse(canonicalPick(stats, connectedComponents(stats.select("surface"),
+        similarityEdges(stats, maxBlock), localThreshold = localThreshold)))
+    CanonState(stats, canon)
+  }
+
+  /** Upper bound on the blocking candidates the driver branch enumerates
+    * (Σ over cold tokens of probing members × block size, summed from the
+    * token table before any pair is built): it bounds the driver's CPU
+    * and the edges it holds. Sized from a measurement on canon_refresh
+    * tables (seed 1, local[4], 4-core host): the driver solve ran at about
+    * 2M candidates/s (0.13-0.18 s for 349k candidates at 7,920 surfaces,
+    * 1.1-1.3 s for 2.37M at 49,500), while the distributed chain took
+    * 2.0-2.6 s and 4.1-5.1 s on the same tables. At this bound the driver
+    * spends about 2 s, no more than the chain at the smallest size.
+    */
+  val LocalMaxCandidates = 4000000L
+
+  /** One collected stats row of the driver branch, with the UTF-8 forms
+    * Spark's string expressions evaluate on.
+    */
+  private final class Surf(r: Row) {
+    val surface: String = r.getString(0)
+    val n: Long = r.getLong(1)
+    val key: UTF8String = UTF8String.fromString(r.getString(2))
+    val words: Array[String] = r.getSeq[String](3).toArray
+    val isNew: Boolean = r.getBoolean(4)
+    val utf8: UTF8String = UTF8String.fromString(surface)
+    val keyChars: Int = key.numChars
+  }
+
+  /** [[similar]] on the driver: UTF8String equality, `numChars` and
+    * `levenshteinDistance` (what `===`, `length` and `levenshtein`
+    * evaluate), word overlap over the distinct `words` (`array_intersect`),
+    * the same double arithmetic and [[Config]] thresholds. The ratio
+    * `1 − d/m` falls as the distance d grows, so its predicate holds
+    * exactly up to [[levBound]]`(m)`, and the banded
+    * `levenshteinDistance(other, bound)` (−1 past the bound) decides it
+    * without filling the whole table.
+    */
+  private def similarLocal(a: Surf, b: Surf): Boolean =
+    a.key == b.key ||
+      a.words.count(b.words.contains).toDouble /
+        math.max(a.words.length, b.words.length).toDouble >= Config.WordOverlapThreshold ||
+      a.key.levenshteinDistance(b.key, levBound(math.max(a.keyChars, b.keyChars))) >= 0
+
+  /** The largest distance d with `1.0 - d / m > LevRatioThreshold`. */
+  private def levBound(m: Int): Int = {
+    var d = 0
+    while (1.0 - (d + 1).toDouble / m.toDouble > Config.LevRatioThreshold) d += 1
+    d
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** The driver branch of both canon jobs. One [[upToBound]] collect of a
+    * flagged stats table's `(surface, n_mentions, sim_key, words, is_new)`;
+    * when at most `localThreshold` rows came back (none with a null
+    * surface), the distributed chain's math runs on the driver:
+    *  - the token table (`df`, `df_old`), the stop-token cap and the
+    *    cap-crossing gate, which makes every surface probe (the full job);
+    *  - [[LocalMaxCandidates]] against the candidate count summed from the
+    *    block sizes — past it, None before any pair is enumerated;
+    *  - old connectivity (`carried`, the incremental refresh's old map) as
+    *    its star pairs, one more bounded collect, skipped by the fallback;
+    *  - [[blockedEdges]]' probe rule `a ≠ b && (!new_b || a < b)` with
+    *    [[similarLocal]] verification, [[ccLocal]], and [[canonicalPick]]'s
+    *    four keys.
+    * Surfaces are indexed in Spark's string order (UTF-8 bytes, which
+    * differs from `String.compareTo` past the BMP), so `a < b` and the
+    * pick's `surface desc` are index compares. Returns the map as a local
+    * DataFrame and whether the cap-crossing gate fired; None past a gate.
+    */
+  private def canonLocal(flagged: DataFrame, carried: Option[DataFrame], maxBlock: Long,
+      localThreshold: Long): Option[(DataFrame, Boolean)] = {
+    val rows = upToBound(flagged.select(col("surface"), col("n_mentions"), col("sim_key"),
+      col("words"), col("is_new")), localThreshold)
+    if (rows.length > localThreshold || rows.exists(_.isNullAt(0))) return None
+    val ss = rows.map(new Surf(_)).sortWith((x, y) => x.utf8.compareTo(y.utf8) < 0)
+    val blocks = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    ss.indices.foreach(i => ss(i).words.foreach(w =>
+      blocks.getOrElseUpdate(w, mutable.ArrayBuffer.empty[Int]) += i))
+    val crossed = blocks.valuesIterator.exists { b =>
+      val dfOld = b.count(!ss(_).isNew)
+      dfOld >= 2 && dfOld <= maxBlock && b.length > maxBlock
+    }
+    val probe = ss.map(s => crossed || s.isNew)
+    val cold = blocks.filter(_._2.length <= maxBlock)
+    if (cold.valuesIterator.map(b => b.count(probe(_)).toLong * b.length).sum > LocalMaxCandidates)
+      return None
+    val star = if (crossed) Array.empty[Row] else carried.fold(Array.empty[Row])(m =>
+      upToBound(m.filter(col("surface") =!= col("canonical"))
+        .select(col("canonical"), col("surface")), localThreshold))
+    if (star.length > localThreshold) return None
+    val edges = mutable.ArrayBuffer.empty[(String, String)]
+    val seen = Array.fill(ss.length)(-1) // the last probe that tested each surface
+    ss.indices.filter(probe(_)).foreach { i =>
+      ss(i).words.foreach(w => cold.get(w).foreach(_.foreach { j =>
+        if (j != i && seen(j) != i) {
+          seen(j) = i
+          if ((!probe(j) || i < j) && similarLocal(ss(i), ss(j)))
+            edges += ((ss(i).surface, ss(j).surface))
+        }
+      }))
+    }
+    val labels = ccLocal(ss.map(_.surface),
+      edges ++ star.iterator.map(r => (r.getString(0), r.getString(1))))
+    // size(split(surface, ' ')) and length(surface) as StringSplit and
+    // Length evaluate them; the index breaks ties as `surface desc`.
+    val rank = ss.indices.map(i => (ss(i).utf8.split(Space, -1).length, ss(i).utf8.numChars,
+      ss(i).n, i))
+    val pick = mutable.HashMap.empty[String, Int]
+    labels.indices.foreach { i =>
+      val c = labels(i)._2
+      if (pick.get(c).forall(j => Ordering[(Int, Int, Long, Int)].gt(rank(i), rank(j)))) pick(c) = i
+    }
+    // createDataFrame, not toDF: a renaming projection would hide the
+    // LocalRelation from `isLocal` and from the planner
+    Some((flagged.sparkSession.createDataFrame(
+      java.util.Arrays.asList(labels.map { case (s, c) => Row(s, ss(pick(c)).surface) }: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(AliasSchema)), crossed))
   }
 
   /** Merge the carried stats dimension with a delta batch's stats: mention
@@ -715,15 +859,35 @@ object Canon {
     * The canonical pick re-ranks ALL merged surfaces (n_mentions — rank key
     * 3 — moves with every delta), but that is a dimension-sized window, not
     * a corpus-sized one.
+    *
+    * Driver branch: the flagged merge is collected once ([[canonLocal]]);
+    * within `localThreshold` surfaces and [[LocalMaxCandidates]]
+    * candidates, the token table, the cap-crossing gate, the new-surface
+    * probes and the pick run on the driver, with old connectivity from one
+    * collect of the carried map's star pairs. `fellBack` means the same in
+    * both branches, and `state.canonMap` is then a local DataFrame.
     */
   def canonicalMapIncremental(old: CanonState, deltaMentions: Dataset[Mention],
-      maxBlock: Long = Config.MaxTokenBlock): CanonRefresh = {
+      maxBlock: Long = Config.MaxTokenBlock, localThreshold: Long = 100000L): CanonRefresh = {
     val ck = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy _
-    // Checkpoint the flagged merge: it feeds the token table, the blocking,
-    // the CC vertex set and the pick — without the cut, each consumer
-    // action would re-scan the delta mention source.
+    // Checkpoint the flagged merge: it feeds the driver gate's collect and,
+    // past it, the token table, the blocking, the CC vertex set and the
+    // pick — without the cut, each consumer action would re-scan the delta
+    // mention source.
     val flagged = ck(flaggedMerge(old.stats,
       personSurfaces(deltaMentions).withColumn("n_mentions", lit(1L))))
+    val merged = flagged.drop("is_new")
+    val (canon, crossed) = canonLocal(flagged, Some(old.canonMap), maxBlock, localThreshold)
+      .getOrElse(incrementalDistributed(old.canonMap, flagged, maxBlock, localThreshold))
+    CanonRefresh(CanonState(merged, canon), fellBack = crossed)
+  }
+
+  /** The distributed branch of [[canonicalMapIncremental]] over the
+    * carried map: the refreshed map and whether the cap-crossing gate fired.
+    */
+  private def incrementalDistributed(carried: DataFrame, flagged: DataFrame, maxBlock: Long,
+      localThreshold: Long): (DataFrame, Boolean) = {
+    val ck = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy _
     val merged = flagged.drop("is_new")
     // One token table for the exactness gate and the blocking keys.
     val tokens = ck(tokenTable(flagged))
@@ -741,12 +905,13 @@ object Canon {
         // Old connectivity enters as the old map's star contraction pairs
         // (canonical, member) — already a star forest, so the CC loop pays
         // O(1) rounds for them; only delta edges add structure.
-        old.canonMap
+        carried
           .filter(col("surface") =!= col("canonical"))
           .select(col("canonical").as("a"), col("surface").as("b"))
           .unionByName(blockedEdges(flagged, cold))
-    val comps = connectedComponents(merged.select("surface"), edges)
-    CanonRefresh(CanonState(merged, canonicalPick(merged, comps)), fellBack = crossed)
+    val comps = connectedComponents(merged.select("surface"), edges,
+      localThreshold = localThreshold)
+    (canonicalPick(merged, comps), crossed)
   }
 
   /** Collect a [[canonicalMap]] result into the broadcastable alias snapshot

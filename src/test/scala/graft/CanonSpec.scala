@@ -244,94 +244,157 @@ class CanonSpec extends SparkSpec {
   private def asMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.collect().map(r => r.getAs[String]("surface") -> r.getAs[String]("canonical")).toMap
 
-  test("incremental refresh equals the full job across url-hash splits of the live corpus") {
+  /** Registers a canon exactness spec twice, as [[bothLoops]] does for CC:
+    * at the default `localThreshold` (these dimension-sized inputs take the
+    * driver canon branch) and at 0 (forced distributed: blockedEdges, a CC
+    * round loop and canonicalPick). The default copy keeps the spec's name.
+    */
+  private def bothBranches(name: String)(body: Long => Unit): Unit =
+    Seq(100000L -> name, 0L -> s"$name [distributed]").foreach { case (thr, n) =>
+      test(n)(body(thr))
+    }
+
+  bothBranches("incremental refresh equals the full job across url-hash splits of the live corpus") { thr =>
     import org.apache.spark.sql.functions._
     val ms = Pipeline.mentionsCached(spark, sfTiny)
-    val full = asMap(Canon.canonicalState(ms).canonMap)
+    val full = asMap(Canon.canonicalState(ms, localThreshold = thr).canonMap)
     // three different split seams: alias groups straddle each one
     (0 to 2).foreach { salt =>
       val half = pmod(xxhash64(col("url"), lit(salt)), lit(2))
-      val st = Canon.canonicalState(ms.filter(half === 0))
-      val r = Canon.canonicalMapIncremental(st, ms.filter(half === 1))
+      val st = Canon.canonicalState(ms.filter(half === 0), localThreshold = thr)
+      val r = Canon.canonicalMapIncremental(st, ms.filter(half === 1), localThreshold = thr)
       assert(!r.fellBack, s"salt=$salt unexpectedly crossed the token cap")
       assert(asMap(r.state.canonMap) == full, s"salt=$salt diverged from full job")
     }
   }
 
-  test("incremental refresh: empty delta is a no-op, empty initial state is the full job") {
+  bothBranches("incremental refresh: empty delta is a no-op, empty initial state is the full job") { thr =>
     import spark.implicits._
     val ms = Pipeline.mentionsCached(spark, sfTiny)
-    val full = Canon.canonicalState(ms)
-    val noDelta = Canon.canonicalMapIncremental(full, spark.emptyDataset[graft.model.Mention])
+    val full = Canon.canonicalState(ms, localThreshold = thr)
+    val noDelta = Canon.canonicalMapIncremental(full, spark.emptyDataset[graft.model.Mention],
+      localThreshold = thr)
     assert(!noDelta.fellBack)
     assert(asMap(noDelta.state.canonMap) == asMap(full.canonMap))
-    val empty = Canon.canonicalState(spark.emptyDataset[graft.model.Mention])
-    val allDelta = Canon.canonicalMapIncremental(empty, ms)
+    val empty = Canon.canonicalState(spark.emptyDataset[graft.model.Mention], localThreshold = thr)
+    val allDelta = Canon.canonicalMapIncremental(empty, ms, localThreshold = thr)
     assert(!allDelta.fellBack)
     assert(asMap(allDelta.state.canonMap) == asMap(full.canonMap))
   }
 
-  test("incremental refresh: merged stats carry summed mention counts") {
+  bothBranches("incremental refresh: merged stats carry summed mention counts") { thr =>
     import org.apache.spark.sql.functions._
     val oldMs = mkMentions(Seq("Ada Lovelace", "Ada Lovelace", "Alan Turing"), "a")
     val newMs = mkMentions(Seq("Ada Lovelace", "Grace Hopper"), "b")
-    val r = Canon.canonicalMapIncremental(Canon.canonicalState(oldMs), newMs)
+    val r = Canon.canonicalMapIncremental(Canon.canonicalState(oldMs, localThreshold = thr), newMs,
+      localThreshold = thr)
     val counts = r.state.stats.select(col("surface"), col("n_mentions"))
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(counts == Map("Ada Lovelace" -> 3L, "Alan Turing" -> 1L, "Grace Hopper" -> 1L))
   }
 
-  test("incremental refresh: two new surfaces linked only to each other give one new↔new edge") {
+  bothBranches("incremental refresh: two new surfaces linked only to each other give one new↔new edge") { thr =>
     import org.apache.spark.sql.functions._
     val oldMs = mkMentions(Seq("Ada Lovelace", "Alan Turing"), "a")
     val newMs = mkMentions(Seq("Grace Hopper", "Grace Hoppers"), "b")
-    val st = Canon.canonicalState(oldMs)
+    val st = Canon.canonicalState(oldMs, localThreshold = thr)
     val merged = Canon.mergeStats(st.stats, Canon.surfaceStats(newMs))
     val fresh = Canon.surfaceStats(newMs).select(col("surface"))
     val edges = Canon.deltaEdges(merged, fresh).collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(edges == Seq(("Grace Hopper", "Grace Hoppers")))
-    val r = Canon.canonicalMapIncremental(st, newMs)
+    val r = Canon.canonicalMapIncremental(st, newMs, localThreshold = thr)
     assert(!r.fellBack)
     assert(asMap(r.state.canonMap) ==
-      asMap(Canon.canonicalState(oldMs.unionByName(newMs)).canonMap))
+      asMap(Canon.canonicalState(oldMs.unionByName(newMs), localThreshold = thr).canonMap))
     assert(asMap(r.state.canonMap)("Grace Hopper") == "Grace Hoppers")
   }
 
-  test("incremental refresh: a delta of re-mentioned old surfaces keeps them old, sums counts, keeps the map") {
+  bothBranches("incremental refresh: a delta of re-mentioned old surfaces keeps them old, sums counts, keeps the map") { thr =>
     import org.apache.spark.sql.functions._
     val oldMs = mkMentions(Seq("Ada Lovelace", "Ada Lovelace", "Ada Lovelace", "Alan Turing",
       "Alan Turing", "Alan Mathison Turing"), "a")
     val newMs = mkMentions(Seq("Alan Turing", "Ada Lovelace"), "b")
-    val st = Canon.canonicalState(oldMs)
+    val st = Canon.canonicalState(oldMs, localThreshold = thr)
     val flags = Canon.flaggedMerge(st.stats, newMs.toDF().select(col("surface"), lit(1L).as("n_mentions")))
       .select(col("surface"), col("n_mentions"), col("is_new"))
       .collect().map(x => x.getString(0) -> (x.getLong(1), x.getBoolean(2))).toMap
     assert(flags == Map("Ada Lovelace" -> (4L, false), "Alan Turing" -> (3L, false),
       "Alan Mathison Turing" -> (1L, false)))
-    val r = Canon.canonicalMapIncremental(st, newMs)
+    val r = Canon.canonicalMapIncremental(st, newMs, localThreshold = thr)
     assert(!r.fellBack)
     assert(asMap(r.state.canonMap) == asMap(st.canonMap))
     assert(asMap(r.state.canonMap) ==
-      asMap(Canon.canonicalState(oldMs.unionByName(newMs)).canonMap))
+      asMap(Canon.canonicalState(oldMs.unionByName(newMs), localThreshold = thr).canonMap))
   }
 
-  test("a token block crossing the cap forces the full-job fallback — and stays exact") {
+  bothBranches("a token block crossing the cap forces the full-job fallback — and stays exact") { thr =>
     // cap 2: token "alpha" has df_old = 2 (cold), df_merged = 3 (hot) —
     // the ONLY non-monotone case of the incremental scheme
     val oldMs = mkMentions(Seq("alpha one", "alpha two"), "a")
     val newMs = mkMentions(Seq("alpha three"), "b")
-    val st = Canon.canonicalState(oldMs, maxBlock = 2)
-    val r = Canon.canonicalMapIncremental(st, newMs, maxBlock = 2)
+    val st = Canon.canonicalState(oldMs, maxBlock = 2, localThreshold = thr)
+    val r = Canon.canonicalMapIncremental(st, newMs, maxBlock = 2, localThreshold = thr)
     assert(r.fellBack, "cap crossing must trigger the full-job fallback")
-    import spark.implicits._
     val allMs = mkMentions(Seq("alpha one", "alpha two"), "a")
       .unionByName(mkMentions(Seq("alpha three"), "b"))
     assert(asMap(r.state.canonMap) ==
-      asMap(Canon.canonicalState(allMs, maxBlock = 2).canonMap))
+      asMap(Canon.canonicalState(allMs, maxBlock = 2, localThreshold = thr).canonMap))
     // control: a delta that does NOT push any old ≥2-surface token past the
     // cap stays on the incremental branch at the same cap
-    val quiet = Canon.canonicalMapIncremental(st, mkMentions(Seq("beta four"), "c"), maxBlock = 2)
+    val quiet = Canon.canonicalMapIncremental(st, mkMentions(Seq("beta four"), "c"), maxBlock = 2,
+      localThreshold = thr)
     assert(!quiet.fellBack)
+  }
+
+  test("driver canon branch ≡ distributed canon on adversarial surfaces") {
+    // U+1F600 sorts below U+FF21 in UTF-16 (a surrogate pair) but above it
+    // in UTF-8, which is Spark's string order
+    val grin = new String(Character.toChars(0x1F600))
+    val surfaces = Seq(
+      "José Núñez", "Jose Nunez", // equal sim_key, tied on words, length and mentions
+      s"Annabel Lee $grin", "Annabel Lee \uFF21", // one edit apart, tied on all but the surface
+      "Grace Hopper", "Grace Hopper", "Grace Hoppor", // tied on words and length
+      "Cher", "Chér", "Madonna", // one-token surfaces
+      "de anna", "de anne", "de zz", // "de" is hot at maxBlock = 2
+      "Ana  Maria", "Ana Maria") // a doubled space: split(' ') counts an empty word
+    def full(thr: Long) = Canon.canonicalState(mkMentions(surfaces), maxBlock = 2,
+      localThreshold = thr).canonMap
+    val (local, dist) = (full(100000L), full(0L))
+    assert(local.isLocal && !dist.isLocal)
+    val m = asMap(local)
+    assert(m == asMap(dist))
+    assert(m("Jose Nunez") == "José Núñez")
+    assert(m("Annabel Lee \uFF21") == s"Annabel Lee $grin")
+    assert(m("Grace Hoppor") == "Grace Hopper")
+    assert(m("Cher") == "Chér" && m("Madonna") == "Madonna")
+    assert(m("de anna") == "de anna" && m("de anne") == "de anne", "the hot token must not block")
+    // incremental over three splits of the same surfaces, both branches
+    val refreshes = Seq(2, 3, 5).map { k =>
+      val (a, b) = surfaces.zipWithIndex.partition(_._2 % k == 0)
+      def refresh(thr: Long) = Canon.canonicalMapIncremental(
+        Canon.canonicalState(mkMentions(a.map(_._1), "a"), maxBlock = 2, localThreshold = thr),
+        mkMentions(b.map(_._1), "b"), maxBlock = 2, localThreshold = thr)
+      val (l, d) = (refresh(100000L), refresh(0L))
+      assert(l.fellBack == d.fellBack, s"split $k")
+      assert(asMap(l.state.canonMap) == m, s"split $k: driver branch")
+      assert(asMap(d.state.canonMap) == m, s"split $k: distributed branch")
+      l.fellBack
+    }
+    assert(refreshes.contains(true) && refreshes.contains(false))
+  }
+
+  test("driver canon branch: a local map under the gate, none at localThreshold = 0, snapshot fingerprint intact") {
+    val small = mkMentions(Seq("Ada Lovelace", "Ada Lovelace", "Ada King Lovelace", "Alan Turing"))
+    val st = Canon.canonicalState(small)
+    assert(st.canonMap.isLocal)
+    assert(!Canon.canonicalState(small, localThreshold = 0).canonMap.isLocal)
+    assert(Canon.canonicalMapIncremental(st, mkMentions(Seq("Grace Hopper"), "b")).state.canonMap.isLocal)
+    Canon.snapshotBounded(st.canonMap) match {
+      case Canon.AliasMap(m, fp) =>
+        assert(m == asMap(st.canonMap))
+        assert(fp.contains(Canon.aliasFingerprint(st.canonMap)))
+      case other => fail(s"expected an AliasMap, got $other")
+    }
   }
 }
