@@ -9,6 +9,7 @@ import graft.model.{Gazetteer, Mention, Page}
 import graft.pipeline.Pipeline
 import graft.sources.Pages
 import graft.streaming.{Recanon, Streaming}
+import graft.util.SinkFs
 
 /** Production entry point — the engine as a spark-submit job (north rule:
   * "run via spark-submit on a multi-executor cluster"). Unlike the sandbox
@@ -256,94 +257,96 @@ object Submit {
   }
 
   /** Incremental canon refresh over a delta page table — see the class doc.
-    * Reads the newest `_DONE`-flagged version as the carried state, writes
-    * the refreshed state as the next version, then reclaims superseded and
-    * crashed (unflagged) version dirs. `--canon-out` additionally overwrites
-    * a plain alias table at a stable path for `stream --canon` /
-    * `compact --canon` consumption. */
+    * Reads the newest `_DONE`-flagged version as the carried state and
+    * publishes the refreshed state as the next one ([[publishVersion]]).
+    * `--canon-out` additionally overwrites a plain alias table at a stable
+    * path for `stream --canon` / `compact --canon` consumption. */
   private def runRefresh(spark: SparkSession, opts: Map[String, String]): Unit = {
-    import graft.util.SinkFs
     import org.apache.spark.sql.functions.{count, lit}
     val state = req(opts, "state")
     // Both canon paths consume the mentions once, into their checkpointed
     // stats, so the scan needs no cut of its own.
     val ms = Pipeline.mentions(Pages.fromParquet(spark, req(opts, "input")),
       gazetteerOf(spark, opts))
-    def done(v: Int): Boolean = SinkFs.exists(spark, s"$state/v$v/_DONE")
     // The state tables are this job's own output, so their schemas are
     // known: no footer-inference jobs on read.
-    def alias(v: Int): DataFrame = spark.read.schema(Canon.AliasSchema).parquet(s"$state/v$v/alias")
-    val versions = SinkFs.listPrefixed(spark, state, "v")
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
-    val cur = versions.filter(done).sorted.lastOption
-    val (st, how) = cur match {
-      case None => (Canon.canonicalState(ms), "full (initial)")
-      case Some(v) =>
-        val carried = Canon.CanonState(
-          spark.read.schema(Canon.StatsSchema).parquet(s"$state/v$v/stats"), alias(v))
-        val r = Canon.canonicalMapIncremental(carried, ms)
-        (r.state, if (r.fellBack) "full (cap-crossing fallback)" else "incremental")
-    }
-    val next = cur.map(_ + 1).getOrElse(0)
-    // The two state writes are independent jobs over the same checkpointed
-    // stats: submitted together (Par.run), their scheduling latencies
-    // overlap. The alias write counts its own rows for the summary line.
+    def alias(v: String): DataFrame = spark.read.schema(Canon.AliasSchema).parquet(s"$v/alias")
     val written = org.apache.spark.sql.Observation()
-    graft.util.Par.run(Seq(
-      () => st.stats.write.mode("overwrite").parquet(s"$state/v$next/stats"),
-      () => st.canonMap.observe(written, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$state/v$next/alias")))(_.apply())
-    SinkFs.touch(spark, s"$state/v$next/_DONE")
-    // Keep the just-published version and its predecessor (manual rollback
-    // window); everything older — and any unflagged crash residue — goes.
-    versions.filter(v => cur.exists(_ > v) || !done(v))
-      .foreach(v => SinkFs.deleteLoud(spark, s"$state/v$v"))
-    opts.get("canon-out").foreach(p => alias(next).write.mode("overwrite").parquet(p))
-    println(s"[submit] refresh: $how -> v$next (${written.get("n")} surfaces)")
+    val (how, next) = publishVersion(spark, state) { (cur, next) =>
+      val (st, how) = cur match {
+        case None => (Canon.canonicalState(ms), "full (initial)")
+        case Some(v) =>
+          val carried = Canon.CanonState(
+            spark.read.schema(Canon.StatsSchema).parquet(s"$v/stats"), alias(v))
+          val r = Canon.canonicalMapIncremental(carried, ms)
+          (r.state, if (r.fellBack) "full (cap-crossing fallback)" else "incremental")
+      }
+      // The two state writes are independent jobs over the same checkpointed
+      // stats: submitted together (Par.run), their scheduling latencies
+      // overlap. The alias write counts its own rows for the summary line.
+      graft.util.Par.run(Seq(
+        () => st.stats.write.mode("overwrite").parquet(s"$next/stats"),
+        () => st.canonMap.observe(written, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$next/alias")))(_.apply())
+      how
+    }
+    opts.get("canon-out").foreach(p => alias(s"$state/$next").write.mode("overwrite").parquet(p))
+    println(s"[submit] refresh: $how -> $next (${written.get("n")} surfaces)")
   }
 
   /** `dedup`: fold a delta documents batch into the carried exact-dedup
     * fingerprint index ([[graft.dedup.Dedup.foldIndex]]) — the corpus-scale
-    * shape where history is never rescanned. Same `_DONE`-flagged version
-    * discipline as `refresh`; each version also materializes `new_docs`,
-    * the batch's append set (first occurrence of every hash the index has
-    * not seen). The input is a delta BY CONTRACT, like `refresh`'s. The
-    * summary line's counts are observed on the two writes. */
+    * shape where history is never rescanned. Same version discipline as
+    * `refresh` ([[publishVersion]]); each version also materializes
+    * `new_docs`, the batch's append set (first occurrence of every hash the
+    * index has not seen). The input is a delta BY CONTRACT, like
+    * `refresh`'s. The summary line's counts are observed on the two writes. */
   private def runDedup(spark: SparkSession, opts: Map[String, String]): Unit = {
-    import graft.util.SinkFs
     import org.apache.spark.sql.functions.{col, count, lit}
-    val index = req(opts, "index")
     // Collapse the delta once (lazy cut): the fold write and the new-docs
     // write both consume it.
     val dstats = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy(
       graft.dedup.Dedup.exact(
         spark.read.parquet(req(opts, "input")).select(col("doc_id"), col("text"))))
-    def done(v: Int): Boolean = SinkFs.exists(spark, s"$index/v$v/_DONE")
-    val versions = SinkFs.listPrefixed(spark, index, "v")
+    val (nIndex, nNew) = (org.apache.spark.sql.Observation(), org.apache.spark.sql.Observation())
+    val (how, next) = publishVersion(spark, req(opts, "index")) { (cur, next) =>
+      val (folded, newDocs, how) = cur match {
+        case None =>
+          (dstats, dstats.select(col("h"), col("keeper").as("doc_id")), "initial")
+        case Some(v) =>
+          val idx = spark.read.parquet(s"$v/index")
+          (graft.dedup.Dedup.foldIndex(idx, dstats),
+            graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
+      }
+      folded.observe(nIndex, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$next/index")
+      newDocs.observe(nNew, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$next/new_docs")
+      how
+    }
+    println(s"[submit] dedup: $how -> $next (${nIndex.get("n")} fingerprints, " +
+      s"${nNew.get("n")} new docs)")
+  }
+
+  /** The `_DONE`-flagged version policy of `refresh` and `dedup`: the
+    * newest flagged `v<N>` under `root` is current; `write` gets its dir
+    * (None before the first version) and fills the next version's dir,
+    * which the `_DONE` flag then publishes. The new version and its
+    * predecessor stay (a manual rollback window); older versions and
+    * unflagged crash residue are reclaimed. Returns `write`'s result and
+    * the new version's name. */
+  private def publishVersion[A](spark: SparkSession, root: String)(
+      write: (Option[String], String) => A): (A, String) = {
+    def done(v: Int): Boolean = SinkFs.exists(spark, s"$root/v$v/_DONE")
+    val versions = SinkFs.listPrefixed(spark, root, "v")
       .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
     val cur = versions.filter(done).sorted.lastOption
-    val (folded, newDocs, how) = cur match {
-      case None =>
-        (dstats, dstats.select(col("h"), col("keeper").as("doc_id")), "initial")
-      case Some(v) =>
-        val idx = spark.read.parquet(s"$index/v$v/index")
-        (graft.dedup.Dedup.foldIndex(idx, dstats),
-          graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
-    }
     val next = cur.map(_ + 1).getOrElse(0)
-    val nIndex = org.apache.spark.sql.Observation()
-    val nNew = org.apache.spark.sql.Observation()
-    folded.observe(nIndex, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$index/v$next/index")
-    newDocs.observe(nNew, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$index/v$next/new_docs")
-    SinkFs.touch(spark, s"$index/v$next/_DONE")
-    // Keep the published version and its predecessor; reclaim older and
-    // unflagged crash residue — same policy as refresh.
+    val a = write(cur.map(v => s"$root/v$v"), s"$root/v$next")
+    SinkFs.touch(spark, s"$root/v$next/_DONE")
     versions.filter(v => cur.exists(_ > v) || !done(v))
-      .foreach(v => SinkFs.deleteLoud(spark, s"$index/v$v"))
-    println(s"[submit] dedup: $how -> v$next (${nIndex.get("n")} fingerprints, " +
-      s"${nNew.get("n")} new docs)")
+      .foreach(v => SinkFs.deleteLoud(spark, s"$root/v$v"))
+    (a, s"v$next")
   }
 
   private def runCompact(spark: SparkSession, opts: Map[String, String]): Unit = {

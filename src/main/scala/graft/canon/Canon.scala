@@ -188,7 +188,7 @@ object Canon {
     * prescription), which converges in O(log n) rounds where plain min-label
     * propagation needs O(diameter) — the difference between 14 and 10,000
     * rounds on a long alias chain. `vertices` must include isolated nodes.
-    * Returns (surface, component) with component = lexicographic min member.
+    * Returns (surface, component), component = least member in UTF-8 order.
     *
     * `maxIter` default 60: the chain spec (CanonSpec) measures convergence
     * at ~1.5·log₂(n) alternating rounds (20 at n=10⁴), so 10⁹ vertices —
@@ -357,12 +357,11 @@ object Canon {
     * dst < src plus (m(src), src) for every src; self-loops dropped,
     * distinct per round; convergence = signature match confirmed by an
     * exact set compare (subtract), exactly like the DataFrame loop. Why a
-    * second layer: each DataFrame round pays a fresh Catalyst
-    * analyze/optimize/plan cycle (measured ~0.4 s/round on a 4k-pair set —
-    * scheduling, not data), which is the textbook reason iterative graph
-    * engines run on RDDs; here a round is two shuffles and one
-    * vertex-bounded collect with zero per-round planning. CanonSpec pins
-    * RDD-branch ≡ DataFrame-branch ≡ local union-find on forced graphs.
+    * second layer: each DataFrame round pays a fresh Catalyst plan cycle;
+    * here a round is two shuffles and one vertex-bounded collect. On
+    * `graft.Harness target q_cc_dist` (sf0.1, local[4], 3 alternating JVM
+    * pairs × 3 reps) this loop took 2.26-2.79 s, `ccRoundsDf` 5.77-6.31 s.
+    * CanonSpec pins RDD ≡ DataFrame ≡ local union-find on forced graphs.
     */
   private def ccRoundsRdd(spark: org.apache.spark.sql.SparkSession,
       pairs0: DataFrame, nPart: Int, maxIter: Int): (DataFrame, Int) = {
@@ -390,14 +389,14 @@ object Canon {
       def star(p: RDD[(String, String)], large: Boolean)
           : (RDD[(String, String)], org.apache.spark.broadcast.Broadcast[Map[String, String]]) = {
         val sym = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-        val m = sym.reduceByKey(part, (x: String, y: String) => if (x <= y) x else y)
-          .map { case (s, mn) => (s, if (mn < s) mn else s) }
+        val m = sym.reduceByKey(part, (x: String, y: String) => if (utf8Compare(x, y) <= 0) x else y)
+          .map { case (s, mn) => (s, if (utf8Compare(mn, s) < 0) mn else s) }
         val mMap = sc.broadcast(m.collectAsMap().toMap)
         val base = sym.mapPartitions { it =>
           val mm = mMap.value
           it.flatMap { case (src, dst) =>
-            if (large) { if (dst > src) Iterator((mm(src), dst)) else Iterator.empty }
-            else { if (dst < src) Iterator((mm(src), dst)) else Iterator.empty }
+            val c = utf8Compare(dst, src)
+            if (if (large) c > 0 else c < 0) Iterator((mm(src), dst)) else Iterator.empty
           }
         }
         // small-star self pairs (m(src), src) come from the m RDD — its
@@ -420,6 +419,18 @@ object Canon {
     requireConverged(converged, maxIter, rounds)
     import spark.implicits._
     (pairs.toDF("a", "b"), rounds)
+  }
+
+  /** Spark's string order (UTF-8 bytes, i.e. code points) without
+    * allocating, for every hand-written CC comparison. At the first
+    * differing UTF-16 unit, surrogates (0xD800-0xDFFF, characters past the
+    * BMP) rank above U+E000-U+FFFF; `String.compareTo` ranks them below. */
+  private def utf8Compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    def lift(c: Char): Int = if (c >= 0xE000) c - 0x800 else if (c >= 0xD800) c + 0x2000 else c
+    if (i == n) a.length - b.length else lift(a.charAt(i)) - lift(b.charAt(i))
   }
 
   /** Fail loudly on non-convergence: the pair set is not yet a star forest,
@@ -582,10 +593,10 @@ object Canon {
   }
 
   /** Driver-local union-find for dimension-sized similarity graphs; labels
-    * each vertex with the lexicographic minimum of its component — exactly
-    * the fixpoint of the distributed min-label loop. Returns
-    * (surface, component) in `vs` order; edges with an endpoint outside
-    * `vs` are ignored.
+    * each vertex with the minimum of its component in Spark's string order
+    * ([[utf8Compare]]) — exactly the fixpoint of the distributed round
+    * loops. Returns (surface, component) in `vs` order; edges with an
+    * endpoint outside `vs` are ignored.
     */
   private def ccLocal(vs: Array[String], es: Iterable[(String, String)]): Array[(String, String)] = {
     val parent = scala.collection.mutable.HashMap(vs.map(v => v -> v): _*)
@@ -606,7 +617,7 @@ object Canon {
     vs.foreach { v =>
       val r = find(v)
       val cur = minOf.get(r)
-      if (cur.isEmpty || v < cur.get) minOf(r) = v
+      if (cur.isEmpty || utf8Compare(v, cur.get) < 0) minOf(r) = v
     }
     vs.map(v => (v, minOf(find(v))))
   }

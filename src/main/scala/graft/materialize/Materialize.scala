@@ -1,10 +1,11 @@
 package graft.materialize
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import graft.model.{MetricRow, Triple}
+import graft.util.SinkFs
 
 /** Materialization + checkpoint/resume + per-partition lineage & metrics —
   * the engine's sink layer (north_rule: "materialized as partitioned tables
@@ -14,7 +15,8 @@ import graft.model.{MetricRow, Triple}
   * scan (src/cache_data.py:13-21) — at table granularity: work is split into
   * deterministic url-hash buckets; each completed bucket appends a lineage
   * row; a resumed run anti-joins pending buckets against the lineage table
-  * and recomputes only the missing ones.
+  * and recomputes only the missing ones — on any sink URI, since the
+  * lineage is read through [[SinkFs]] ([[readLineage]]).
   *
   * Sandbox note (SURVEY §7.4): no Iceberg jar ships in this container, so the
   * "table" is bucket-partitioned Parquet + a lineage sidecar table giving the
@@ -23,110 +25,10 @@ import graft.model.{MetricRow, Triple}
   */
 object Materialize {
 
-  /** batch_id widened Int → Long in round 4 (streaming checkpoint batch ids
-    * are Long): a lineage sidecar written by a pre-widening binary holds
-    * INT32 batch_id files; [[migrateLineage]] performs the one-time rewrite,
-    * and [[readLineage]] runs it automatically (once per JVM per sidecar)
-    * before any read or append can hit the mixed-schema dir. */
+  /** `n_rows` rows of `table` committed into `bucket` by batch `batch_id`.
+    * batch_id widened Int → Long in round 4 (streaming batch ids are Long);
+    * [[readLineage]] widens an older sink's INT32 files on read. */
   final case class LineageRow(table: String, bucket: Int, batch_id: Long, n_rows: Long)
-
-  // Sidecar dirs already footer-checked (and migrated if needed) this JVM —
-  // the check is driver-side parquet-footer reads, cheap for a
-  // dimension-sized sidecar but pointless to repeat on every resume lookup.
-  private val lineageVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def lineagePartFiles(outDir: String): Seq[java.nio.file.Path] = {
-    val dir = java.nio.file.Paths.get(lineagePath(outDir))
-    if (!java.nio.file.Files.exists(dir)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(dir)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally ls.close()
-    }
-  }
-
-  /** Flat-sidecar part files whose footer carries the pre-widening INT32
-    * batch_id. Driver-side footer reads only — zero Spark jobs. (The
-    * streaming sink's per-batch sidecar dirs postdate the widening and are
-    * batch-scoped OVERWRITE, so only this flat append-mode layout can mix
-    * schemas.) */
-  private def int32LineageFiles(outDir: String): Seq[java.nio.file.Path] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = new org.apache.hadoop.conf.Configuration()
-    lineagePartFiles(outDir).filter { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        schema.containsField("batch_id") && {
-          val t = schema.getType(schema.getFieldIndex("batch_id"))
-          t.isPrimitive &&
-            t.asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.INT32
-        }
-      } finally r.close()
-    }
-  }
-
-  /** One-time migration of a pre-round-4 lineage sidecar: rewrites every
-    * part file with batch_id widened INT32 → INT64 so the dir reads under
-    * one schema again. No-op (returns false) when the sidecar is absent or
-    * already uniformly Long. Each part file is read under its OWN footer
-    * schema (a dir-level read of the mixed dir is exactly what fails), so
-    * old and new files coexist safely during the rewrite. The swap keeps a
-    * full backup until the new dir is live: live → `_lineage.pre_migration`,
-    * rewritten → live, backup deleted — a crash mid-swap leaves either the
-    * original or the migrated dir complete, never a torn one.
-    */
-  def migrateLineage(spark: SparkSession, outDir: String): Boolean = {
-    recoverLineageSwap(outDir)
-    if (int32LineageFiles(outDir).isEmpty) return false
-    val widened = lineagePartFiles(outDir)
-      .map(p => spark.read.parquet(p.toString)
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .select(col("table"), col("bucket"), col("batch_id"), col("n_rows")))
-      .reduce(_.unionByName(_))
-    val live = java.nio.file.Paths.get(lineagePath(outDir))
-    val staged = java.nio.file.Paths.get(lineagePath(outDir) + ".migrated")
-    val backup = java.nio.file.Paths.get(lineagePath(outDir) + ".pre_migration")
-    graft.util.TempDirs.delete(staged)
-    widened.write.mode("overwrite").parquet(staged.toString)
-    graft.util.TempDirs.delete(backup)
-    java.nio.file.Files.move(live, backup)
-    java.nio.file.Files.move(staged, live)
-    graft.util.TempDirs.delete(backup)
-    true
-  }
-
-  /** Heal an interrupted [[migrateLineage]] swap so no crash window leaves
-    * the sink without a live `_lineage` dir (an absent sidecar reads as
-    * "nothing done" and a resume would re-append every completed bucket).
-    * The swap's invariant makes recovery unambiguous: `live` is only moved
-    * aside AFTER `.migrated` is fully written, so live-absent ⇒ the staged
-    * dir is complete — promote it; the `.pre_migration` backup is the
-    * fallback if the staged dir is somehow gone too. With `live` present,
-    * leftovers are just debris from a completed (or abandoned-before-move)
-    * attempt and are deleted so the next attempt starts clean.
-    */
-  private def recoverLineageSwap(outDir: String): Unit = {
-    val live = java.nio.file.Paths.get(lineagePath(outDir))
-    val staged = java.nio.file.Paths.get(lineagePath(outDir) + ".migrated")
-    val backup = java.nio.file.Paths.get(lineagePath(outDir) + ".pre_migration")
-    if (!java.nio.file.Files.exists(live)) {
-      if (java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.move(staged, live)
-        graft.util.TempDirs.delete(backup)
-      } else if (java.nio.file.Files.exists(backup)) {
-        java.nio.file.Files.move(backup, live)
-      }
-    } else {
-      graft.util.TempDirs.delete(staged)
-      graft.util.TempDirs.delete(backup)
-    }
-  }
 
   /** Deterministic bucket of a page url. In the sandbox corpus the doc id is
     * embedded in the url path, so bucketing is reproducible in the DuckDB
@@ -150,25 +52,15 @@ object Materialize {
 
   def lineagePath(outDir: String) = s"$outDir/_lineage"
 
+  /** The lineage table under [[LineageRow]]'s declared schema, empty on a
+    * fresh sink. [[SinkFs]] probes for it, so every sink URI the writer
+    * takes resumes; the declared schema skips footer inference and reads
+    * INT32 batch_id files as BIGINT, so a dir mixing both widths reads. */
   def readLineage(spark: SparkSession, outDir: String): DataFrame = {
-    import spark.implicits._
-    val p = java.nio.file.Paths.get(lineagePath(outDir))
-    // A missing dir may be an interrupted migration swap, not a fresh sink —
-    // heal BEFORE the exists check, or a resume sees "nothing done" and
-    // re-appends every completed bucket.
-    if (!java.nio.file.Files.exists(p)) recoverLineageSwap(outDir)
-    if (java.nio.file.Files.exists(p)) {
-      // Resuming a pre-widening sink: widen any INT32 batch_id files ONCE
-      // before this dir is read (or appended to) under the Long schema.
-      // Marked verified only AFTER the migration succeeds: a transient
-      // failure must be retried on the next read, not skipped for the
-      // rest of the JVM with the dir still mixed-schema.
-      if (!lineageVerified.contains(lineagePath(outDir))) {
-        migrateLineage(spark, outDir)
-        lineageVerified.add(lineagePath(outDir))
-      }
-      spark.read.parquet(lineagePath(outDir))
-    } else spark.emptyDataset[LineageRow].toDF()
+    val enc = Encoders.product[LineageRow]
+    if (SinkFs.exists(spark, lineagePath(outDir)))
+      spark.read.schema(enc.schema).parquet(lineagePath(outDir))
+    else spark.emptyDataset(enc).toDF()
   }
 
   /** Buckets already completed for `table` (the checkpoint state). */

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * existence probes) works on whatever store the sink URI names — local
   * file://, HDFS, s3a://… — not just java.nio's local filesystem. Every
   * Spark read/write already goes through this layer; these helpers cover
-  * the driver-side metadata operations around them.
+  * the driver-side metadata operations around them, e.g. the batch
+  * sink's lineage probe ([[graft.materialize.Materialize.readLineage]]).
   *
   * Deletion here is LOUD (IllegalStateException on failure): these calls
   * maintain sink invariants (a truncated sidecar, an emptied partition), so

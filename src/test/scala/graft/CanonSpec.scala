@@ -154,16 +154,20 @@ class CanonSpec extends SparkSpec {
     // the hub path of the DF branch, and the left-join default label.
     // bcastBound picks the round implementation: default → RDD rounds,
     // 0 → DataFrame hub-split rounds; localThreshold default → union-find.
+    // The pair past the BMP pins one string order: U+1F600 is a surrogate
+    // pair in UTF-16, so String.compareTo puts "a😀" below "aＡ" (U+FF21),
+    // while in UTF-8 bytes, Spark's order, "aＡ" is the least.
     val chain = (1 until 40).map(i => (f"c${i - 1}%03d", f"c$i%03d"))
     val star = (0 until 200).map(i => ("hub", f"s$i%04d"))
     val verts = ((0 until 40).map(i => f"c$i%03d") ++
-      star.map(_._2) :+ "hub" :+ "lonely").toDF("surface")
-    val edges = (chain ++ star).toDF("a", "b")
+      star.map(_._2) :+ "hub" :+ "lonely" :+ "a😀" :+ "aＡ").toDF("surface")
+    val edges = (chain ++ star :+ ("a😀" -> "aＡ")).toDF("a", "b")
     val Seq((rdd, _), (df, _)) = bothLoops(verts, edges, hubDegree = 50)
     val local = Canon.connectedComponents(verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rdd == local.toSeq.sorted, "RDD round branch diverged from local union-find")
     assert(df == local.toSeq.sorted, "DataFrame round branch diverged from local union-find")
+    assert(local("a😀") == "aＡ" && local("aＡ") == "aＡ", "component past the BMP")
   }
 
   test("CC fails loudly (not silently wrong) when maxIter is exhausted") {

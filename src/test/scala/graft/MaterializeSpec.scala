@@ -74,13 +74,21 @@ class MaterializeSpec extends SparkSpec {
     assert(lines.toSeq == Seq("Ana", "Maria", "Zoe"))
   }
 
-  test("migrateLineage widens a pre-round-4 INT32 batch_id sidecar, then resume works") {
+  /** Types of batch_id, one per lineage part file, each read under its own
+    * footer. */
+  private def batchIdTypes(dir: String): Set[org.apache.spark.sql.types.DataType] =
+    new java.io.File(Materialize.lineagePath(dir)).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => spark.read.parquet(f.getPath).schema("batch_id").dataType).toSet
+
+  test("readLineage reads INT32 batch_id files as BIGINT beside new INT64 appends") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mat-migrate").toString
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val dir = java.nio.file.Files.createTempDirectory("graft-mat-int32").toString
     val ts = sampleTriples
-    // Simulate a PRE-WIDENING binary's sidecar: write the first run's lineage
-    // rows with batch_id narrowed back to INT32 (the old schema), replacing
-    // the Long files the current writer produced.
+    // A sidecar written before batch_id widened to Long: the first run's
+    // lineage rows with batch_id narrowed back to INT32, replacing the Long
+    // files the current writer produced.
     val firstRows = Materialize.writeTriples(
       ts.filter((t: Triple) => (t.url.split("/doc/")(1).toLong % 8) < 4),
       dir, nBuckets = 8, batchId = 0)
@@ -88,57 +96,35 @@ class MaterializeSpec extends SparkSpec {
       .toDF("table", "bucket", "batch_id", "n_rows")
     graft.util.TempDirs.delete(java.nio.file.Paths.get(s"$dir/_lineage"))
     old.write.parquet(s"$dir/_lineage")
-    // Explicit utility: migrates once, then reports no-op.
-    assert(Materialize.migrateLineage(spark, dir))
-    assert(!Materialize.migrateLineage(spark, dir))
     val lineage = Materialize.readLineage(spark, dir)
-    assert(lineage.schema("batch_id").dataType ==
-      org.apache.spark.sql.types.LongType)
+    assert(lineage.schema("batch_id").dataType == LongType)
     assert(lineage.count() == 4)
-    // A new-binary resume over the migrated sidecar appends Long rows into
-    // the same dir and the mixed read stays green.
+    // The resume appends Long rows into the same dir, which now mixes both
+    // widths, and the mixed dir still reads as one BIGINT table.
     val secondRows = Materialize.writeTriples(ts, dir, nBuckets = 8, batchId = 1)
     assert(secondRows.map(_.bucket).toSet == Set(4, 5, 6, 7))
+    assert(batchIdTypes(dir) == Set(IntegerType, LongType))
     assert(Materialize.readLineage(spark, dir).agg(sum("n_rows")).head.getLong(0) == 40)
+    assert(Materialize.readLineage(spark, dir).select("batch_id").as[Long].collect().toSet ==
+      Set(0L, 1L))
+    assert(Materialize.writeTriples(ts, dir, nBuckets = 8, batchId = 2).isEmpty)
   }
 
-  test("readLineage heals an interrupted migration swap (live dir missing, staged complete)") {
+  test("an INT32-only lineage sidecar reads as BIGINT and resumes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mat-heal").toString
-    // Simulate the crash window between the two moves: the original sits at
-    // .pre_migration, the fully-written widened dir at .migrated, and NO
-    // live _lineage dir. A resume that read this as "fresh sink" would
-    // re-append every completed bucket.
-    Seq(("triples", 3, 7, 11L)).toDF("table", "bucket", "batch_id", "n_rows")
-      .write.parquet(s"$dir/_lineage.pre_migration")
-    Seq(("triples", 3, 7L, 11L)).toDF("table", "bucket", "batch_id", "n_rows")
-      .write.parquet(s"$dir/_lineage.migrated")
-    val lineage = Materialize.readLineage(spark, dir)
-    assert(lineage.select("batch_id").as[Long].collect().toSeq == Seq(7L))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_lineage")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/_lineage.pre_migration")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/_lineage.migrated")))
-    // Earlier window (staged never finished → deleted, only the backup
-    // remains): the ORIGINAL dir is restored and then migrated normally.
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-mat-heal2").toString
-    Seq(("triples", 4, 9, 13L)).toDF("table", "bucket", "batch_id", "n_rows")
-      .write.parquet(s"$dir2/_lineage.pre_migration")
-    val l2 = Materialize.readLineage(spark, dir2)
-    assert(l2.schema("batch_id").dataType == org.apache.spark.sql.types.LongType)
-    assert(l2.select("batch_id").as[Long].collect().toSeq == Seq(9L))
-  }
-
-  test("readLineage auto-migrates an INT32 sidecar it has not verified this JVM") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mat-automigrate").toString
-    Seq(("triples", 3, 7, 11L)).toDF("table", "bucket", "batch_id", "n_rows")
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val dir = java.nio.file.Files.createTempDirectory("graft-mat-int32only").toString
+    // Buckets 0-3 committed by an older binary: 5 rows each, INT32 batch_id.
+    (0 until 4).map(b => ("triples", b, 7, 5L)).toDF("table", "bucket", "batch_id", "n_rows")
       .write.parquet(s"$dir/_lineage")
     val lineage = Materialize.readLineage(spark, dir)
-    assert(lineage.schema("batch_id").dataType ==
-      org.apache.spark.sql.types.LongType)
-    assert(lineage.select("batch_id").as[Long].collect().toSeq == Seq(7L))
+    assert(lineage.schema("batch_id").dataType == LongType)
+    assert(lineage.select("batch_id").as[Long].collect().toSeq == Seq.fill(4)(7L))
+    assert(Materialize.doneBuckets(spark, dir, "triples") == Set(0, 1, 2, 3))
+    val resumed = Materialize.writeTriples(sampleTriples, dir, nBuckets = 8, batchId = 8)
+    assert(resumed.map(_.bucket).toSet == Set(4, 5, 6, 7))
+    assert(batchIdTypes(dir) == Set(IntegerType, LongType))
+    assert(Materialize.readLineage(spark, dir).agg(sum("n_rows")).head.getLong(0) == 40)
   }
 
   test("bucketCol derives the url-embedded id deterministically") {

@@ -51,6 +51,23 @@ class SubmitSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/_lineage").count() == lineageRowsBefore)
   }
 
+  test("submit batch resumes as a no-op on a file:// URI output") {
+    val out = new java.io.File(scratch("graft-submit-uri")).toURI.toString.stripSuffix("/")
+    assert(out.startsWith("file:/"))
+    def batch(): String = {
+      val printed = new java.io.ByteArrayOutputStream()
+      Console.withOut(printed)(Submit.run(spark, Array("batch", "--input", pagesDir, "--output", out)))
+      printed.toString
+    }
+    batch()
+    val nTable = spark.read.parquet(s"$out/triples").count()
+    val nLineage = spark.read.parquet(s"$out/_lineage").count()
+    val second = batch()
+    assert(second.contains("0 new buckets (16 resumed)"), second)
+    assert(spark.read.parquet(s"$out/triples").count() == nTable)
+    assert(spark.read.parquet(s"$out/_lineage").count() == nLineage)
+  }
+
   /** The page table plus a second file re-crawling every 4th url: a later
     * warc_ts and the same <p> layout (so the same (page, seg_no)
     * numbering), but every planted PERSON swapped for another one. */

@@ -9,7 +9,7 @@
 set -euo pipefail
 SF="${1:-/root/testdata/sf0.1}"
 cd "$(dirname "$0")/.."
-SPARK_GRAFT_SF_DIR="$SF" SPARK_DRIVER_MEM=20g SPARK_GRAFT_PRETOUCH=1 \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-20g}" SPARK_GRAFT_PRETOUCH=1 \
   SPARK_GRAFT_REPS="${SPARK_GRAFT_REPS:-5}" \
   sbt -batch "runMain graft.Harness scaling" 2>/dev/null \
   | grep -o '{"metric".*}'
