@@ -359,8 +359,9 @@ object Canon {
     * exact set compare (subtract), exactly like the DataFrame loop. Why a
     * second layer: each DataFrame round pays a fresh Catalyst plan cycle;
     * here a round is two shuffles and one vertex-bounded collect. On
-    * `graft.Harness target q_cc_dist` (sf0.1, local[4], 3 alternating JVM
-    * pairs × 3 reps) this loop took 2.26-2.79 s, `ccRoundsDf` 5.77-6.31 s.
+    * `graft.Harness target q_cc_dist` (sf0.1, local[4] on a 4-core host,
+    * 3 alternating JVM pairs × 3 reps) this loop took 3.08-3.96 s and
+    * `ccRoundsDf` 6.62-8.89 s, so both loops stay.
     * CanonSpec pins RDD ≡ DataFrame ≡ local union-find on forced graphs.
     */
   private def ccRoundsRdd(spark: org.apache.spark.sql.SparkSession,
