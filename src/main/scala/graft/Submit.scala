@@ -37,9 +37,10 @@ import graft.util.SinkFs
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
-  *    table (size-gated into a closure map or a per-batch join via
-  *    [[Canon.snapshotBounded]]); without it provenance lands RAW
-  *    (surface-form subjects) for a later `compact` to canonicalize.
+  *    table (read under [[Canon.AliasSchema]], size-gated into a closure
+  *    map or a per-batch join via [[Canon.snapshotBounded]]); without it
+  *    provenance lands RAW (surface-form subjects) for a later `compact`
+  *    to canonicalize.
   *    Default trigger drains what is available and exits (re-invoke on a
   *    schedule = incremental ingest); `--trigger-ms` keeps it running.
   *  - `refresh`: the periodic batch canon job in its incremental form —
@@ -74,6 +75,9 @@ import graft.util.SinkFs
   * sandbox/oracle scheme. Input is the BASELINE input_hint page table
   * `(url, warc_ts, html, text, lang)`; the gazetteer defaults to the
   * built-in dimension and `--gazetteer` loads a `(surface, label)` parquet.
+  * Page, gazetteer and alias tables are read under declared schemas, so
+  * no job infers one; a missing url, html, surface or label column fails
+  * the call by name.
   */
 object Submit {
 
@@ -150,6 +154,11 @@ object Submit {
   private def req(opts: Map[String, String], key: String): String =
     opts.getOrElse(key, throw new IllegalArgumentException(s"missing --$key\n$usage"))
 
+  /** The scan dimension: the built-in gazetteer, or `--gazetteer`'s
+    * `(surface, label)` parquet read under that declared schema (no
+    * footer-inference job) and collected. A missing column reads as nulls,
+    * so a null surface or label fails here, naming the column.
+    */
   private def gazetteerOf(spark: SparkSession, opts: Map[String, String]): Array[(String, String)] =
     opts.get("gazetteer") match {
       case None => Gazetteer.all.toArray
@@ -159,10 +168,13 @@ object Submit {
         // broadcast into the scan automaton either way (same policy as
         // Mentions.scanWithRecall), and the automaton build is evidenced to
         // 100k surfaces (BENCH/gazetteer_scale.json).
-        spark.read.parquet(path)
-          .select(org.apache.spark.sql.functions.col("surface"),
-            org.apache.spark.sql.functions.col("label"))
+        val gaz = spark.read.schema("surface STRING, label STRING").parquet(path)
           .as[(String, String)].collect()
+        gaz.find(g => g._1 == null || g._2 == null).foreach { case (s, _) =>
+          throw new IllegalArgumentException(
+            s"gazetteer $path: null ${if (s == null) "surface" else "label"}")
+        }
+        gaz
     }
 
   private def bucketSchemeOf(opts: Map[String, String]): Int => org.apache.spark.sql.Column =
@@ -228,7 +240,7 @@ object Submit {
   private def runStream(spark: SparkSession, opts: Map[String, String]): Unit = {
     val gaz = gazetteerOf(spark, opts)
     val snapshot = opts.get("canon") match {
-      case Some(p) => Canon.snapshotBounded(spark.read.parquet(p))
+      case Some(p) => Canon.snapshotBounded(spark.read.schema(Canon.AliasSchema).parquet(p))
       // No alias table yet (first ingest before any batch canon run):
       // provenance subjects stay raw surface forms; `compact` under the
       // first real map canonicalizes them retroactively.
@@ -351,7 +363,7 @@ object Submit {
 
   private def runCompact(spark: SparkSession, opts: Map[String, String]): Unit = {
     val canon: DataFrame = opts.get("canon") match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => spark.read.schema(Canon.AliasSchema).parquet(p)
       case None => Canon.canonicalMap(Pipeline.mentions(
         Pages.fromParquet(spark, req(opts, "input")), gazetteerOf(spark, opts)))
     }

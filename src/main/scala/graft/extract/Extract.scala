@@ -169,12 +169,21 @@ object Extract {
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (url, htmlBytes) =>
-          val html = new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8)
-          paragraphs(html).zipWithIndex.map { case (t, i) =>
+          paragraphs(pageHtml(url, htmlBytes)).zipWithIndex.map { case (t, i) =>
             Segment(url, page = 1, seg_no = i + 1, seg_type = "Text", text = t)
           }
         }
       }
+  }
+
+  /** A page row's html as text, after the page table's null guard: a
+    * parquet read under a declared schema turns a missing `url` or `html`
+    * column into nulls, so a null in either fails the task, naming it.
+    */
+  private[graft] def pageHtml(url: String, html: Array[Byte]): String = {
+    if (url == null) throw new IllegalArgumentException("page table: null url")
+    if (html == null) throw new IllegalArgumentException(s"page table: null html at url $url")
+    new String(html, java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** Reconstructed page text = segment texts joined with one space — the

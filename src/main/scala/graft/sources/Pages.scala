@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import graft.model.{Gazetteer, Page}
 import graft.functions.Text
 
@@ -102,14 +101,15 @@ object Pages {
 
   /** A production page table (the BASELINE input_hint shape: url, warc_ts,
     * html, text, lang) read straight from parquet — the [[graft.Submit]]
-    * input path. Column-pruned select before the typed view so extra
-    * columns in a wider table are dropped at the scan, not at runtime.
+    * input path. The read declares [[Page]]'s schema (the one the stream
+    * source declares), so no job infers it from the footers and extra
+    * columns in a wider table are never read. A missing column reads as
+    * nulls; the pages → segments stages reject a null url or html
+    * ([[graft.extract.Extract.pageHtml]]).
     */
   def fromParquet(spark: SparkSession, path: String): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(path)
-      .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
-      .as[Page]
+    spark.read.schema(Encoders.product[Page].schema).parquet(path).as[Page]
   }
 
   /** Distributed synthesis: documents parquet → Dataset[Page]. Narrow map,

@@ -137,7 +137,7 @@ object Streaming {
         val tokenIndex = Mentions.cachedTokenIndex(gaz)
         val canon = bcCanon.value
         it.flatMap { case (url, htmlBytes) =>
-          val html = new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8)
+          val html = Extract.pageHtml(url, htmlBytes)
           val pageMentions = List.newBuilder[Mention]
           val cooc = Extract.paragraphs(html).zipWithIndex.flatMap { case (t, i) =>
             val ms = Mentions.scanSegment(

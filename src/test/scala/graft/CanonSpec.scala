@@ -401,4 +401,31 @@ class CanonSpec extends SparkSpec {
       case other => fail(s"expected an AliasMap, got $other")
     }
   }
+
+  test("driver verifier: the code-point banded distance equals UTF8String.levenshteinDistance(other, k)") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // ASCII, Latin-1 accents, a combining acute, U+1F600 (a surrogate pair
+    // in UTF-16), U+FF21 and a lone surrogate (`?` once encoded)
+    val alphabet = Array("a", "b", "z", " ", "?", "é", "ñ", "\u0301",
+      new String(Character.toChars(0x1F600)), "\uFF21", "\uD800")
+    val rnd = new scala.util.Random(1L)
+    def draw(): String = Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val pairs = Seq(("", ""), ("", "a"), ("\uD800\u0301", ""), ("", "\uFF21\uFF21")) ++
+      Seq.fill(100000)((draw(), draw()))
+    val within = Array.fill(7)(0)
+    val mismatches = pairs.iterator.flatMap { case (x, y) =>
+      val (u, v) = (UTF8String.fromString(x), UTF8String.fromString(y))
+      val (cu, cv) = (Canon.codePoints(u), Canon.codePoints(v))
+      assert(cu.length == u.numChars && cv.length == v.numChars, s"numChars of '$x' / '$y'")
+      (0 to 6).iterator.flatMap { k =>
+        val want = u.levenshteinDistance(v, k)
+        if (want >= 0) within(k) += 1
+        val got = Canon.levenshteinWithin(cu, cv, k)
+        if (got == want) None else Some(s"('$x', '$y', k = $k): $got, want $want")
+      }
+    }.take(5).toList
+    assert(mismatches.isEmpty, mismatches.mkString("; "))
+    // every band both holds and rejects pairs
+    assert(within.forall(n => n > 0 && n < pairs.size), within.mkString(", "))
+  }
 }

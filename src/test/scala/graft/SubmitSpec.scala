@@ -302,6 +302,68 @@ class SubmitSpec extends SparkSpec {
     assert(left == Set("v1", "v2"))
   }
 
+  test("batch and refresh fail by column name on a page table without html, a null url, a gazetteer without label") {
+    val dir = scratch("graft-submit-inputs")
+    val pages = spark.read.parquet(pagesDir)
+    pages.drop("html").write.parquet(s"$dir/no_html")
+    pages.limit(3).unionByName(pages.limit(1).withColumn("url", lit(null).cast("string")))
+      .write.parquet(s"$dir/null_url")
+    graft.model.Gazetteer.all.map(_._1).toDF("surface").write.parquet(s"$dir/no_label")
+    // the failure's message chain: a task's exception arrives wrapped
+    def failure(args: String*): String = {
+      val e = intercept[Exception](Submit.run(spark, args.toArray))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    }
+    Seq("batch" -> "--output", "refresh" -> "--state").foreach { case (cmd, out) =>
+      Seq(
+        Seq("--input", s"$dir/no_html") -> "null html",
+        Seq("--input", s"$dir/null_url") -> "null url",
+        Seq("--input", pagesDir, "--gazetteer", s"$dir/no_label") -> "null label"
+      ).zipWithIndex.foreach { case ((in, want), i) =>
+        val msg = failure(Seq(cmd) ++ in ++ Seq(out, s"$dir/$cmd-$i"): _*)
+        assert(msg.contains(want), s"$cmd ${in.mkString(" ")}: $msg")
+      }
+    }
+  }
+
+  test("refresh full, refresh incremental and batch run 5, 6 and 7 Spark jobs") {
+    val dir = scratch("graft-submit-jobs")
+    val pages = spark.read.parquet(pagesDir)
+    val half = pmod(xxhash64(col("url")), lit(2))
+    pages.filter(half === 0).write.parquet(s"$dir/delta0")
+    pages.filter(half === 1).write.parquet(s"$dir/delta1")
+    // the built-in gazetteer less one planted PERSON: a canon map another
+    // spec cached over these pages (Pipeline.canonCached) would otherwise
+    // equal the batch's local map and turn its snapshot collect into jobs
+    graft.model.Gazetteer.all.filterNot(_._1 == graft.model.Gazetteer.persons.head)
+      .toDF("surface", "label").write.parquet(s"$dir/gaz")
+    val sc = spark.sparkContext
+    val st = sc.statusTracker
+    // the jobs one call ran under its own job group (each as its stages'
+    // call sites), and its summary line
+    def jobs(group: String, args: String*): (Seq[String], String) = {
+      val out = new java.io.ByteArrayOutputStream()
+      sc.setJobGroup(group, group)
+      try Console.withOut(out)(Submit.run(spark, args.toArray)) finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+      (st.getJobIdsForGroup(group).sorted.toSeq.map(j => st.getJobInfo(j).toSeq
+        .flatMap(_.stageIds.flatMap(st.getStageInfo).map(_.name)).mkString("+")), out.toString)
+    }
+    // threads of Par.run (the state writes, canonLocal's collects) inherit
+    // the caller's group, so their jobs count
+    sc.setJobGroup("graft-par", "graft-par")
+    try graft.util.Par.run(Seq(1, 2))(_ => sc.parallelize(1 to 2).count()) finally sc.clearJobGroup()
+    org.apache.spark.GraftTestBus.drain(sc)
+    assert(st.getJobIdsForGroup("graft-par").length == 2)
+    val state = Seq("--state", s"$dir/state", "--gazetteer", s"$dir/gaz")
+    val (full, fullOut) = jobs("graft-refresh-full", Seq("refresh", "--input", s"$dir/delta0") ++ state: _*)
+    val (incr, incrOut) = jobs("graft-refresh-incr", Seq("refresh", "--input", s"$dir/delta1") ++ state: _*)
+    val (batch, _) = jobs("graft-batch", "batch", "--input", pagesDir, "--output", s"$dir/sink",
+      "--gazetteer", s"$dir/gaz")
+    assert(fullOut.contains("full (initial)") && incrOut.contains("incremental"), fullOut + incrOut)
+    assert((full.size, incr.size, batch.size) == (5, 6, 7), Seq(full, incr, batch).mkString("\n"))
+  }
+
   test("usage errors are loud: unknown subcommand, missing required option, unknown option") {
     intercept[IllegalArgumentException] {
       Submit.run(spark, Array("frobnicate"))
