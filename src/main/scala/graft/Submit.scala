@@ -37,10 +37,9 @@ import graft.util.SinkFs
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
-  *    table (read under [[Canon.AliasSchema]], size-gated into a closure
-  *    map or a per-batch join via [[Canon.snapshotBounded]]); without it
-  *    provenance lands RAW (surface-form subjects) for a later `compact`
-  *    to canonicalize.
+  *    table (size-gated into a closure map or a per-batch join via
+  *    [[Canon.snapshotBounded]]); without it provenance lands RAW
+  *    (surface-form subjects) for a later `compact` to canonicalize.
   *    Default trigger drains what is available and exits (re-invoke on a
   *    schedule = incremental ingest); `--trigger-ms` keeps it running.
   *  - `refresh`: the periodic batch canon job in its incremental form —
@@ -75,9 +74,9 @@ import graft.util.SinkFs
   * sandbox/oracle scheme. Input is the BASELINE input_hint page table
   * `(url, warc_ts, html, text, lang)`; the gazetteer defaults to the
   * built-in dimension and `--gazetteer` loads a `(surface, label)` parquet.
-  * Page, gazetteer and alias tables are read under declared schemas, so
-  * no job infers one; a missing url, html, surface or label column fails
-  * the call by name.
+  * Page and gazetteer tables are read under declared schemas, so no job
+  * infers one; a missing url, html, surface or label column, or an empty
+  * gazetteer, fails the call by name.
   */
 object Submit {
 
@@ -156,8 +155,9 @@ object Submit {
 
   /** The scan dimension: the built-in gazetteer, or `--gazetteer`'s
     * `(surface, label)` parquet read under that declared schema (no
-    * footer-inference job) and collected. A missing column reads as nulls,
-    * so a null surface or label fails here, naming the column.
+    * footer-inference job) and collected. A missing column reads as nulls
+    * and an empty directory as no rows, so a null surface or label, or an
+    * empty gazetteer, fails here by name.
     */
   private def gazetteerOf(spark: SparkSession, opts: Map[String, String]): Array[(String, String)] =
     opts.get("gazetteer") match {
@@ -174,6 +174,7 @@ object Submit {
           throw new IllegalArgumentException(
             s"gazetteer $path: null ${if (s == null) "surface" else "label"}")
         }
+        if (gaz.isEmpty) throw new IllegalArgumentException(s"gazetteer $path: no rows")
         gaz
     }
 
@@ -240,7 +241,7 @@ object Submit {
   private def runStream(spark: SparkSession, opts: Map[String, String]): Unit = {
     val gaz = gazetteerOf(spark, opts)
     val snapshot = opts.get("canon") match {
-      case Some(p) => Canon.snapshotBounded(spark.read.schema(Canon.AliasSchema).parquet(p))
+      case Some(p) => Canon.snapshotBounded(spark.read.parquet(p))
       // No alias table yet (first ingest before any batch canon run):
       // provenance subjects stay raw surface forms; `compact` under the
       // first real map canonicalizes them retroactively.
@@ -363,7 +364,7 @@ object Submit {
 
   private def runCompact(spark: SparkSession, opts: Map[String, String]): Unit = {
     val canon: DataFrame = opts.get("canon") match {
-      case Some(p) => spark.read.schema(Canon.AliasSchema).parquet(p)
+      case Some(p) => spark.read.parquet(p)
       case None => Canon.canonicalMap(Pipeline.mentions(
         Pages.fromParquet(spark, req(opts, "input")), gazetteerOf(spark, opts)))
     }

@@ -794,8 +794,7 @@ object Canon {
   private val Space = UTF8String.fromString(" ")
 
   /** The driver branch of both canon jobs. One [[upToBound]] collect of a
-    * flagged stats table's `(surface, n_mentions, sim_key, words, is_new)`
-    * (and of the carried star pairs, concurrently);
+    * flagged stats table's `(surface, n_mentions, sim_key, words, is_new)`;
     * when at most `localThreshold` rows came back (none with a null
     * surface), the distributed chain's math runs on the driver:
     *  - the token table (`df`, `df_old`), the stop-token cap and the
@@ -803,8 +802,7 @@ object Canon {
     *  - [[LocalMaxCandidates]] against the candidate count summed from the
     *    block sizes — past it, None before any pair is enumerated;
     *  - old connectivity (`carried`, the incremental refresh's old map) as
-    *    its star pairs, a second bounded collect submitted with the first
-    *    through `Par.run` (its rows go unused past a gate);
+    *    its star pairs, one more bounded collect, skipped by the fallback;
     *  - [[blockedEdges]]' probe rule `a ≠ b && (!new_b || a < b)` with
     *    [[similarLocal]] verification, [[ccLocal]], and [[canonicalPick]]'s
     *    four keys.
@@ -815,14 +813,8 @@ object Canon {
     */
   private def canonLocal(flagged: DataFrame, carried: Option[DataFrame], maxBlock: Long,
       localThreshold: Long): Option[(DataFrame, Boolean)] = {
-    // The stats rows and the carried map's star pairs are independent
-    // bounded collects: submitted together, their scheduling overlaps.
-    val collects = flagged.select(col("surface"), col("n_mentions"), col("sim_key"),
-      col("words"), col("is_new")) +: carried.toSeq.map(m =>
-        m.filter(col("surface") =!= col("canonical")).select(col("canonical"), col("surface")))
-    val got = new Array[Array[Row]](collects.length)
-    graft.util.Par.run(collects.indices)(i => got(i) = upToBound(collects(i), localThreshold))
-    val rows = got(0)
+    val rows = upToBound(flagged.select(col("surface"), col("n_mentions"), col("sim_key"),
+      col("words"), col("is_new")), localThreshold)
     if (rows.length > localThreshold || rows.exists(_.isNullAt(0))) return None
     val ss = rows.map(new Surf(_)).sortWith((x, y) => x.utf8.compareTo(y.utf8) < 0)
     val blocks = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
@@ -836,7 +828,9 @@ object Canon {
     val cold = blocks.filter(_._2.length <= maxBlock)
     if (cold.valuesIterator.map(b => b.count(probe(_)).toLong * b.length).sum > LocalMaxCandidates)
       return None
-    val star = if (crossed) Array.empty[Row] else got.lift(1).getOrElse(Array.empty[Row])
+    val star = if (crossed) Array.empty[Row] else carried.fold(Array.empty[Row])(m =>
+      upToBound(m.filter(col("surface") =!= col("canonical"))
+        .select(col("canonical"), col("surface")), localThreshold))
     if (star.length > localThreshold) return None
     val edges = mutable.ArrayBuffer.empty[(String, String)]
     val seen = Array.fill(ss.length)(-1) // the last probe that tested each surface
@@ -930,10 +924,9 @@ object Canon {
     * Driver branch: the flagged merge is collected once ([[canonLocal]]);
     * within `localThreshold` surfaces and [[LocalMaxCandidates]]
     * candidates, the token table, the cap-crossing gate, the new-surface
-    * probes and the pick run on the driver, with old connectivity from a
-    * collect of the carried map's star pairs that runs concurrently with
-    * the merge's. `fellBack` means the same in both branches, and
-    * `state.canonMap` is then a local DataFrame.
+    * probes and the pick run on the driver, with old connectivity from one
+    * collect of the carried map's star pairs. `fellBack` means the same in
+    * both branches, and `state.canonMap` is then a local DataFrame.
     */
   def canonicalMapIncremental(old: CanonState, deltaMentions: Dataset[Mention],
       maxBlock: Long = Config.MaxTokenBlock, localThreshold: Long = 100000L): CanonRefresh = {

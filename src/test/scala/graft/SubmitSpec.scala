@@ -302,13 +302,16 @@ class SubmitSpec extends SparkSpec {
     assert(left == Set("v1", "v2"))
   }
 
-  test("batch and refresh fail by column name on a page table without html, a null url, a gazetteer without label") {
+  test("batch and refresh fail by name on a page table without html, a null url, a gazetteer without label or with no rows") {
     val dir = scratch("graft-submit-inputs")
     val pages = spark.read.parquet(pagesDir)
     pages.drop("html").write.parquet(s"$dir/no_html")
     pages.limit(3).unionByName(pages.limit(1).withColumn("url", lit(null).cast("string")))
       .write.parquet(s"$dir/null_url")
     graft.model.Gazetteer.all.map(_._1).toDF("surface").write.parquet(s"$dir/no_label")
+    // a directory holding only a success marker, which no schema can be inferred from
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/gaz_empty"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/gaz_empty/_SUCCESS"))
     // the failure's message chain: a task's exception arrives wrapped
     def failure(args: String*): String = {
       val e = intercept[Exception](Submit.run(spark, args.toArray))
@@ -318,7 +321,8 @@ class SubmitSpec extends SparkSpec {
       Seq(
         Seq("--input", s"$dir/no_html") -> "null html",
         Seq("--input", s"$dir/null_url") -> "null url",
-        Seq("--input", pagesDir, "--gazetteer", s"$dir/no_label") -> "null label"
+        Seq("--input", pagesDir, "--gazetteer", s"$dir/no_label") -> "null label",
+        Seq("--input", pagesDir, "--gazetteer", s"$dir/gaz_empty") -> "gaz_empty: no rows"
       ).zipWithIndex.foreach { case ((in, want), i) =>
         val msg = failure(Seq(cmd) ++ in ++ Seq(out, s"$dir/$cmd-$i"): _*)
         assert(msg.contains(want), s"$cmd ${in.mkString(" ")}: $msg")
@@ -332,11 +336,12 @@ class SubmitSpec extends SparkSpec {
     val half = pmod(xxhash64(col("url")), lit(2))
     pages.filter(half === 0).write.parquet(s"$dir/delta0")
     pages.filter(half === 1).write.parquet(s"$dir/delta1")
-    // the built-in gazetteer less one planted PERSON: a canon map another
-    // spec cached over these pages (Pipeline.canonCached) would otherwise
-    // equal the batch's local map and turn its snapshot collect into jobs
-    graft.model.Gazetteer.all.filterNot(_._1 == graft.model.Gazetteer.persons.head)
-      .toDF("surface", "label").write.parquet(s"$dir/gaz")
+    graft.model.Gazetteer.all.toDF("surface", "label").write.parquet(s"$dir/gaz")
+    // no cached plan from another spec may stand in for one of these calls'
+    // (a cached canon map equal to the batch's local one turns its snapshot
+    // collect into jobs), so the count does not depend on which specs ran
+    Pipeline.evict(spark, sfTiny)
+    spark.catalog.clearCache()
     val sc = spark.sparkContext
     val st = sc.statusTracker
     // the jobs one call ran under its own job group (each as its stages'
@@ -349,8 +354,8 @@ class SubmitSpec extends SparkSpec {
       (st.getJobIdsForGroup(group).sorted.toSeq.map(j => st.getJobInfo(j).toSeq
         .flatMap(_.stageIds.flatMap(st.getStageInfo).map(_.name)).mkString("+")), out.toString)
     }
-    // threads of Par.run (the state writes, canonLocal's collects) inherit
-    // the caller's group, so their jobs count
+    // threads of Par.run (the refresh's state writes) inherit the caller's
+    // group, so their jobs count
     sc.setJobGroup("graft-par", "graft-par")
     try graft.util.Par.run(Seq(1, 2))(_ => sc.parallelize(1 to 2).count()) finally sc.clearJobGroup()
     org.apache.spark.GraftTestBus.drain(sc)
