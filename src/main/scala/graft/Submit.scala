@@ -26,14 +26,14 @@ import graft.util.SinkFs
   * }}}
   *
   * Subcommands wire the lambda architecture end to end:
-  *  - `batch`: pages table → mentions (cached once, tagged with their sink
-  *    bucket) → canonical map → co-occurrence + provenance triples
-  *    ([[Pipeline.triples]], the flagship's own composition) over mentions
-  *    clustered by the sink's own bucket exchange and sorted by (url, page,
-  *    seg_no), committed bucket-partitioned with lineage resume
+  *  - `batch`: pages table → mentions tagged with their sink bucket →
+  *    ONE exchange on the bucket, whose output feeds both the canonical
+  *    map and the co-occurrence + provenance triples ([[Pipeline.triples]],
+  *    the flagship's own composition) over mentions sorted per partition by
+  *    (url, page, seg_no), committed bucket-partitioned with lineage resume
   *    ([[Materialize.commitBuckets]]) — one path for both alias shapes;
-  *    `--canon-out` also writes the alias table the stream job consumes as
-  *    its snapshot.
+  *    `--canon-out` also writes, concurrently with the triples, the alias
+  *    table the stream job consumes as its snapshot.
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
@@ -195,47 +195,45 @@ object Submit {
   }
 
   /** The batch flagship over an explicit page table (the `batch`
-    * subcommand as a function). ONE cached mention scan, tagged with each
-    * row's sink bucket, feeds the canonical map and the triples. The
-    * pending buckets' mentions go through one exchange on the bucket
-    * column — `p` = the session's shuffle parallelism capped at
-    * `nBuckets`, an explicit count AQE does not coalesce — and a
-    * per-partition sort on (url, page, seg_no). A bucket is a function of
-    * the url, so every url (a re-crawled one included) becomes one sorted
-    * run in one partition: exactly the contiguity [[Pipeline.triples]]
-    * requires, so its per-segment and per-url dedups are global. The
-    * triples are written straight into their bucket partitions; with an
-    * alias map at most `maxRows` surfaces ([[Canon.snapshotBounded]]) that
-    * write has no second exchange, past it the provenance rewrite adds one
-    * join. Returns the lineage rows this call committed.
+    * subcommand as a function). The mentions, tagged with each row's sink
+    * bucket, go through ONE exchange that sends bucket b to partition
+    * b mod `p` (`p` = the session's shuffle parallelism capped at
+    * `nBuckets`), whose map stage the canonical map and the triples share
+    * ([[org.apache.spark.sql.GraftSqlShims.sharedShuffle]]). The pending
+    * buckets are sorted per partition on (url, page, seg_no). A bucket is a
+    * function of the url, so every url (a re-crawled one included) is one
+    * sorted run in one partition: the contiguity [[Pipeline.triples]]
+    * requires. With an alias map at most `maxRows` surfaces
+    * ([[Canon.snapshotBounded]]) the triple write adds no exchange, past
+    * it the provenance rewrite adds one join. `canonOut` is written
+    * alongside the triples. Returns the lineage rows this call committed.
     */
   def batch(pages: Dataset[Page], gazetteer: Array[(String, String)], output: String,
       nBuckets: Int, batchId: Long, bucketOf: Int => Column, canonOut: Option[String],
       maxRows: Long = Canon.SnapshotMaxRows): Seq[Materialize.LineageRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val tagged = Pipeline.mentions(pages, gazetteer).toDF()
-      .withColumn("bucket", bucketOf(nBuckets)).cache()
-    try {
-      val canon = Canon.canonicalMap(tagged.as[Mention])
-      val snap = Canon.snapshotBounded(canon, maxRows)
-      canonOut.foreach { dir =>
-        val alias = snap match {
-          case Canon.AliasMap(m, _) => m.toSeq.toDF("surface", "canonical")
-          case _ => canon
-        }
-        alias.write.mode("overwrite").parquet(dir)
-      }
-      val done = Materialize.doneBuckets(spark, output, "triples")
-      val p = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, nBuckets)
-      val clustered = tagged.filter(!col("bucket").isin(done.toSeq: _*))
-        .repartition(p, col("bucket"))
-        .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
-        .as[Mention]
-      Materialize.commitBuckets(
-        Pipeline.triples(clustered, snap).withColumn("bucket", bucketOf(nBuckets)),
-        output, "triples", nBuckets, batchId)
-    } finally tagged.unpersist()
+    val p = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, nBuckets)
+    val tagged = org.apache.spark.sql.GraftSqlShims.sharedShuffle(
+      Pipeline.mentions(pages, gazetteer).toDF()
+        .withColumn("bucket", bucketOf(nBuckets)).repartitionById(p, col("bucket")))
+    val canon = Canon.canonicalMap(tagged.as[Mention])
+    val snap = Canon.snapshotBounded(canon, maxRows)
+    val done = Materialize.doneBuckets(spark, output, "triples")
+    val clustered = tagged.filter(!col("bucket").isin(done.toSeq: _*))
+      .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
+      .as[Mention]
+    var committed = Seq.empty[Materialize.LineageRow]
+    val aliasWrite = canonOut.map { dir => () =>
+      (snap match {
+        case Canon.AliasMap(m, _) => m.toSeq.toDF("surface", "canonical").coalesce(1)
+        case _ => canon
+      }).write.mode("overwrite").parquet(dir)
+    }
+    graft.util.Par.run(aliasWrite.toSeq :+ (() => committed = Materialize.commitBuckets(
+      Pipeline.triples(clustered, snap).withColumn("bucket", bucketOf(nBuckets)),
+      output, "triples", nBuckets, batchId)))(_.apply())
+    committed
   }
 
   private def runStream(spark: SparkSession, opts: Map[String, String]): Unit = {
@@ -327,7 +325,8 @@ object Submit {
         case None =>
           (dstats, dstats.select(col("h"), col("keeper").as("doc_id")), "initial")
         case Some(v) =>
-          val idx = spark.read.parquet(s"$v/index")
+          // this job's own output: dstats' schema, no footer-inference job
+          val idx = spark.read.schema(dstats.schema).parquet(s"$v/index")
           (graft.dedup.Dedup.foldIndex(idx, dstats),
             graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
       }

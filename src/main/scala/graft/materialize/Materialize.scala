@@ -39,9 +39,10 @@ object Materialize {
     pmod(regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long"), lit(nBuckets)).cast("int")
 
   /** The production bucket scheme [[bucketCol]]'s doc promises: url-hash
-    * buckets that hold for ARBITRARY urls (the doc-id regexp yields a null
-    * bucket on any url without the sandbox's `/doc/N` suffix, which would
-    * leak rows into a default partition the lineage sums never see).
+    * buckets that hold for ARBITRARY urls (on a url without the sandbox's
+    * `/doc/N` suffix the doc-id cast fails under ANSI, and without ANSI
+    * yields a null bucket, leaking rows into a default partition the
+    * lineage sums never see).
     * xxhash64 is a Catalyst codegen'd expression and pmod handles its
     * negative half — same plan shape as [[bucketCol]], hash-only change.
     * [[graft.Submit]] defaults to this scheme; the oracle/driver surfaces

@@ -48,6 +48,17 @@ object GraftSqlShims {
     spark.internalCreateDataFrame(rdd, ds.schema)
   }
 
+  /** `df` re-wrapped as a `LogicalRDD` over its executed RDD, so all
+    * consumers share one lineage: a shuffle in `df` runs its map stage once
+    * (under AQE, here, as in [[localCheckpointFreshLazy]]) and later jobs
+    * skip it, where a plain frame re-plans and reruns it per action. The
+    * stage after the last exchange reruns per consumer; nothing is stored
+    * but shuffle files. Default statistics, like the checkpoint's. */
+  def sharedShuffle(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    ds.sparkSession.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
+  }
+
   /** True iff the session's cache manager holds no cached plans — lets a
     * test assert that an unpersist/evict hook really emptied the cache
     * (CacheManager is `private[sql]`, hence the shim).

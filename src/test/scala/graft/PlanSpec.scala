@@ -65,19 +65,18 @@ class PlanSpec extends SparkSpec {
       "co-occurrence pairs shuffle at most once (segment keys)")
   }
 
-  test("Submit batch's triple write: one shuffle exchange above the mention cache, no aggregate, no broadcast") {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+  test("Submit batch's write reads the shared bucket exchange, no shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     val dir = graft.util.TempDirs.scratch("graft-plan-batch").toString
     Pages.synthesize(spark, sfTiny).write.parquet(s"$dir/pages")
-    // AdaptiveSparkPlanHelper walks into AQE plans and stages and stops at
-    // a cache scan, so what it collects from a write's executed plan lies
-    // between the mention cache and the writer.
+    // AdaptiveSparkPlanHelper walks into AQE plans and stages; the shared
+    // bucket exchange sits inside the RDD the write's scan reads, so what
+    // it collects lies between that exchange and the writer.
     val h = new AdaptiveSparkPlanHelper {}
     // The executed plan of every write into the sink's triples table.
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -101,14 +100,61 @@ class PlanSpec extends SparkSpec {
     assert(writes.size == 1, s"expected one triple write, saw ${writes.size}")
     val plan = writes.peek()
     val plain = plan.treeString
-    assert(h.collect(plan) { case c: InMemoryTableScanExec => c }.nonEmpty,
-      s"the triples must read the mention cache:\n$plain")
-    assert(h.collect(plan) { case e: ShuffleExchangeLike => e }.size == 1,
-      s"exactly one shuffle exchange (the bucket clustering):\n$plain")
+    // the scanned RDD's nearest shuffle is the bucket exchange, one
+    // partition per write task: min(shuffle partitions, 16 buckets)
+    def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] => Seq(d)
+        case d => shuffles(d.rdd)
+      }
+    val scans = h.collect(plan) { case r: RDDScanExec => r }
+    assert(scans.size == 1, s"the triples must read one shared RDD:\n$plain")
+    assert(shuffles(scans.head.rdd).map(_.partitioner.numPartitions) == Seq(4),
+      s"the scanned RDD must sit on the bucket exchange:\n$plain")
+    assert(h.collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+      s"no shuffle exchange above the bucket exchange:\n$plain")
     assert(h.collect(plan) { case a: BaseAggregateExec => a }.isEmpty,
       s"no collect_set or distinct aggregate:\n$plain")
     assert(h.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
       s"no broadcast exchange:\n$plain")
+  }
+
+  test("sharedShuffle: a second action skips the exchange's map stage") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    // the stage ids of the jobs `body` ran, and the ids of the stages it submitted
+    def stages(body: => Unit): (Seq[Set[Int]], Set[Int]) = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
+      val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.stageIds.toSet)
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = ran.add(e.stageInfo.stageId)
+      }
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.GraftTestBus.drain(sc) } finally sc.removeSparkListener(l)
+      import scala.jdk.CollectionConverters._
+      (jobs.asScala.toSeq, ran.asScala.toSet)
+    }
+    def df = spark.range(0, 1000, 1, 4).toDF("id").repartition(3, col("id") % 7)
+    // the stages run by building `f` plus one action, then by a second action
+    def twice(f: => DataFrame): (Set[Int], Seq[Set[Int]], Set[Int]) = {
+      var frame: DataFrame = null
+      val (_, first) = stages { frame = f; assert(frame.collect().length == 1000) }
+      val (jobs, second) = stages(assert(frame.filter(col("id") >= 0).collect().length == 1000))
+      (first, jobs, second)
+    }
+    // through the shim: the map stage and a result stage run first; the
+    // second action's one job lists the map stage again (under a new stage
+    // id, as the scheduler forgets finished jobs' stages) but skips it
+    val (first, jobs, second) = twice(org.apache.spark.sql.GraftSqlShims.sharedShuffle(df))
+    assert(first.size == 2, s"ran $first")
+    assert(jobs.size == 1 && second.size == 1 && (jobs.head -- second).size == 1,
+      s"$jobs ran $second")
+    // a plain frame plans a new exchange per action, and runs it again
+    val (_, plainJobs, plainSecond) = twice(df)
+    assert(plainSecond.size == 2, s"$plainJobs ran $plainSecond")
   }
 
   test("the ANN brute baseline is the only broadcast nested loop") {

@@ -106,28 +106,69 @@ class SubmitSpec extends SparkSpec {
 
   test("re-crawled urls: batch equals cooccurrence ∪ mentionedIn and canonicalMap, on both bucket schemes and both alias shapes") {
     import graft.canon.Canon
+    import graft.materialize.Materialize
     val recrawled = spark.read.parquet(recrawlDir).groupBy("url").count()
       .filter(col("count") > 1).count()
     assert(recrawled > 0, "the table must repeat some urls")
     val (triples, alias) = joinReference(recrawlDir)
     assert(triples != batchChecksum, "the re-crawl must change the triples")
-    def check(out: String, what: String): Unit = {
-      assert(sinkChecksum(s"$out/sink") == triples, what)
-      assert(Canon.aliasFingerprint(spark.read.parquet(s"$out/alias")) == alias, what)
+    def check(out: String, what: String, want: ((Long, Long), Long) = (triples, alias)): Unit = {
+      assert(sinkChecksum(s"$out/sink") == want._1, what)
+      assert(Canon.aliasFingerprint(spark.read.parquet(s"$out/alias")) == want._2, what)
     }
-    Seq("hash", "docid").foreach { scheme =>
-      val out = scratch(s"graft-submit-recrawl-$scheme")
-      Submit.run(spark, Array("batch", "--input", recrawlDir, "--output", s"$out/sink",
-        "--canon-out", s"$out/alias", "--bucket-by", scheme))
-      check(out, s"--bucket-by $scheme")
+    // one batch of `pages` into `out`/sink at `p` shuffle partitions; the
+    // alias map through the CLI, or kept a DataFrame (maxRows = 0: the
+    // join-form branch) through Submit.batch
+    def batch(pages: String, out: String, scheme: String, frame: Boolean, p: Int): Unit = {
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      try {
+        if (frame) Submit.batch(graft.sources.Pages.fromParquet(spark, pages),
+          graft.model.Gazetteer.all.toArray, s"$out/sink", nBuckets = 16, batchId = 0L,
+          bucketOf = if (scheme == "hash") Materialize.hashBucketCol else Materialize.bucketCol,
+          canonOut = Some(s"$out/alias"), maxRows = 0)
+        else Submit.run(spark, Array("batch", "--input", pages, "--output", s"$out/sink",
+          "--canon-out", s"$out/alias", "--bucket-by", scheme))
+      } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
-    // maxRows = 0 keeps the alias map a DataFrame: the join-form branch
-    val out = scratch("graft-submit-recrawl-frame")
-    Submit.batch(graft.sources.Pages.fromParquet(spark, recrawlDir),
-      graft.model.Gazetteer.all.toArray, s"$out/sink", nBuckets = 16, batchId = 0L,
-      bucketOf = graft.materialize.Materialize.hashBucketCol,
-      canonOut = Some(s"$out/alias"), maxRows = 0)
-    check(out, "AliasFrame branch")
+    def lineage(out: String): Set[(Int, Long)] =
+      Materialize.readLineage(spark, s"$out/sink").as[Materialize.LineageRow].collect()
+        .map(r => r.bucket -> r.n_rows).toSet
+    for (scheme <- Seq("hash", "docid"); frame <- Seq(false, true)) {
+      val what = s"--bucket-by $scheme, ${if (frame) "AliasFrame" else "AliasMap"}"
+      val out4 = scratch(s"graft-submit-recrawl-$scheme-$frame-4")
+      batch(recrawlDir, out4, scheme, frame, p = 4)
+      check(out4, what)
+      // 3 partitions do not divide the 16 buckets
+      val out = scratch(s"graft-submit-recrawl-$scheme-$frame-3")
+      batch(recrawlDir, out, scheme, frame, p = 3)
+      check(out, s"$what, p = 3")
+      // resume: the even buckets stay committed, the odd ones' lineage and
+      // files go; the rerun filters the pending buckets after the shared
+      // exchange and must commit exactly the odd ones again
+      val full = lineage(out)
+      graft.util.TempDirs.delete(java.nio.file.Paths.get(s"$out/sink/_lineage"))
+      full.filter(_._1 % 2 == 0).toSeq
+        .map { case (b, n) => Materialize.LineageRow("triples", b, 0L, n) }
+        .toDS().coalesce(1).write.parquet(s"$out/sink/_lineage")
+      full.filter(_._1 % 2 == 1).foreach { case (b, _) =>
+        graft.util.TempDirs.delete(java.nio.file.Paths.get(s"$out/sink/triples/bucket=$b"))
+      }
+      batch(recrawlDir, out, scheme, frame, p = 4)
+      check(out, s"$what, resumed")
+      assert(lineage(out) == full, what)
+    }
+
+    // A url without the /doc/N suffix has no docid bucket: under ANSI
+    // casts the docid batch fails in the shared exchange's map stage,
+    // naming the bucket column, and writes nothing.
+    val noDoc = scratch("graft-submit-nodocid")
+    spark.read.parquet(pagesDir).limit(20).withColumn("url", concat(col("url"), lit("/v2")))
+      .write.parquet(s"$noDoc/pages")
+    val e = intercept[Exception](batch(s"$noDoc/pages", noDoc, "docid", frame = false, p = 4))
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" / ")
+    assert(msg.contains("CAST_INVALID_INPUT") && msg.contains("Materialize$.bucketCol"), msg)
+    assert(!new java.io.File(s"$noDoc/sink/triples").exists())
   }
 
   test("lambda wiring: batch --canon-out feeds stream --canon; stream sink equals the batch flagship") {
@@ -330,12 +371,15 @@ class SubmitSpec extends SparkSpec {
     }
   }
 
-  test("refresh full, refresh incremental and batch run 5, 6 and 7 Spark jobs") {
+  test("Spark jobs per call: refresh 5 and 6, batch 6, incremental dedup 6") {
     val dir = scratch("graft-submit-jobs")
     val pages = spark.read.parquet(pagesDir)
     val half = pmod(xxhash64(col("url")), lit(2))
     pages.filter(half === 0).write.parquet(s"$dir/delta0")
     pages.filter(half === 1).write.parquet(s"$dir/delta1")
+    val docs = graft.dedup.Dedup.corpus(spark, sfTiny)
+    docs.filter(pmod(hash(col("doc_id")), lit(2)) === 0).write.parquet(s"$dir/docs0")
+    docs.filter(pmod(hash(col("doc_id")), lit(2)) === 1).write.parquet(s"$dir/docs1")
     graft.model.Gazetteer.all.toDF("surface", "label").write.parquet(s"$dir/gaz")
     // no cached plan from another spec may stand in for one of these calls'
     // (a cached canon map equal to the batch's local one turns its snapshot
@@ -365,8 +409,13 @@ class SubmitSpec extends SparkSpec {
     val (incr, incrOut) = jobs("graft-refresh-incr", Seq("refresh", "--input", s"$dir/delta1") ++ state: _*)
     val (batch, _) = jobs("graft-batch", "batch", "--input", pagesDir, "--output", s"$dir/sink",
       "--gazetteer", s"$dir/gaz")
-    assert(fullOut.contains("full (initial)") && incrOut.contains("incremental"), fullOut + incrOut)
-    assert((full.size, incr.size, batch.size) == (5, 6, 7), Seq(full, incr, batch).mkString("\n"))
+    Submit.run(spark, Array("dedup", "--input", s"$dir/docs0", "--index", s"$dir/index"))
+    val (dedup, dedupOut) = jobs("graft-dedup-incr", "dedup", "--input", s"$dir/docs1",
+      "--index", s"$dir/index")
+    assert(fullOut.contains("full (initial)") && incrOut.contains("incremental") &&
+      dedupOut.contains("incremental"), fullOut + incrOut + dedupOut)
+    assert((full.size, incr.size, batch.size, dedup.size) == (5, 6, 6, 6),
+      Seq(full, incr, batch, dedup).mkString("\n"))
   }
 
   test("usage errors are loud: unknown subcommand, missing required option, unknown option") {
